@@ -142,7 +142,8 @@ object ChangelogCodec {
         lit("decodeDebezium: undecodable envelope (tombstone, blank or " +
           "invalid JSON — filter non-envelope records before decoding, " +
           "as the debezium wire_format pipeline does): "),
-        col(valueCol))).cast("string"))
+        // concat is NULL if any input is: keep the message for a NULL value
+        coalesce(col(valueCol), lit("<null>")))).cast("string"))
     val src = e("source")
     val filePos = coalesce(src("pos"), lit(0L))
     val posCol = when(src("lsn").isNotNull, src("lsn"))

@@ -1,6 +1,6 @@
 package graft.lake
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.json4s.{DefaultFormats, Formats}
@@ -19,14 +19,24 @@ import scala.jdk.CollectionConverters._
   * file appended by a MERGE commit; the read path resolves LWW across
   * base+delta per key, compaction folds deltas back into base).
   *
-  * `del`: file holds only tombstone rows (deletes are written to separate
-  * files so live-only reads prune them at the manifest and per-bucket
-  * upsert/delete lineage comes from footer row counts, no extra scan).
+  * Tombstones: a MOR delta file holds a commit's upserts AND tombstones of
+  * one bucket, with the flag in its own `_graft_del` column (true on
+  * tombstones, null on live rows); `delRows` is its tombstone count, taken
+  * from that column's footer null count. Base files (compaction, COW) keep
+  * tombstones in separate files instead: `del` marks a tombstone-only file,
+  * so live reads of pure-base buckets prune them at the manifest with no
+  * scan. `delRows` = -1 on such split files: their flag comes from `del`.
   * `maxPos`: footer max of the applied-pos column (per-bucket applied-offset
   * watermark, also scan-pruning input).
   */
 final case class FileEntry(bucket: Int, path: String, rows: Long, schemaId: Int,
-    kind: String = "base", del: Boolean = false, maxPos: Long = -1L)
+    kind: String = "base", del: Boolean = false, maxPos: Long = -1L,
+    delRows: Long = -1L) {
+  /** The file stores the tombstone flag as a column (mixed delta file). */
+  def storesDel: Boolean = delRows >= 0
+  /** Tombstone rows in the file, from the manifest alone. */
+  def tombstones: Long = if (storesDel) delRows else if (del) rows else 0L
+}
 
 /** Per-commit, per-bucket lineage record — the analog of the reference's
   * Prometheus insert/update/delete counters and position gauge
@@ -120,7 +130,8 @@ final case class MetaSegment(
   * Layout:
   * {{{
   *   <root>/meta/v00000001.json     — one MetaSegment per version
-  *   <root>/data/<commit-uuid>/bkt=<b>/del=<bool>/part-*.parquet
+  *   <root>/data/<commit-uuid>/bkt=<b>/part-*.parquet            — MOR delta
+  *   <root>/data/<commit-uuid>/bkt=<b>/del=<bool>/part-*.parquet  — base
   * }}}
   *
   * Commit protocol: stage the segment JSON to a uniquely-named temp file,
@@ -182,7 +193,8 @@ final class LakeTable private (val root: Path, val spark: SparkSession) {
     * this: its replay is always a contiguous suffix from the saved position,
     * service/handler.go:173-191; a parallel engine tolerating arbitrary span
     * replay must keep the high-water mark per deleted key.) Compaction may GC
-    * tombstones below the globally-applied offset watermark.
+    * tombstones below the globally-applied offset watermark. Stored as a
+    * column only in MOR delta files (see [[FileEntry]]).
     */
   val DelCol = "_graft_del"
 
@@ -254,19 +266,23 @@ final class LakeTable private (val root: Path, val spark: SparkSession) {
       return spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         StructType(cur.fields ++ hiddenTail))
     }
-    // group by (written schema, tombstone flag): each scan uses exactly the
-    // schema its footers carry; the del flag re-attaches from the manifest
+    // group by (written schema, where the tombstone flag lives): each scan
+    // uses exactly the schema its footers carry; a split file's flag
+    // re-attaches from the manifest, a mixed file's comes from its column
     val t0 = System.nanoTime()
-    val out = files.groupBy(f => (f.schemaId, f.del)).map { case ((sid, del), group) =>
-      val stored = StructType(m.schemaFor(sid).fields ++
-        Seq(StructField(PosCol, LongType), StructField(TsCol, TimestampType)))
-      val storedNames = stored.fieldNames.toSet
-      val paths = group.map(f => root.resolve(f.path).toString)
-      spark.read.schema(stored).parquet(paths: _*)
-        .select((target.map { case (n, dt) =>
-          if (storedNames.contains(n)) col(n).cast(dt).as(n)
-          else lit(null).cast(dt).as(n)
-        } ++ Seq(col(PosCol), col(TsCol), lit(del).as(DelCol))): _*)
+    val out = files.groupBy(f => (f.schemaId, f.del, f.storesDel)).map {
+      case ((sid, del, storesDel), group) =>
+        val stored = StructType(m.schemaFor(sid).fields ++
+          Seq(StructField(PosCol, LongType), StructField(TsCol, TimestampType)) ++
+          (if (storesDel) Seq(StructField(DelCol, BooleanType)) else Nil))
+        val storedNames = stored.fieldNames.toSet
+        val paths = group.map(f => root.resolve(f.path).toString)
+        val delFlag = if (storesDel) coalesce(col(DelCol), lit(false)) else lit(del)
+        spark.read.schema(stored).parquet(paths: _*)
+          .select((target.map { case (n, dt) =>
+            if (storedNames.contains(n)) col(n).cast(dt).as(n)
+            else lit(null).cast(dt).as(n)
+          } ++ Seq(col(PosCol), col(TsCol), delFlag.as(DelCol))): _*)
     }.reduce(_ unionAll _)
     if (sys.env.contains("GRAFT_TIMING"))
       System.err.println(f"[timing] readAligned(${files.size} files) " +
@@ -492,6 +508,29 @@ object LakeTable {
   /** Caps applied at FOLD time (commits serialize only their own rows). */
   val LineageCap = 100000
   val HistoryCap = 10000
+
+  /** Per-write Hadoop options of every engine parquet write.
+    *  - route the write's `file:` calls through [[NioLocalFileSystem]];
+    *    bypassing Hadoop's per-scheme FileSystem cache keeps that instance
+    *    private to the one write: every other reader and writer of the
+    *    session still gets the stock filesystem.
+    *  - truncate footer min/max of string columns to 64 bytes, the length
+    *    parquet already uses for its page index: a small micro-batch writes
+    *    ~200-row files, whose full min/max of long text columns were ~18%
+    *    of each footer. Truncated bounds stay valid for pruning; the engine
+    *    itself reads only the pos and tombstone columns' statistics.
+    */
+  private val WriteOptions = Map(
+    "fs.file.impl" -> classOf[NioLocalFileSystem].getName,
+    "fs.file.impl.disable.cache" -> "true",
+    "parquet.statistics.truncate.length" -> "64")
+
+  /** Every parquet write of the engine goes through here: same files, modes
+    * and `.crc` checksums as a plain `.parquet(dir)`, but no `chmod` child
+    * process per file and directory (see [[NioLocalFileSystem]]).
+    */
+  def writeParquet(w: DataFrameWriter[Row], dir: String): Unit =
+    w.options(WriteOptions).parquet(dir)
 
   def create(spark: SparkSession, dir: String, schema: StructType,
       keyCols: Seq[String], bucketCols: Seq[String], numBuckets: Int,

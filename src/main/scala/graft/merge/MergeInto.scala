@@ -119,11 +119,11 @@ object MergeInto {
   val TargetRowsPerWriteTask = 100000L
 
   /** Write-exchange width. Full bucket×fanout width amortizes stragglers on
-    * big batches; a `rowsHint` (when the caller knows the batch size) scales
-    * the width DOWN for small batches — a 10k-row trigger through 144
-    * partitions writes ~250 near-empty parquet files per commit, which costs
-    * more in writer open/close + footer stats + manifest growth + read-side
-    * task scheduling than the write itself.
+    * big batches; a `rowsHint` (the caller's batch size, or
+    * [[estimateRows]]) scales the width DOWN for small batches — a 10k-row
+    * trigger through 144 partitions writes ~250 near-empty parquet files per
+    * commit, which costs more in writer open/close + footer stats + manifest
+    * growth + read-side task scheduling than the write itself.
     */
   private def writePartitions(table: LakeTable, numBuckets: Int, rowsHint: Long): Int = {
     val full = numBuckets * writeFanout(table, numBuckets)
@@ -137,6 +137,26 @@ object MergeInto {
       math.max(math.min(floor.toLong, full.toLong), math.min(full.toLong, rowsBased)).toInt
     }
   }
+
+  /** Parquet wire-format bytes per change event, biased LOW (the wire runs
+    * ~20-25 bytes/event) so a big batch keeps the full write fanout.
+    */
+  private val WireBytesPerEvent = 20L
+
+  /** Batch-size estimate from the `sizeInBytes` Spark keeps on the leaves of
+    * the batch's analyzed plan: a file scan knows its input files' bytes,
+    * and a streaming `foreachBatch` frame's `LogicalRDD` carries its file
+    * source's size too — no extra I/O or job. -1 (unknown → full width) when
+    * any leaf has no size (it reports the session default) or on any
+    * surprise: a sizing hint never fails a merge.
+    */
+  private def estimateRows(batch: DataFrame): Long =
+    try {
+      val unknown = BigInt(batch.sparkSession.sessionState.conf.defaultSizeInBytes)
+      val sizes = batch.queryExecution.analyzed.collectLeaves().map(_.stats.sizeInBytes)
+      if (sizes.isEmpty || sizes.exists(_ >= unknown)) -1L
+      else (sizes.sum / WireBytesPerEvent).min(BigInt(Long.MaxValue)).toLong
+    } catch { case scala.util.control.NonFatal(_) => -1L }
 
   /** LWW ordering: (pos, event ts with null→epoch-0, op rank). */
   private def ordCol: Column = struct(
@@ -191,7 +211,10 @@ object MergeInto {
 
   /** Merge one micro-batch (decoded merge-input layout: `_op,_pos,_event_ts`
     * [,`_schema_id`] + row columns) into `table`, committing `(epoch,
-    * maxPos)` atomically with the snapshot. Replayed epochs
+    * maxPos)` atomically with the snapshot. `rowsHint` (batch rows, -1 =
+    * estimate from the plan's leaves) sizes the MOR write; pass it when the
+    * batch plan also reads existing tables, whose sizes say nothing about
+    * the batch. Replayed epochs
     * (epoch <= table.lastEpoch, same pipeline) are fenced to no-ops —
     * exactly-once table state even when Structured Streaming re-runs a batch
     * after a crash.
@@ -212,7 +235,8 @@ object MergeInto {
     if (fenced(m0, epoch, pipelineId, allowTakeover))
       return MergeResult(epoch, skipped = true, 0, 0, 0, 0)
     if (mode == "mor")
-      mergeMor(table, m0, batch, epoch, salt, registry, batchSchemaId, pipelineId, rowsHint)
+      mergeMor(table, m0, batch, epoch, salt, registry, batchSchemaId, pipelineId,
+        if (rowsHint >= 0) rowsHint else estimateRows(batch))
     else mergeCow(table, m0, batch, epoch, salt, registry, batchSchemaId, pipelineId)
   }
 
@@ -240,16 +264,16 @@ object MergeInto {
 
     // ONE job: observe global metrics on the deduped stream, project to the
     // storage layout (batch schema; delete winners become tombstone rows —
-    // key + pos, payload nulled — routed to separate del-files), shuffle by
-    // bucket, write delta files.
+    // key + pos, payload nulled, `_graft_del` true; null on upserts), shuffle
+    // by bucket, write ONE delta file per touched bucket and write task.
     val morWidth = writePartitions(table, m0.numBuckets, rowsHint)
     val obs = new Observation(s"merge-$epoch-${UUID.randomUUID().toString.take(6)}")
     val commitId = UUID.randomUUID().toString.take(12)
     val commitRel = s"data/$commitId"
     val sidMetric = if (hasSid) max(col("_schema_id")) else max(lit(batchSchemaId))
     timed("mor-write") {
-      dedup // observe on the pre-projection node so _schema_id is in scope
-        .observe(obs,
+      // observe on the pre-projection node so _schema_id is in scope
+      val stored = dedup.observe(obs,
           count(lit(1)).as("n"),
           sum(when(isDel, 1L).otherwise(0L)).as("dels"),
           max(col("_pos")).as("maxPos"),
@@ -265,15 +289,16 @@ object MergeInto {
           }.toSeq
             :+ col("_pos").as(table.PosCol)
             :+ col("_event_ts").as(table.TsCol)
-            :+ isDel.as("del")
+            :+ when(isDel, lit(true)).as(table.DelCol)
             :+ table.bucketExpr(m0.numBuckets, m0.bucketCols).as("bkt")): _*)
-        // explicit partition count (AQE would coalesce small shuffles into
-        // one sort-based dynamic-partition writer — serial and slower),
-        // fanned out with a salt so writer waves stay fine-grained relative
-        // to the core count (wave quantization otherwise idles the tail);
-        // a rowsHint shrinks the width for small batches (file-count hygiene)
+      // explicit partition count (AQE would coalesce small shuffles into
+      // one sort-based dynamic-partition writer — serial and slower),
+      // fanned out with a salt so writer waves stay fine-grained relative
+      // to the core count (wave quantization otherwise idles the tail);
+      // a small batch shrinks the width (file-count hygiene)
+      LakeTable.writeParquet(stored
         .repartition(morWidth, col("bkt"), writeSalt(table, morWidth, m0.numBuckets))
-        .write.partitionBy("bkt", "del").parquet(table.root.resolve(commitRel).toString)
+        .write.partitionBy("bkt"), table.root.resolve(commitRel).toString)
     }
     val row = obs.get
     // an EMPTY metrics map is AQE's empty-relation elimination: when every
@@ -299,8 +324,8 @@ object MergeInto {
       listCommitFiles(table, commitRel, batchSchemaId, "delta"))
     val lineage = newFiles.groupBy(_.bucket).map { case (b, fs) =>
       LineageEntry(epoch, b,
-        upserted = fs.filterNot(_.del).map(_.rows).sum,
-        deleted = fs.filter(_.del).map(_.rows).sum,
+        upserted = fs.map(f => f.rows - f.tombstones).sum,
+        deleted = fs.map(_.tombstones).sum,
         appliedOffset = fs.map(_.maxPos).max)
     }.toSeq
 
@@ -430,9 +455,9 @@ object MergeInto {
 
       val commitId = UUID.randomUUID().toString.take(12)
       val commitRel = s"data/$commitId"
-      timed("cow-write")(finalRows
+      timed("cow-write")(LakeTable.writeParquet(finalRows
         .repartition(math.max(touched.size, 1), col("bkt"))
-        .write.partitionBy("bkt", "del").parquet(table.root.resolve(commitRel).toString))
+        .write.partitionBy("bkt", "del"), table.root.resolve(commitRel).toString))
 
       val newFiles = listCommitFiles(table, commitRel, m.schemaId, "base")
       val lineage = stats.map { r =>
@@ -509,9 +534,9 @@ object MergeInto {
     // rows being rewritten are known from the manifest — size the exchange
     val totalRows = inputs.toSeq.map(_.rows).sum
     val cWidth = writePartitions(table, m.numBuckets, totalRows)
-    timed("compact-write")(resolved
+    timed("compact-write")(LakeTable.writeParquet(resolved
       .repartition(cWidth, col("bkt"), writeSalt(table, cWidth, m.numBuckets))
-      .write.partitionBy("bkt", "del").parquet(table.root.resolve(commitRel).toString))
+      .write.partitionBy("bkt", "del"), table.root.resolve(commitRel).toString))
     val newFiles = listCommitFiles(table, commitRel, m.schemaId, "base")
     // rebase: keep any delta files appended since `m` was resolved
     table.commitAtomic { latest =>
@@ -578,9 +603,12 @@ object MergeInto {
     if (b == 0) (if (d > 0) Double.MaxValue else 0.0) else d / b
   }
 
-  /** Enumerate staged files under `commitRel` with row counts and the
-    * applied-pos max — straight from parquet footers, no data re-scan.
-    * Layout: `<commitRel>/bkt=<b>/del=<bool>/part-*.parquet`.
+  /** Enumerate staged files under `commitRel` with row counts, the
+    * applied-pos max and (mixed delta files) the tombstone count — straight
+    * from parquet footers, no data re-scan. Layouts:
+    * `<commitRel>/bkt=<b>/part-*.parquet` (MOR delta, tombstone flag in the
+    * `_graft_del` column) and `<commitRel>/bkt=<b>/del=<bool>/part-*.parquet`
+    * (base files, tombstones split out).
     *
     * The directory LISTING is driver-side (pure namespace I/O); footer
     * OPENS are a distributed Spark job above [[DriverFooterLimit]] files —
@@ -597,56 +625,71 @@ object MergeInto {
       val s = Files.list(dir)
       try s.iterator().asScala.toList finally s.close()
     }
+    def parquets(dir: java.nio.file.Path) =
+      ls(dir).filter(_.getFileName.toString.endsWith(".parquet"))
+    // (bucket, Some(del) for a split file / None for a mixed one, uri, rel)
     val paths = ls(commitDir)
       .filter(_.getFileName.toString.startsWith("bkt="))
       .flatMap { bdir =>
         val b = bdir.getFileName.toString.stripPrefix("bkt=").toInt
-        ls(bdir)
+        val split = ls(bdir)
           .filter(_.getFileName.toString.startsWith("del="))
           .flatMap { ddir =>
             val del = ddir.getFileName.toString.stripPrefix("del=").toBoolean
-            ls(ddir)
-              .filter(_.getFileName.toString.endsWith(".parquet"))
-              .map(f => (b, del, f.toUri.toString, table.root.relativize(f).toString))
+            parquets(ddir).map(f => (b, Option(del), f))
           }
+        split ++ parquets(bdir).map(f => (b, Option.empty[Boolean], f))
+      }.map { case (b, del, f) =>
+        (b, del, f.toUri.toString, table.root.relativize(f).toString)
       }
     val posCol = table.PosCol
+    val delCol = table.DelCol
+    def entry(b: Int, del: Option[Boolean], rel: String, stats: (Long, Long, Long)) =
+      FileEntry(b, rel, stats._1, schemaId, kind, del.getOrElse(false), stats._2,
+        delRows = if (del.isEmpty) stats._1 - stats._3 else -1L)
     if (paths.size <= DriverFooterLimit) {
       // small commit: footer reads in parallel on the driver beat a job round-trip
       val conf = table.spark.sessionState.newHadoopConf()
       paths.par.map { case (b, del, uri, rel) =>
-        val (rows, maxPos) = readFooterStats(uri, posCol, conf)
-        FileEntry(b, rel, rows, schemaId, kind, del, maxPos)
+        entry(b, del, rel, readFooterStats(uri, posCol, delCol, conf))
       }.toList
     } else {
       val sc = table.spark.sparkContext
       val slices = math.min(paths.size, math.max(1, sc.defaultParallelism))
       sc.parallelize(paths, slices).map { case (b, del, uri, rel) =>
         // executor-side: fresh Hadoop conf (table roots are plain URIs)
-        val (rows, maxPos) = readFooterStats(uri, posCol,
-          new org.apache.hadoop.conf.Configuration())
-        FileEntry(b, rel, rows, schemaId, kind, del, maxPos)
-      }.collect().toList
+        (b, del, rel, readFooterStats(uri, posCol, delCol,
+          new org.apache.hadoop.conf.Configuration()))
+      }.collect().toList.map { case (b, del, rel, st) => entry(b, del, rel, st) }
     }
   }
 
-  /** (rowCount, max(posCol)) from one parquet footer. */
-  private def readFooterStats(uri: String, posCol: String,
-      conf: org.apache.hadoop.conf.Configuration): (Long, Long) = {
+  /** (rowCount, max(posCol), nulls in delCol) from one parquet footer; the
+    * null count is 0 when the file has no `delCol`.
+    */
+  private def readFooterStats(uri: String, posCol: String, delCol: String,
+      conf: org.apache.hadoop.conf.Configuration): (Long, Long, Long) = {
     val reader = ParquetFileReader.open(
       HadoopInputFile.fromPath(new HPath(java.net.URI.create(uri)), conf))
     try {
       val blocks = reader.getFooter.getBlocks.asScala
       val rows = blocks.map(_.getRowCount).sum
-      val maxPos = blocks.flatMap(_.getColumns.asScala
-        .filter(_.getPath.toDotString == posCol)
+      def chunks(name: String) = blocks.flatMap(_.getColumns.asScala
+        .filter(_.getPath.toDotString == name))
+      val maxPos = chunks(posCol)
         .map(_.getStatistics)
         .filter(s => s != null && s.hasNonNullValue)
-        .map(_.genericGetMax.asInstanceOf[Long])) match {
+        .map(_.genericGetMax.asInstanceOf[Long]) match {
         case s if s.nonEmpty => s.max
         case _ => -1L
       }
-      (rows, maxPos)
+      val delNulls = chunks(delCol).map { c =>
+        val st = c.getStatistics
+        if (st == null || !st.isNumNullsSet)
+          throw new IllegalStateException(s"$uri: footer of $delCol has no null count")
+        st.getNumNulls
+      }.sum
+      (rows, maxPos, delNulls)
     } finally reader.close()
   }
 }

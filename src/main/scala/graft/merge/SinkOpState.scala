@@ -138,7 +138,9 @@ object SinkOpState {
           struct(col("ord"), col("action"), col("value"), col("score")),
           col("ord")).as("win"),
         max(when(col("action").isin(removalsSeq: _*), col("ord"))).as("lastRem"),
-        collect_list(when(col("action") === "RPUSH", col("ord"))).as("pushes"))
+        // a set: a redelivered RPUSH carries the same ord and counts once,
+        // as in the fenced incremental apply
+        collect_set(when(col("action") === "RPUSH", col("ord"))).as("pushes"))
     def entry(uid: Column, value: Column, score: Column, ord: Column,
         marker: Column): Column =
       struct(uid.cast("string").as("uid"), value.cast("string").as("value"),

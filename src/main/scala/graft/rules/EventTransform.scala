@@ -49,7 +49,12 @@ object EventTransform {
     */
   def runOrdered[T](ds: Dataset[(Long, T)], t: EventTransform[T]): DataFrame = {
     val enc = Encoders.product[(String, String, String, String, Double, String, Long)]
+    val ordBound = Long.MaxValue / MaxOpsPerEvent
     ds.flatMap { case (pos, e) =>
+      // same bound and message as ExprTransform.runOrdered: pos·16 wraps
+      // past it and would silently reorder the op stream
+      require(pos >= -ordBound && pos <= ordBound,
+        s"runOrdered: |_pos| > $ordBound overflows the ord encoding (_pos*16+i)")
       t(e).zipWithIndex.map { case (op, i) =>
         require(i < MaxOpsPerEvent,
           s"runOrdered: more than $MaxOpsPerEvent ops from one event")

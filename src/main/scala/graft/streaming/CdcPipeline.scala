@@ -130,7 +130,7 @@ object CdcPipeline {
     val res = timed("merge")(
       MergeInto.merge(table, decoded, epoch, cfg.saltedDedup, cfg.mergeMode,
         cfg.registry, batchSchemaId = newestSid, pipelineId = pipelineId,
-        allowTakeover = cfg.allowPipelineTakeover, rowsHint = estimateRows(wire)))
+        allowTakeover = cfg.allowPipelineTakeover))
 
     // MOR maintenance: async amortized compaction keeps read-side resolve
     // bounded without blocking ingest (rebase-safe vs concurrent merges).
@@ -155,25 +155,6 @@ object CdcPipeline {
       if (availableNow) writer.trigger(Trigger.AvailableNow())
       else writer.trigger(Trigger.ProcessingTime(cfg.triggerMs))
     triggered.start()
-  }
-
-  /** Cheap batch-size estimate from the trigger's input file sizes (driver
-    * namespace I/O only; ~20 bytes/event in the parquet wire format, biased
-    * LOW so big batches keep the full write fanout). Sizes the write
-    * exchange so a small trigger doesn't shatter into hundreds of near-empty
-    * files. -1 (unknown) on any surprise.
-    */
-  private def estimateRows(wire: DataFrame): Long = {
-    try {
-      val files = wire.inputFiles
-      if (files.isEmpty) -1L
-      else files.map { f =>
-        val u = java.net.URI.create(f)
-        if (u.getScheme == null || u.getScheme == "file")
-          new java.io.File(u.getPath).length()
-        else return -1L // non-local stores: skip the stat round-trips
-      }.sum / 20L
-    } catch { case _: Throwable => -1L }
   }
 
   /** In-place retry with backoff for transient sink/merge failures. Safe to

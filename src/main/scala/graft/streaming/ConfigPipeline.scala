@@ -190,7 +190,7 @@ object ConfigPipeline {
                   "output; move it aside or point the route at a fresh dir")
               finally flat.close()
             }
-            out.write.mode("overwrite").parquet(s"${b.conf.outDir}/epoch=$epoch")
+            LakeTable.writeParquet(out.write.mode("overwrite"), s"${b.conf.outDir}/epoch=$epoch")
             if (b.stateTable == null) MergeResult(epoch, skipped = false, 0, 0, 0, 0)
             else
               // fold the op stream into the route's state table — its OWN
@@ -394,7 +394,7 @@ object ConfigPipeline {
         dirBytes(java.nio.file.Paths.get(outDir, "_folded", d))).sum else 0L)
     val nOut = math.max(1L, math.min(1024L, bytes / (128L << 20) + 1)).toInt
     val dest = s"$outDir/_folded/fold-$w"
-    all.coalesce(nOut).write.mode("overwrite").parquet(dest)
+    LakeTable.writeParquet(all.coalesce(nOut).write.mode("overwrite"), dest)
     val fc = FoldCommit(w, (if (major) Nil else prevDirs) :+ s"fold-$w")
     val tmp = java.nio.file.Files.createTempFile(
       java.nio.file.Paths.get(outDir), "._fold", ".tmp")

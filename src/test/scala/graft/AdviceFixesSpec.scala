@@ -4,7 +4,7 @@ import graft.changelog.ChangelogCodec
 import graft.functions.{Dedup, Packing}
 import graft.lake.LakeTable
 import graft.merge.MergeInto
-import graft.rules.{ExprOp, ExprTransform}
+import graft.rules.{EventTransform, ExprOp, ExprTransform, SinkOp}
 import graft.sources.GraftStreamSource
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -121,6 +121,26 @@ class AdviceFixesSpec extends SparkSpec {
     val e = intercept[Exception](
       ExprTransform.runOrdered(df(Long.MaxValue / 16 + 1), ops).collect())
     assert(e.toString.contains("overflows the ord"), s"wrong failure: $e")
+  }
+
+  test("EventTransform.runOrdered raises on the same ord bound as " +
+    "ExprTransform") {
+    val t = new EventTransform[String] {
+      def apply(e: String): Iterator[SinkOp] = Iterator(SinkOp("redis", "SET", e, value = e))
+    }
+    def run(pos: Long) = EventTransform.runOrdered(Seq((pos, "k1")).toDS(), t)
+    assert(run(Long.MaxValue / 16).select("ord").as[Long].head() == (Long.MaxValue / 16) * 16)
+    val e = intercept[Exception](run(Long.MaxValue / 16 + 1).collect())
+    assert(e.toString.contains(s"runOrdered: |_pos| > ${Long.MaxValue / 16} " +
+      "overflows the ord encoding (_pos*16+i)"), s"wrong failure: $e")
+  }
+
+  test("decodeDebezium keeps its error message when the wire value is NULL") {
+    val e = intercept[Exception](ChangelogCodec.decodeDebezium(
+      Seq[String](null).toDF("value"), schema).collect())
+    assert(e.toString.contains("decodeDebezium: undecodable envelope (tombstone, " +
+      "blank or invalid JSON"), s"message lost: $e")
+    assert(e.toString.contains("): <null>"), s"no value marker: $e")
   }
 
   test("decontaminate: degenerate docs (blank or fewer tokens than " +

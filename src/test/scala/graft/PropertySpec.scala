@@ -270,7 +270,7 @@ class PropertySpec extends SparkSpec {
   test("auto tombstone GC: drops only below-watermark tombstones, keeps the " +
     "fence, leaves lineage untouched, and fenced replays stay dead") {
     val t = fresh()
-    def tombstoneRows = t.meta.files.filter(_.del).map(_.rows).sum
+    def tombstoneRows = t.meta.files.map(_.tombstones).sum
     // epoch 0: k0..k7 live at pos 0..7; epoch 1: delete k0..k3 at pos 10..13
     MergeInto.merge(t,
       toDf((0 until 8).map(i => Ev(OpInsert, i.toLong, s"k$i", s"v$i"))), 0)

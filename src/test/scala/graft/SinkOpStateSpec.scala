@@ -107,6 +107,20 @@ class SinkOpStateSpec extends SparkSpec {
     }
   }
 
+  test("fold is idempotent under redelivery: a re-sent subset (same ords) " +
+    "changes nothing, RPUSH included") {
+    for (seed <- 1 to 3) {
+      val ops = soup(800, seed)
+      val redelivered = ops.filter(_._7 % 3 == 0)
+      assert(redelivered.exists(_._2 == "RPUSH"))
+      val (again, once) = (SinkOpState.fold(toDf(ops ++ redelivered)),
+        SinkOpState.fold(toDf(ops)))
+      // a duplicated entry is an identical row: compare counts, not just sets
+      assert(again.count() == once.count(), s"seed=$seed")
+      assert(rows(again) == rows(once), s"seed=$seed")
+    }
+  }
+
   test("list retraction: LREM is value-addressed, kills ALL earlier pushes, " +
     "later re-pushes survive with order and duplicates preserved") {
     val ops = Seq(
