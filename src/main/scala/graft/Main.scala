@@ -111,7 +111,7 @@ object Main {
       graft.merge.MergeInto.compact(table,
         rest.headOption.map(_.toLong).getOrElse(Long.MinValue))
       val m = table.refresh()
-      println(s"compacted: files=${m.files.size} v=${m.version}")
+      println(s"compacted: files=${m.dataFiles} v=${m.version}")
 
     case "vacuum" :: tableDir :: rest =>
       val table = LakeTable.load(spark, tableDir)
@@ -162,7 +162,7 @@ object Main {
       val table = LakeTable.load(spark, tableDir)
       val m = table.meta
       println(s"version=${m.version} schema_id=${m.schemaId} lastEpoch=${m.lastEpoch} " +
-        s"lastOffset=${m.lastOffset} files=${m.files.size} buckets=${m.numBuckets}")
+        s"lastOffset=${m.lastOffset} files=${m.dataFiles} buckets=${m.numBuckets}")
       println(s"rows=${table.snapshot().count()}")
       println("lineage (last 10 commits):")
       table.lineage().orderBy(org.apache.spark.sql.functions.desc("epoch"))

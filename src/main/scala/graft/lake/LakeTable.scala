@@ -9,25 +9,30 @@ import org.json4s.jackson.Serialization
 import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
-/** One data file of a snapshot; `path` is relative to the table root.
-  * `schemaId` records the schema the file was WRITTEN with, so readers can
-  * align old (narrower) files to the current schema — the lake-side analog of
-  * the reference re-fetching the table schema on DDL and re-projecting
-  * (reference: global/rule.go:295-343 AfterUpdateTableInfo).
+/** One bucket of one data file of a snapshot; `path` is relative to the
+  * table root. A MOR delta file holds several buckets (one file per write
+  * task) and has one entry per bucket it holds, each with that bucket's
+  * `rows`, `maxPos` and `delRows`; a base file holds one bucket. All entries
+  * of a path are added in one commit and removed in one commit
+  * ([[LakeTable.commitMeta]] enforces it). `schemaId` records the schema
+  * the file was WRITTEN with, so readers can align old (narrower) files to
+  * the current schema — the lake-side analog of the reference re-fetching
+  * the table schema on DDL and re-projecting (reference:
+  * global/rule.go:295-343 AfterUpdateTableInfo).
   *
   * `kind`: "base" (fully resolved rows) or "delta" (merge-on-read row-version
   * file appended by a MERGE commit; the read path resolves LWW across
   * base+delta per key, compaction folds deltas back into base).
   *
-  * Tombstones: a MOR delta file holds a commit's upserts AND tombstones of
-  * one bucket, with the flag in its own `_graft_del` column (true on
-  * tombstones, null on live rows); `delRows` is its tombstone count, taken
-  * from that column's footer null count. Base files (compaction, COW) keep
-  * tombstones in separate files instead: `del` marks a tombstone-only file,
-  * so live reads of pure-base buckets prune them at the manifest with no
-  * scan. `delRows` = -1 on such split files: their flag comes from `del`.
-  * `maxPos`: footer max of the applied-pos column (per-bucket applied-offset
-  * watermark, also scan-pruning input).
+  * Tombstones: a MOR delta file holds a commit's upserts AND tombstones,
+  * with the flag in its own `_graft_del` column (true on tombstones, null on
+  * live rows); `delRows` is the bucket's tombstone count. Base files
+  * (compaction, COW) keep tombstones in separate files instead: `del` marks
+  * a tombstone-only file, so live reads of pure-base buckets prune them at
+  * the manifest with no scan. `delRows` = -1 on such split files: their flag
+  * comes from `del`. `maxPos`: the bucket's max applied pos (per-bucket
+  * applied-offset watermark). All statistics are counted by the write task
+  * that wrote the file ([[TableWriter]]).
   */
 final case class FileEntry(bucket: Int, path: String, rows: Long, schemaId: Int,
     kind: String = "base", del: Boolean = false, maxPos: Long = -1L,
@@ -44,7 +49,7 @@ final case class FileEntry(bucket: Int, path: String, rows: Long, schemaId: Int,
   * metadata so it survives failover and is queryable as a DataFrame.
   * `replayed` (events at-or-below the previous applied offset) is tracked
   * per COMMIT (see [[CommitInfo.replayed]]); per-bucket counters come free
-  * from file footers.
+  * from the write tasks' statistics.
   */
 final case class LineageEntry(epoch: Long, bucket: Int, upserted: Long,
     deleted: Long, appliedOffset: Long)
@@ -90,6 +95,8 @@ final case class TableMeta(
     DataType.fromJson(schemas(schemaId.toString)).asInstanceOf[StructType]
   def schemaFor(id: Int): StructType =
     DataType.fromJson(schemas(id.toString)).asInstanceOf[StructType]
+  /** Physical data files (`files` holds one entry per bucket of a file). */
+  def dataFiles: Int = files.iterator.map(_.path).distinct.size
 }
 
 /** One version file on disk. A commit serializes ONLY its own delta (files
@@ -130,9 +137,12 @@ final case class MetaSegment(
   * Layout:
   * {{{
   *   <root>/meta/v00000001.json     — one MetaSegment per version
-  *   <root>/data/<commit-uuid>/bkt=<b>/part-*.parquet            — MOR delta
-  *   <root>/data/<commit-uuid>/bkt=<b>/del=<bool>/part-*.parquet  — base
+  *   <root>/data/<commit-uuid>/part-<task>-<attempt>-<uuid>.*.parquet
   * }}}
+  * (MOR delta: one file per write task; base: one per (bucket, tombstone
+  * flag) per write task. Tables written before that layout keep
+  * `bkt=<b>/[del=<bool>/]` directories, one bucket per file; they read the
+  * same, since readers go by the manifest.)
   *
   * Commit protocol: stage the segment JSON to a uniquely-named temp file,
   * then `Files.createLink(dest, tmp)` — a hard link CANNOT replace an
@@ -156,21 +166,20 @@ final class LakeTable private (val root: Path, val spark: SparkSession) {
     */
   def refresh(): TableMeta = synchronized {
     val cached = metaCache
-    val latest = listVersions(root).lastOption.getOrElse(
-      throw new IllegalStateException(s"no table at $root"))
-    if (latest == cached.version) cached
-    else if (latest > cached.version) {
-      // another process's vacuum may have cut segments between our cached
-      // version and the latest anchor — fall back to a cold fold (which
-      // starts at the newest snapshot segment and cannot need cut history)
-      metaCache =
-        try foldSegments(cached, (cached.version + 1 to latest).map(v => readSegment(root, v)))
-        catch { case _: java.nio.file.NoSuchFileException => readLatestMeta(root) }
-      metaCache
-    } else { // table rolled back externally (never happens in-process)
-      metaCache = readLatestMeta(root)
-      metaCache
-    }
+    // probe v(cached+1), v(cached+2), … — no listing of meta/ in steady state
+    val newer = Iterator.from(cached.version + 1)
+      .map(v => try Some(readSegment(root, v)) catch {
+        case _: java.nio.file.NoSuchFileException => None })
+      .takeWhile(_.isDefined).flatten.toVector
+    metaCache =
+      if (newer.nonEmpty) foldSegments(cached, newer)
+      // no successor and v(cached) still there: current (vacuum only ever
+      // drops a PREFIX of the segments, lowest first). v(cached) gone means
+      // another process's vacuum cut past it, or an external rollback: a
+      // cold fold from the newest snapshot segment, which needs no cut history
+      else if (Files.exists(segmentPath(root, cached.version))) cached
+      else readLatestMeta(root)
+    metaCache
   }
 
   /** Hidden per-row version column: the change-log position last applied to
@@ -237,7 +246,7 @@ final class LakeTable private (val root: Path, val spark: SparkSession) {
     val pureDf = readAligned(m,
       if (includeBaseTombstones) pure else pure.filterNot(_.del))
     if (unresolved.isEmpty) pureDf
-    else pureDf.unionAll(resolveLww(readAligned(m, unresolved), m.keyCols))
+    else pureDf.unionAll(resolveLww(readAligned(m, unresolved, buckets), m.keyCols))
   }
 
   /** Per-key LWW over base+delta rows: winner = greatest (applied pos, event
@@ -255,9 +264,13 @@ final class LakeTable private (val root: Path, val spark: SparkSession) {
     * schemaId to that version's schema: missing columns → null, narrower
     * types → cast (int→long etc.). Grouped by schemaId so each parquet scan
     * uses exactly the schema its footers carry — no reliance on reader-side
-    * type promotion.
+    * type promotion. Each path is read once, however many bucket entries it
+    * has; with `buckets` (null = all), a file that also holds buckets outside
+    * them keeps only the rows whose [[bucketExpr]] is in `buckets`.
     */
-  private def readAligned(m: TableMeta, files: Seq[FileEntry]): DataFrame = {
+  private def readAligned(m: TableMeta, entries: Seq[FileEntry],
+      buckets: Set[Int] = null): DataFrame = {
+    val files = entries.distinctBy(_.path)
     val cur = m.schema
     val target = cur.fields.map(f => (f.name, f.dataType))
     val hiddenTail = Seq(StructField(PosCol, LongType), StructField(TsCol, TimestampType),
@@ -270,15 +283,20 @@ final class LakeTable private (val root: Path, val spark: SparkSession) {
     // uses exactly the schema its footers carry; a split file's flag
     // re-attaches from the manifest, a mixed file's comes from its column
     val t0 = System.nanoTime()
-    val out = files.groupBy(f => (f.schemaId, f.del, f.storesDel)).map {
-      case ((sid, del, storesDel), group) =>
+    val foreign = if (buckets == null) Set.empty[String]
+      else m.files.iterator.filterNot(f => buckets.contains(f.bucket)).map(_.path).toSet
+    val out = files.groupBy(f => (f.schemaId, f.del, f.storesDel, foreign.contains(f.path))).map {
+      case ((sid, del, storesDel, shared), group) =>
         val stored = StructType(m.schemaFor(sid).fields ++
           Seq(StructField(PosCol, LongType), StructField(TsCol, TimestampType)) ++
           (if (storesDel) Seq(StructField(DelCol, BooleanType)) else Nil))
         val storedNames = stored.fieldNames.toSet
         val paths = group.map(f => root.resolve(f.path).toString)
         val delFlag = if (storesDel) coalesce(col(DelCol), lit(false)) else lit(del)
-        spark.read.schema(stored).parquet(paths: _*)
+        val scan = spark.read.schema(stored).parquet(paths: _*)
+        // a row's bucket is hashed from its columns as stored
+        (if (shared) scan.where(bucketExpr(m.numBuckets, m.bucketCols).isin(buckets.toSeq: _*))
+         else scan)
           .select((target.map { case (n, dt) =>
             if (storedNames.contains(n)) col(n).cast(dt).as(n)
             else lit(null).cast(dt).as(n)
@@ -402,7 +420,12 @@ final class LakeTable private (val root: Path, val spark: SparkSession) {
           else if (droppedRef.contains(rel)) true
           else orphanGraceMs >= 0L &&
             (now - newestInCommit(commitDir(p))) > orphanGraceMs
-        if (delete) { Files.deleteIfExists(p); removedFiles += 1 }
+        if (delete) {
+          Files.deleteIfExists(p)
+          // and its checksum sidecar, or the commit directory never empties
+          Files.deleteIfExists(p.resolveSibling(s".${p.getFileName}.crc"))
+          removedFiles += 1
+        }
       }
       // prune emptied commit directories — but only ones that have been
       // quiet for a grace window: an in-flight write creates its staging
@@ -467,6 +490,12 @@ final class LakeTable private (val root: Path, val spark: SparkSession) {
     val snapshot = forceSnapshot || next.version - prev.baseVersion >= SnapshotEvery
     val prevPaths = prev.files.iterator.map(_.path).toSet
     val nextPaths = next.files.iterator.map(_.path).toSet
+    // path-atomic entries: the segment diff and vacuum go by path, so a data
+    // file keeps ALL its bucket entries or loses all of them
+    val keptEntries = next.files.iterator.filter(f => prevPaths.contains(f.path)).toSet
+    val partial = prev.files.filter(f => nextPaths.contains(f.path) && !keptEntries.contains(f))
+    require(partial.isEmpty, s"commit v${next.version} removes only some bucket " +
+      s"entries of ${partial.map(_.path).distinct.take(3).mkString(", ")}")
     val seg = MetaSegment(
       version = next.version,
       baseVersion = if (snapshot) next.version else prev.baseVersion,
@@ -518,16 +547,18 @@ object LakeTable {
     *    parquet already uses for its page index: a small micro-batch writes
     *    ~200-row files, whose full min/max of long text columns were ~18%
     *    of each footer. Truncated bounds stay valid for pruning; the engine
-    *    itself reads only the pos and tombstone columns' statistics.
+    *    reads no footer statistics itself (its writer counts them).
     */
-  private val WriteOptions = Map(
+  private[lake] val WriteOptions = Map(
     "fs.file.impl" -> classOf[NioLocalFileSystem].getName,
     "fs.file.impl.disable.cache" -> "true",
     "parquet.statistics.truncate.length" -> "64")
 
-  /** Every parquet write of the engine goes through here: same files, modes
-    * and `.crc` checksums as a plain `.parquet(dir)`, but no `chmod` child
-    * process per file and directory (see [[NioLocalFileSystem]]).
+  /** A `DataFrameWriter` parquet write with the engine's write options:
+    * same files, modes and `.crc` checksums as a plain `.parquet(dir)`, but
+    * no `chmod` child process per file and directory (see
+    * [[NioLocalFileSystem]]). Table data goes through [[TableWriter]]; this
+    * is for the changefeed's own files.
     */
   def writeParquet(w: DataFrameWriter[Row], dir: String): Unit =
     w.options(WriteOptions).parquet(dir)
@@ -575,9 +606,11 @@ object LakeTable {
     finally s.close()
   }
 
+  private def segmentPath(root: Path, v: Int): Path =
+    root.resolve("meta").resolve(f"v$v%08d.json")
+
   private[lake] def readSegment(root: Path, v: Int): MetaSegment = {
-    val json = new String(Files.readAllBytes(
-      root.resolve("meta").resolve(f"v$v%08d.json")), "UTF-8")
+    val json = new String(Files.readAllBytes(segmentPath(root, v)), "UTF-8")
     try Serialization.read[MetaSegment](json)
     catch { case e: org.json4s.MappingException =>
       throw new IllegalStateException(

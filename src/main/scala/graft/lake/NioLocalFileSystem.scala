@@ -16,7 +16,8 @@ import java.nio.file.attribute.PosixFilePermissions
   * verified on read, umask handling, rename/commit protocol) is the stock
   * `LocalFileSystem`.
   *
-  * Selected per write only ([[LakeTable.writeParquet]]), never session-wide.
+  * Selected per write only ([[TableWriter]], [[LakeTable.writeParquet]]), never
+  * session-wide.
   */
 final class NioLocalFileSystem extends LocalFileSystem(new NioRawLocalFileSystem)
 

@@ -1,18 +1,12 @@
 package graft.merge
 
 import graft.core.Types
-import graft.lake.{CommitInfo, FileEntry, LakeTable, LineageEntry, TableMeta}
-import org.apache.spark.sql.{Column, DataFrame, Observation}
+import graft.lake.{CommitInfo, FileEntry, LakeTable, LineageEntry, TableMeta, TableWriter, WrittenPart}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
-import org.apache.hadoop.fs.{Path => HPath}
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.HadoopInputFile
 
-import java.nio.file.Files
 import java.util.UUID
-import scala.collection.parallel.CollectionConverters._
-import scala.jdk.CollectionConverters._
 
 /** Counter semantics differ by mode, deliberately: MOR skips in-batch dedup
   * (read-side LWW picks the same winners), so its counters tally EVENTS
@@ -46,11 +40,12 @@ final case class MergeResult(epoch: Long, skipped: Boolean,
   *     per-key duplicates before the exchange, so hot-conversation skew
   *     cannot overload a reducer) → write delta row-version files. Commit
   *     cost is O(batch) regardless of table size (the Iceberg-v2 MOR shape):
-  *     the metadata commit serializes only this commit's manifest segment,
-  *     and per-file (rows, maxPos) stats come from parquet footers read by a
-  *     distributed job (driver-side only below a small file count). The read
-  *     path resolves per-key LWW over base+delta; [[compact]] folds deltas
-  *     into base, amortizing read cost.
+  *     the metadata commit serializes only this commit's manifest segment.
+  *     Each write task writes ONE delta file holding its buckets and returns
+  *     per-bucket (rows, maxPos, tombstones) stats ([[TableWriter]]), so the
+  *     manifest gets one entry per bucket of each file with no footer
+  *     re-read. The read path resolves per-key LWW over base+delta;
+  *     [[compact]] folds deltas into base, amortizing read cost.
   *   - **copy-on-write (option)**: rewrites touched buckets, producing
   *     resolve-free base files — right for low-churn tables / bootstrap.
   *     The TABLE side never shuffles: touched buckets come from the small
@@ -83,17 +78,6 @@ object MergeInto {
   /** Broadcast the batch key set below this many deduped rows (COW path). */
   val BroadcastKeyLimit = 4000000L
 
-  /** Footer-stat collection moves off the driver above this many files.
-    * A parquet footer read is ~1-2 ms of pure namespace+footer I/O; the
-    * driver's parallel-collection path handles a few hundred in tens of ms,
-    * while the distributed fallback pays a fixed ~0.3 s job round-trip per
-    * commit (measured on the replay bench: `footers 0.296s` per batch at 64
-    * write partitions). 256 keeps every normal micro-batch commit on the
-    * driver; only genuinely wide commits (1000-executor compactions) take
-    * the job path.
-    */
-  val DriverFooterLimit = 256
-
   /** Writer-wave fanout: enough (bucket, salt) partitions for ≥16 waves per
     * core so stragglers amortize; 1 when buckets already dominate cores.
     */
@@ -103,12 +87,12 @@ object MergeInto {
     // files per bucket; fanout only kicks in for very coarse tables
     math.max(1, (4 * cores + numBuckets - 1) / numBuckets)
   }
-  /** Salt MODULUS for a write of `width` partitions: the file count per
-    * commit is the number of distinct (bkt, salt, del) combos — NOT the
-    * partition count — so the salt must scale with the width actually
-    * chosen, or a small batch through a narrow exchange still shatters into
-    * buckets × fanout × 2 files (the round-2 q01 profile measured 196
-    * files/commit from exactly this: width 16, but salt modulus fixed at 8).
+  /** Salt MODULUS for a write of `width` partitions: the (bucket, salt)
+    * combos of a bucket spread its rows over that many write tasks, so the
+    * salt must scale with the width actually chosen, or a small batch
+    * through a narrow exchange still shatters every bucket over many files
+    * (the round-2 q01 profile measured 196 files/commit from exactly this:
+    * width 16, but salt modulus fixed at 8).
     */
   private def saltModulus(width: Int, numBuckets: Int): Int =
     math.max(1, width / numBuckets)
@@ -122,8 +106,8 @@ object MergeInto {
     * big batches; a `rowsHint` (the caller's batch size, or
     * [[estimateRows]]) scales the width DOWN for small batches — a 10k-row
     * trigger through 144 partitions writes ~250 near-empty parquet files per
-    * commit, which costs more in writer open/close + footer stats + manifest
-    * growth + read-side task scheduling than the write itself.
+    * commit, which costs more in writer open/close + manifest growth +
+    * read-side task scheduling than the write itself.
     */
   private def writePartitions(table: LakeTable, numBuckets: Int, rowsHint: Long): Int = {
     val full = numBuckets * writeFanout(table, numBuckets)
@@ -262,24 +246,14 @@ object MergeInto {
     val isDel = col("_op") === OpDelete
     val batchCols = batch.columns.toSet
 
-    // ONE job: observe global metrics on the deduped stream, project to the
-    // storage layout (batch schema; delete winners become tombstone rows —
-    // key + pos, payload nulled, `_graft_del` true; null on upserts), shuffle
-    // by bucket, write ONE delta file per touched bucket and write task.
+    // ONE job: project to the storage layout (batch schema; delete winners
+    // become tombstone rows — key + pos, payload nulled, `_graft_del` true;
+    // null on upserts), shuffle by bucket, and write ONE delta file per
+    // write task; the tasks count the commit's stats while writing.
     val morWidth = writePartitions(table, m0.numBuckets, rowsHint)
-    val obs = new Observation(s"merge-$epoch-${UUID.randomUUID().toString.take(6)}")
-    val commitId = UUID.randomUUID().toString.take(12)
-    val commitRel = s"data/$commitId"
-    val sidMetric = if (hasSid) max(col("_schema_id")) else max(lit(batchSchemaId))
-    timed("mor-write") {
-      // observe on the pre-projection node so _schema_id is in scope
-      val stored = dedup.observe(obs,
-          count(lit(1)).as("n"),
-          sum(when(isDel, 1L).otherwise(0L)).as("dels"),
-          max(col("_pos")).as("maxPos"),
-          sum(when(col("_pos") <= m0.lastOffset, 1L).otherwise(0L)).as("replays"),
-          sidMetric.as("maxSid"))
-        .select(
+    val commitRel = s"data/${UUID.randomUUID().toString.take(12)}"
+    val parts = timed("mor-write") {
+      val stored = dedup.select(
           (fileSchema.fields.map { f =>
             val base =
               if (!batchCols.contains(f.name)) lit(null)
@@ -289,24 +263,18 @@ object MergeInto {
           }.toSeq
             :+ col("_pos").as(table.PosCol)
             :+ col("_event_ts").as(table.TsCol)
-            :+ when(isDel, lit(true)).as(table.DelCol)
-            :+ table.bucketExpr(m0.numBuckets, m0.bucketCols).as("bkt")): _*)
+            :+ when(isDel, lit(true)).as(table.DelCol)) ++
+          (if (hasSid) Seq(col("_schema_id").cast("int").as(TableWriter.SchemaIdCol)) else Nil): _*)
+        .withColumn(TableWriter.BucketCol, table.bucketExpr(m0.numBuckets, m0.bucketCols))
       // explicit partition count (AQE would coalesce small shuffles into
-      // one sort-based dynamic-partition writer — serial and slower),
-      // fanned out with a salt so writer waves stay fine-grained relative
-      // to the core count (wave quantization otherwise idles the tail);
-      // a small batch shrinks the width (file-count hygiene)
-      LakeTable.writeParquet(stored
-        .repartition(morWidth, col("bkt"), writeSalt(table, morWidth, m0.numBuckets))
-        .write.partitionBy("bkt"), table.root.resolve(commitRel).toString)
+      // fewer, serial write tasks), fanned out with a salt so writer waves
+      // stay fine-grained relative to the core count (wave quantization
+      // otherwise idles the tail); a small batch shrinks the width
+      // (file-count hygiene)
+      TableWriter.write(table, stored.repartition(morWidth, col(TableWriter.BucketCol),
+        writeSalt(table, morWidth, m0.numBuckets)), commitRel, replayAtOrBelow = m0.lastOffset)
     }
-    val row = obs.get
-    // an EMPTY metrics map is AQE's empty-relation elimination: when every
-    // runtime stage of the batch plan reports 0 rows (e.g. a diff batch
-    // whose except sides cancel), AQE collapses the subtree — CollectMetrics
-    // included — so the observation never fires. That can only happen for a
-    // provably empty batch, which is exactly the fence-only case below.
-    val nDedup = if (row.isEmpty) 0L else row("n").asInstanceOf[Long]
+    val nDedup = parts.map(_.rows).sum
     if (nDedup == 0) { // empty batch: advance the fence only
       table.commitAtomic(latest => latest.copy(
         version = latest.version + 1, lastEpoch = epoch,
@@ -315,13 +283,12 @@ object MergeInto {
           latest.lastOffset, System.currentTimeMillis(), "merge-empty")))
       return MergeResult(epoch, skipped = false, 0, 0, 0, 0)
     }
-    val nDeletes = row("dels").asInstanceOf[Long]
-    val maxPos = row("maxPos").asInstanceOf[Long]
-    val nReplays = row("replays").asInstanceOf[Long]
-    val maxSid = row("maxSid").asInstanceOf[Int]
+    val nDeletes = parts.map(_.tombstones).sum
+    val maxPos = parts.map(_.maxPos).max
+    val nReplays = parts.map(_.replays).sum
+    val maxSid = if (hasSid) parts.map(_.maxSid).max else batchSchemaId
 
-    val newFiles = timed("footers")(
-      listCommitFiles(table, commitRel, batchSchemaId, "delta"))
+    val newFiles = entries(parts, batchSchemaId, "delta")
     val lineage = newFiles.groupBy(_.bucket).map { case (b, fs) =>
       LineageEntry(epoch, b,
         upserted = fs.map(f => f.rows - f.tombstones).sum,
@@ -411,6 +378,9 @@ object MergeInto {
         table.evolveSchema(maxSid, target)
       }
       val m = table.meta
+      // rewrite whole data files: a delta file shared with untouched buckets
+      // pulls them into the rewrite (its entries leave the manifest together)
+      val rewrite = wholeFiles(m.files, touched)
       val rowCols = m.schema.fieldNames.toSeq
       val batchCols = batch.columns.toSet
       val isDel = col("_op") === OpDelete
@@ -427,14 +397,14 @@ object MergeInto {
           }.toSeq
             :+ col("_pos").as(table.PosCol)
             :+ col("_event_ts").as(table.TsCol)
-            :+ isDel.as("del")): _*)
+            :+ isDel.as(TableWriter.SplitDelCol)): _*)
       }
 
       val keysOnly = dedup.select(keyCols.map(col): _*)
       val keySet = if (nDedup <= BroadcastKeyLimit) broadcast(keysOnly) else keysOnly
-      val existing = table.snapshotForBuckets(m, touched) // rowCols + Pos/Ts/DelCol
+      val existing = table.snapshotForBuckets(m, rewrite) // rowCols + Pos/Ts/DelCol
       val unmatched = existing.join(keySet, keyCols, "left_anti")
-        .withColumnRenamed(table.DelCol, "del")
+        .withColumnRenamed(table.DelCol, TableWriter.SplitDelCol)
       // Matched existing rows (live or tombstone) re-enter LWW as events at
       // their applied (pos, ts): a replayed (old-pos) batch event loses; a
       // newer one wins; tombstones compete as deletes so a replayed old
@@ -451,15 +421,13 @@ object MergeInto {
       val winners = lwwDedup(matchedAsEvents.unionByName(batchEvents,
         allowMissingColumns = true), keyCols)
       val finalRows = unmatched.unionByName(toStorage(winners))
-        .withColumn("bkt", bucket)
+        .withColumn(TableWriter.BucketCol, bucket)
 
-      val commitId = UUID.randomUUID().toString.take(12)
-      val commitRel = s"data/$commitId"
-      timed("cow-write")(LakeTable.writeParquet(finalRows
-        .repartition(math.max(touched.size, 1), col("bkt"))
-        .write.partitionBy("bkt", "del"), table.root.resolve(commitRel).toString))
-
-      val newFiles = listCommitFiles(table, commitRel, m.schemaId, "base")
+      val commitRel = s"data/${UUID.randomUUID().toString.take(12)}"
+      val parts = timed("cow-write")(TableWriter.write(table, finalRows
+        .repartition(rewrite.size, col(TableWriter.BucketCol))
+        .sortWithinPartitions(TableWriter.BucketCol, TableWriter.SplitDelCol), commitRel))
+      val newFiles = entries(parts, m.schemaId, "base")
       val lineage = stats.map { r =>
         LineageEntry(epoch, r.getInt(0), upserted = r.getLong(1) - r.getLong(2),
           deleted = r.getLong(2), appliedOffset = r.getLong(3))
@@ -471,7 +439,7 @@ object MergeInto {
           lastEpoch = epoch,
           lastOffset = math.max(latest.lastOffset, maxPos),
           lastPipelineId = pidOr(latest, pipelineId),
-          files = (latest.files.filterNot(f => touched.contains(f.bucket)) ++ newFiles)
+          files = (latest.files.filterNot(f => rewrite.contains(f.bucket)) ++ newFiles)
             .sortBy(f => (f.bucket, f.path)),
           lineage = latest.lineage ++ lineage,
           history = latest.history :+ CommitInfo(latest.version + 1, epoch, maxPos,
@@ -520,24 +488,24 @@ object MergeInto {
     // SELECTIVE: only buckets that carry delta files are resolved and
     // rewritten — compaction cost is proportional to churn, not table size
     // (a 100 TB table with a hot 1% rewrites 1%). Pure-base buckets are
-    // untouched and already read shuffle-free.
+    // untouched and already read shuffle-free. Every bucket of a shared
+    // delta file carries a delta, so whole files leave the manifest.
     val deltaBuckets = m.files.filter(_.kind == "delta").map(_.bucket).toSet
     if (deltaBuckets.isEmpty) return
     val inputs = m.files.filter(f => deltaBuckets.contains(f.bucket)).toSet
     val bucket = table.bucketExpr(m.numBuckets, m.bucketCols)
     val resolved = table.snapshotForBuckets(m, deltaBuckets)
       .where(!col(table.DelCol) || col(table.PosCol) >= gcTombstonesBelowPos)
-      .withColumnRenamed(table.DelCol, "del")
-      .withColumn("bkt", bucket)
-    val commitId = UUID.randomUUID().toString.take(12)
-    val commitRel = s"data/$commitId"
+      .withColumnRenamed(table.DelCol, TableWriter.SplitDelCol)
+      .withColumn(TableWriter.BucketCol, bucket)
+    val commitRel = s"data/${UUID.randomUUID().toString.take(12)}"
     // rows being rewritten are known from the manifest — size the exchange
     val totalRows = inputs.toSeq.map(_.rows).sum
     val cWidth = writePartitions(table, m.numBuckets, totalRows)
-    timed("compact-write")(LakeTable.writeParquet(resolved
-      .repartition(cWidth, col("bkt"), writeSalt(table, cWidth, m.numBuckets))
-      .write.partitionBy("bkt", "del"), table.root.resolve(commitRel).toString))
-    val newFiles = listCommitFiles(table, commitRel, m.schemaId, "base")
+    val parts = timed("compact-write")(TableWriter.write(table, resolved
+      .repartition(cWidth, col(TableWriter.BucketCol), writeSalt(table, cWidth, m.numBuckets))
+      .sortWithinPartitions(TableWriter.BucketCol, TableWriter.SplitDelCol), commitRel))
+    val newFiles = entries(parts, m.schemaId, "base")
     // rebase: keep any delta files appended since `m` was resolved
     table.commitAtomic { latest =>
       require(inputs.subsetOf(latest.files.toSet),
@@ -553,7 +521,7 @@ object MergeInto {
           .sortBy(f => (f.bucket, f.path)),
         history = latest.history :+ CommitInfo(latest.version + 1, latest.lastEpoch,
           latest.lastOffset, System.currentTimeMillis(),
-          s"compact:files=${newFiles.size}:gcBelow=$gcTombstonesBelowPos"))
+          s"compact:files=${parts.map(_.path).distinct.size}:gcBelow=$gcTombstonesBelowPos"))
     }
   }
 
@@ -603,93 +571,24 @@ object MergeInto {
     if (b == 0) (if (d > 0) Double.MaxValue else 0.0) else d / b
   }
 
-  /** Enumerate staged files under `commitRel` with row counts, the
-    * applied-pos max and (mixed delta files) the tombstone count — straight
-    * from parquet footers, no data re-scan. Layouts:
-    * `<commitRel>/bkt=<b>/part-*.parquet` (MOR delta, tombstone flag in the
-    * `_graft_del` column) and `<commitRel>/bkt=<b>/del=<bool>/part-*.parquet`
-    * (base files, tombstones split out).
-    *
-    * The directory LISTING is driver-side (pure namespace I/O); footer
-    * OPENS are a distributed Spark job above [[DriverFooterLimit]] files —
-    * per-commit driver cost stays O(listing), not O(files × footer-read),
-    * the stat-collection shape that survives 1000-executor commits.
-    */
-  private def listCommitFiles(table: LakeTable, commitRel: String,
-      schemaId: Int, kind: String): List[FileEntry] = {
-    val commitDir = table.root.resolve(commitRel)
-    if (!Files.isDirectory(commitDir)) return Nil
-    // every Files.list stream is closed eagerly — this runs once per commit
-    // on a long-lived driver, and unclosed directory streams leak FDs
-    def ls(dir: java.nio.file.Path): List[java.nio.file.Path] = {
-      val s = Files.list(dir)
-      try s.iterator().asScala.toList finally s.close()
-    }
-    def parquets(dir: java.nio.file.Path) =
-      ls(dir).filter(_.getFileName.toString.endsWith(".parquet"))
-    // (bucket, Some(del) for a split file / None for a mixed one, uri, rel)
-    val paths = ls(commitDir)
-      .filter(_.getFileName.toString.startsWith("bkt="))
-      .flatMap { bdir =>
-        val b = bdir.getFileName.toString.stripPrefix("bkt=").toInt
-        val split = ls(bdir)
-          .filter(_.getFileName.toString.startsWith("del="))
-          .flatMap { ddir =>
-            val del = ddir.getFileName.toString.stripPrefix("del=").toBoolean
-            parquets(ddir).map(f => (b, Option(del), f))
-          }
-        split ++ parquets(bdir).map(f => (b, Option.empty[Boolean], f))
-      }.map { case (b, del, f) =>
-        (b, del, f.toUri.toString, table.root.relativize(f).toString)
-      }
-    val posCol = table.PosCol
-    val delCol = table.DelCol
-    def entry(b: Int, del: Option[Boolean], rel: String, stats: (Long, Long, Long)) =
-      FileEntry(b, rel, stats._1, schemaId, kind, del.getOrElse(false), stats._2,
-        delRows = if (del.isEmpty) stats._1 - stats._3 else -1L)
-    if (paths.size <= DriverFooterLimit) {
-      // small commit: footer reads in parallel on the driver beat a job round-trip
-      val conf = table.spark.sessionState.newHadoopConf()
-      paths.par.map { case (b, del, uri, rel) =>
-        entry(b, del, rel, readFooterStats(uri, posCol, delCol, conf))
-      }.toList
-    } else {
-      val sc = table.spark.sparkContext
-      val slices = math.min(paths.size, math.max(1, sc.defaultParallelism))
-      sc.parallelize(paths, slices).map { case (b, del, uri, rel) =>
-        // executor-side: fresh Hadoop conf (table roots are plain URIs)
-        (b, del, rel, readFooterStats(uri, posCol, delCol,
-          new org.apache.hadoop.conf.Configuration()))
-      }.collect().toList.map { case (b, del, rel, st) => entry(b, del, rel, st) }
-    }
-  }
+  /** Manifest entries of a write: one per (file, bucket) it wrote. */
+  private def entries(parts: Seq[WrittenPart], schemaId: Int, kind: String): List[FileEntry] =
+    parts.map(p => FileEntry(p.bucket, p.path, p.rows, schemaId, kind,
+      p.del.getOrElse(false), p.maxPos,
+      delRows = if (p.del.isEmpty) p.tombstones else -1L)).toList
 
-  /** (rowCount, max(posCol), nulls in delCol) from one parquet footer; the
-    * null count is 0 when the file has no `delCol`.
+  /** `buckets` widened, to a fixpoint, by every bucket that shares a data
+    * file with one of them.
     */
-  private def readFooterStats(uri: String, posCol: String, delCol: String,
-      conf: org.apache.hadoop.conf.Configuration): (Long, Long, Long) = {
-    val reader = ParquetFileReader.open(
-      HadoopInputFile.fromPath(new HPath(java.net.URI.create(uri)), conf))
-    try {
-      val blocks = reader.getFooter.getBlocks.asScala
-      val rows = blocks.map(_.getRowCount).sum
-      def chunks(name: String) = blocks.flatMap(_.getColumns.asScala
-        .filter(_.getPath.toDotString == name))
-      val maxPos = chunks(posCol)
-        .map(_.getStatistics)
-        .filter(s => s != null && s.hasNonNullValue)
-        .map(_.genericGetMax.asInstanceOf[Long]) match {
-        case s if s.nonEmpty => s.max
-        case _ => -1L
-      }
-      val delNulls = chunks(delCol).map { c =>
-        val st = c.getStatistics
-        if (st == null || !st.isNumNullsSet)
-          throw new IllegalStateException(s"$uri: footer of $delCol has no null count")
-        st.getNumNulls
-      }.sum
-      (rows, maxPos, delNulls)
-    } finally reader.close()
+  private def wholeFiles(files: Seq[FileEntry], buckets: Set[Int]): Set[Int] = {
+    val shared = files.groupBy(_.path).values.map(_.map(_.bucket).toSet).filter(_.size > 1)
+    var out = buckets
+    var grown = true
+    while (grown) {
+      val next = out ++ shared.filter(_.exists(out.contains)).flatten
+      grown = next.size > out.size
+      out = next
+    }
+    out
   }
 }

@@ -81,8 +81,8 @@ final class MetricsServer(tables: Map[String, LakeTable], port: Int = 0) {
       ms.map { case (n, m) => n -> m.lastEpoch })
     gauge("graft_last_offset", "applied change-log offset watermark",
       ms.map { case (n, m) => n -> m.lastOffset })
-    gauge("graft_data_files", "live data files in the manifest",
-      ms.map { case (n, m) => n -> m.files.size.toLong })
+    gauge("graft_data_files", "live data files (parquet files, not bucket entries)",
+      ms.map { case (n, m) => n -> m.dataFiles.toLong })
     gauge("graft_live_rows", "rows across live files (incl. unresolved deltas)",
       ms.map { case (n, m) => n -> m.files.map(_.rows).sum })
     gauge("graft_rows_upserted_total", "upserts recorded in retained lineage",
@@ -98,6 +98,6 @@ final class MetricsServer(tables: Map[String, LakeTable], port: Int = 0) {
     rows().map { case (n, m) =>
       s""""${esc(n)}":{"version":${m.version},"schemaId":${m.schemaId},""" +
         s""""lastEpoch":${m.lastEpoch},"lastOffset":${m.lastOffset},""" +
-        s""""files":${m.files.size},"rows":${m.files.map(_.rows).sum}}"""
+        s""""files":${m.dataFiles},"rows":${m.files.map(_.rows).sum}}"""
     }.mkString("{", ",", "}")
 }

@@ -11,10 +11,10 @@ import java.nio.file.{Files, Path}
 import java.nio.file.attribute.PosixFilePermissions
 import scala.jdk.CollectionConverters._
 
-/** The shape of a streamed MOR commit: one mixed (upserts + tombstones)
-  * delta file per touched bucket, lineage from footers, the table's change
-  * tail unchanged, and file modes as Hadoop's stock local filesystem sets
-  * them.
+/** The shape of a streamed MOR commit: mixed (upserts + tombstones) delta
+  * files, one per write task, with one manifest entry per touched bucket;
+  * lineage from the writer's per-bucket counts; the table's change tail
+  * unchanged; and file modes as Hadoop's stock local filesystem sets them.
   */
 class CommitShapeSpec extends SparkSpec {
   import Types._
@@ -53,6 +53,31 @@ class CommitShapeSpec extends SparkSpec {
     }
     assert(decoded.where($"_op" === OpDelete).count() > 0, "fixture has no deletes")
     assert(m.files.exists(_.tombstones > 0), "no tombstones reached the manifest")
+  }
+
+  test("each streamed MOR commit writes at most one file per write task and " +
+    "one manifest entry per touched bucket") {
+    val (_, table, _) = run
+    val m = table.refresh()
+    // 2,000-event triggers size the write at one task per bucket, capped by cores
+    val width = math.min(numBuckets, spark.sparkContext.defaultParallelism)
+    val merges = m.history.filter(_.operation.startsWith("merge-mor"))
+    assert(merges.nonEmpty)
+    merges.foreach { c =>
+      val added = table.addedFilesBetween(c.version - 1, c.version)
+      val paths = added.map(_.path).distinct
+      assert(paths.size <= width, s"v${c.version}: ${paths.size} files > width $width")
+      assert(added.size == added.map(_.bucket).distinct.size, s"v${c.version}: $added")
+      assert(added.map(_.bucket).toSet == m.lineage.filter(_.epoch == c.epoch).map(_.bucket).toSet)
+      // nothing else on disk under the commit's directory: no staging, no markers
+      val dir = table.root.resolve(paths.head).getParent
+      val s = Files.list(dir)
+      val onDisk = try s.iterator().asScala.map(_.getFileName.toString)
+        .filter(n => n.endsWith(".parquet") && !n.startsWith(".")).toSet finally s.close()
+      assert(paths.forall(_.startsWith(table.root.relativize(dir).toString)))
+      assert(onDisk == paths.map(p => table.root.resolve(p).getFileName.toString).toSet)
+    }
+    assert(m.files.size > m.dataFiles, "no delta file holds several buckets")
   }
 
   test("per-bucket lineage counts equal the applied events, per commit and " +

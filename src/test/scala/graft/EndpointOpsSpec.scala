@@ -121,6 +121,29 @@ class EndpointOpsSpec extends SparkSpec {
     } finally srv.stop()
   }
 
+  test("MetricsServer counts data files, not bucket entries, after a commit " +
+    "of shared delta files") {
+    val schema = StructType(Seq(StructField("k", StringType, nullable = false),
+      StructField("v", StringType)))
+    val t = LakeTable.create(spark, tmpDir("metrics-shared").resolve("t").toString,
+      schema, Seq("k"), Seq("k"), 8)
+    MergeInto.merge(t, (0 until 100).map(i => ("insert", i.toLong, s"k$i", "v"))
+      .toDF("_op", "_pos", "k", "v").withColumn("_event_ts", lit(null).cast("timestamp")), 0)
+    val m = t.refresh()
+    assert(m.dataFiles < m.files.size, s"no shared delta file: ${m.files}")
+    val srv = new MetricsServer(Map("t" -> t)).start()
+    try {
+      def get(path: String): String = {
+        val url = java.net.URI.create(s"http://127.0.0.1:${srv.boundPort}$path").toURL
+        val in = url.openStream()
+        try new String(in.readAllBytes(), "UTF-8") finally in.close()
+      }
+      assert(get("/metrics").contains(s"""graft_data_files{table="t"} ${m.dataFiles}\n"""))
+      assert(get("/metrics").contains("""graft_live_rows{table="t"} 100"""))
+      assert(get("/status").contains(s""""files":${m.dataFiles},"rows":100"""))
+    } finally srv.stop()
+  }
+
   test("MetricsServer escapes hostile table names; scrape errors answer 500") {
     val schema = StructType(Seq(StructField("k", StringType, nullable = false),
       StructField("v", StringType)))

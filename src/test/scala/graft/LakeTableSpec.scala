@@ -268,6 +268,54 @@ class LakeTableSpec extends SparkSpec {
     assert(MergeInto.merge(t, batch((OpInsert, 9L, "x", "x1")), 0).skipped)
   }
 
+  /** `n` inserts, then updates of every third key and deletes of every
+    * seventh, over 8 buckets: MOR commits whose delta files hold several
+    * buckets each.
+    */
+  private def sharedDeltaTable(prefix: String, n: Int = 120): LakeTable = {
+    val t = LakeTable.create(spark, tmpDir(prefix).resolve("t").toString,
+      schema, Seq("k"), Seq("k"), 8)
+    val ks = (0 until n).map(i => s"k$i")
+    MergeInto.merge(t, batch(ks.zipWithIndex.map { case (k, i) =>
+      (OpInsert, i.toLong, k, s"v$i") }: _*), 0)
+    MergeInto.merge(t, batch(ks.zipWithIndex.collect {
+      case (k, i) if i % 3 == 0 => (OpUpdate, n + i.toLong, k, s"u$i")
+      case (k, i) if i % 7 == 0 => (OpDelete, n + i.toLong, k, null)
+    }: _*), 1)
+    assert(t.meta.files.size > t.meta.dataFiles, s"no shared delta file: ${t.meta.files}")
+    t
+  }
+
+  test("snapshotForBuckets over shared delta files == full snapshot filtered " +
+    "to those buckets") {
+    val t = sharedDeltaTable("lt-shared")
+    val m = t.meta
+    val full = t.snapshotWithMeta(m).withColumn("_b", t.bucketExpr(m.numBuckets, m.bucketCols))
+    def rowsOf(df: DataFrame) = df.collect().map(_.toSeq).toSet
+    for (s <- Seq(Set(0), Set(1, 5), Set(2, 3, 4, 6, 7), (0 until 8).toSet)) {
+      val want = rowsOf(full.where(col("_b").isin(s.toSeq: _*)).drop("_b"))
+      assert(rowsOf(t.snapshotForBuckets(m, s)) == want, s"buckets $s")
+    }
+  }
+
+  test("refresh sees another instance's commits, and takes the cold fold " +
+    "after a vacuum cut past its cached version") {
+    val dir = tmpDir("lt-refresh").resolve("t").toString
+    val writer = LakeTable.create(spark, dir, schema, Seq("k"), Seq("k"), 4)
+    val reader = LakeTable.load(spark, dir)
+    MergeInto.merge(writer, batch((OpInsert, 1L, "a", "a1")), 0)
+    MergeInto.merge(writer, batch((OpInsert, 2L, "b", "b1")), 1)
+    assert(reader.refresh() == writer.meta)
+    assert(reader.refresh() == writer.meta) // no newer segment: cache current
+    val cached = reader.meta.version
+    MergeInto.merge(writer, batch((OpUpdate, 3L, "a", "a2")), 2)
+    MergeInto.merge(writer, batch((OpDelete, 4L, "b", null)), 3)
+    writer.vacuum(keepVersions = 1)
+    assert(!Files.exists(Paths.get(dir, "meta", f"v$cached%08d.json")))
+    assert(reader.refresh() == writer.refresh())
+    assert(state(reader.snapshot()) == Map("a" -> "a2"))
+  }
+
   test("wildcard table expansion (S6): regex match, lone-* rejected") {
     import graft.sources.Tables
     val names = Tables.expandDir("/root/testdata/sf0.001", "^(nation|region)$")

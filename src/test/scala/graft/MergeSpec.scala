@@ -2,7 +2,7 @@ package graft
 
 import graft.core.Types
 import graft.lake.LakeTable
-import graft.merge.MergeInto
+import graft.merge.{MergeInto, SinkOpState}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -170,6 +170,118 @@ class MergeSpec extends SparkSpec {
       .map(r => r.getAs[String]("k") -> (r.getAs[String]("_op"), r.getAs[String]("v"))).toMap
     assert(winners("a") == ("update", "late-ts"))
     assert(winners("b")._1 == "delete") // delete outranks insert at equal (pos, ts)
+  }
+
+  test("MOR merges, then a COW merge on a subset of buckets: state equals the " +
+    "oracle and no data file loses only some of its bucket entries") {
+    import spark.implicits._
+    val t = LakeTable.create(spark, tmpDir("graft-merge-mixed").resolve("t").toString,
+      schema, Seq("k"), Seq("k"), 8)
+    val rnd = new scala.util.Random(17)
+    val oracle = scala.collection.mutable.Map.empty[String, String]
+    var pos = 0L
+    def event(k: String, op: String): (String, Long, String, String) = {
+      pos += 1
+      if (op == OpDelete) { oracle -= k; (op, pos, k, null) }
+      else { oracle(k) = s"v$pos"; (op, pos, k, s"v$pos") }
+    }
+    def randomBatch(n: Int) = batch(Seq.fill(n) {
+      val k = s"k${rnd.nextInt(60)}"
+      event(k, Seq(OpInsert, OpUpdate, OpUpdate, OpDelete)(rnd.nextInt(4)))
+    }: _*)
+    (0 until 3).foreach(e => MergeInto.merge(t, randomBatch(80), e))
+    val before = t.refresh()
+    val shared = before.files.groupBy(_.path).filter(_._2.size > 1)
+    assert(shared.nonEmpty, s"no shared delta file: ${before.files}")
+
+    // COW batch on ONE bucket that shares a delta file with other buckets
+    val b0 = shared.head._2.head.bucket
+    val inB0 = (0 until 200).map(i => s"k$i").toDF("k")
+      .where(t.bucketExpr(8, Seq("k")) === b0).as[String].collect().toSeq
+    val (old, fresh) = inB0.partition(oracle.contains)
+    assert(old.nonEmpty && fresh.nonEmpty, s"bucket $b0 keys: $inB0")
+    val cowEvents = Seq(event(old.head, OpUpdate), event(fresh.head, OpInsert)) ++
+      old.drop(1).take(1).map(event(_, OpDelete))
+    MergeInto.merge(t, batch(cowEvents: _*), 3, mode = "cow")
+    assert(state(t) == oracle.toMap)
+    val after = t.refresh()
+    val afterByPath = after.files.groupBy(_.path)
+    before.files.groupBy(_.path).foreach { case (p, es) =>
+      afterByPath.get(p).foreach(now => assert(now.toSet == es.toSet, s"$p lost entries"))
+    }
+    assert(!afterByPath.contains(shared.head._1), "the shared file of the COW bucket stayed")
+
+    // MOR on top of the rewrite, and a commit that drops one entry of a
+    // shared file fails loudly
+    MergeInto.merge(t, randomBatch(80), 4)
+    assert(state(t) == oracle.toMap)
+    val partOfShared = t.refresh().files.groupBy(_.path).values.find(_.size > 1).get.head
+    intercept[IllegalArgumentException](t.commitAtomic(l => l.copy(
+      version = l.version + 1, files = l.files.filterNot(_ == partOfShared))))
+  }
+
+  test("a merge whose write job throws commits nothing; one that fails after " +
+    "its write leaves only orphans; the retry commits once and vacuum reaps them") {
+    val t = mkTable("retry")
+    MergeInto.merge(t, batch((OpInsert, 1L, "a", "a1")), 0)
+    val v0 = t.meta.version
+    val good = batch((OpUpdate, 2L, "a", "a2"), (OpInsert, 3L, "b", "b1"),
+      (OpInsert, 4L, "c", "c1"))
+    val poison = good.withColumn("v",
+      when(col("k") === "b", raise_error(lit("poison row"))).otherwise(col("v")))
+    intercept[Exception](MergeInto.merge(t, poison, 1))
+    assert(t.refresh().version == v0)
+    // written, then refused at commit: the batch names a schema the registry lacks
+    intercept[IllegalStateException](
+      MergeInto.merge(t, good.withColumn("_schema_id", lit(1)), 1))
+    assert(t.refresh().version == v0)
+    def onDisk(): Set[java.nio.file.Path] = {
+      val w = java.nio.file.Files.walk(t.dataDir)
+      try scala.jdk.CollectionConverters.IteratorHasAsScala(w.iterator()).asScala
+        .filter(_.getFileName.toString.endsWith(".parquet")).toSet
+      finally w.close()
+    }
+    def live() = t.refresh().files.map(f => t.root.resolve(f.path)).toSet
+    val orphans = onDisk() -- live()
+    assert(orphans.nonEmpty, "the refused commit wrote no file")
+
+    assert(!MergeInto.merge(t, good, 1).skipped)
+    assert(t.refresh().version == v0 + 1)
+    assert(t.meta.history.count(_.epoch == 1) == 1)
+    assert(state(t) == Map("a" -> "a2", "b" -> "b1", "c" -> "c1"))
+    Thread.sleep(20)
+    val (_, removed) = t.vacuum(keepVersions = 100, orphanGraceMs = 0)
+    assert(removed == orphans.size)
+    assert(onDisk() == live())
+    assert(orphans.forall(p => !java.nio.file.Files.exists(
+      p.resolveSibling(s".${p.getFileName}.crc"))), "an orphan's .crc stayed")
+    assert(state(t) == Map("a" -> "a2", "b" -> "b1", "c" -> "c1"))
+  }
+
+  test("a SinkOpState-shaped table (non-nullable columns) round-trips " +
+    "tombstones through MOR, compaction and COW") {
+    import spark.implicits._
+    val t = SinkOpState.createOrLoad(spark,
+      tmpDir("graft-merge-state").resolve("state").toString, numBuckets = 4)
+    def ops(rows: (String, Long, String, String)*) =
+      rows.toDF("_op", "_pos", "key", "value").select(col("_op"), col("_pos"),
+        lit(null).cast("timestamp").as("_event_ts"), lit("redis").as("target"),
+        lit("string").as("structure"), col("key"), lit("").as("field"),
+        lit("").as("elem"), lit("").as("uid"), col("value"),
+        lit(null).cast("double").as("score"), col("_pos").as("ord"),
+        lit(false).as("marker"))
+    def live = SinkOpState.liveState(t).select("key", "value").as[(String, String)]
+      .collect().toMap
+    MergeInto.merge(t, ops((OpInsert, 1L, "a", "1"), (OpInsert, 2L, "b", "2"),
+      (OpInsert, 3L, "c", "3")), 0)
+    MergeInto.merge(t, ops((OpDelete, 4L, "a", null), (OpUpdate, 5L, "b", "5")), 1)
+    assert(live == Map("b" -> "5", "c" -> "3"))
+    assert(live == Map("b" -> "5", "c" -> "3")) // a second read of the same files
+    MergeInto.compact(t)
+    assert(live == Map("b" -> "5", "c" -> "3"))
+    MergeInto.merge(t, ops((OpDelete, 6L, "c", null)), 2, mode = "cow")
+    MergeInto.merge(t, ops((OpInsert, 7L, "a", "7")), 3)
+    assert(live == Map("a" -> "7", "b" -> "5"))
   }
 
   test("bootstrap then stream: changes supersede the snapshot (stock handoff)") {
