@@ -32,10 +32,14 @@ object Bench {
     else java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
   }
 
-  private def session(cores: Int): SparkSession = {
+  /** The benchmark session at `local[cores]` (also [[BenchExtra]]'s);
+    * under `GRAFT_TIMING` it logs stages slower than `slowStageSecs`.
+    */
+  private[graft] def session(cores: Int, app: String = "graft-bench",
+      slowStageSecs: Double = 0.3): SparkSession = {
     val s = SparkSession.builder()
       .master(s"local[$cores]")
-      .appName(s"graft-bench-$cores")
+      .appName(s"$app-$cores")
       .config("spark.sql.shuffle.partitions", cores)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
@@ -56,17 +60,16 @@ object Bench {
       .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "10000")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
-    if (sys.env.contains("GRAFT_TIMING")) {
+    if (graft.core.Timing.enabled)
       s.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
         override def onStageCompleted(
             sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
           val i = sc.stageInfo
           val secs = (i.completionTime.getOrElse(0L) - i.submissionTime.getOrElse(0L)) / 1e3
-          if (secs > 0.3)
+          if (secs > slowStageSecs)
             System.err.println(f"[stage] ${i.stageId}%4d ${i.numTasks}%4d tasks $secs%7.2fs  ${i.name.take(90)}")
         }
       })
-    }
     s
   }
 
@@ -145,16 +148,11 @@ object Bench {
     val skipQueries = sys.env.contains("SPARK_GRAFT_BENCH_SKIP_QUERIES")
     val repeats = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPEATS", "3").toInt
     // clear stale RAM scratch from previous killed runs before allocating
-    import scala.jdk.CollectionConverters._
-    locally {
-      val s = java.nio.file.Files.list(scratchRoot)
-      try s.iterator().asScala
-        .filter(p => p.getFileName.toString.startsWith("graft_bench") ||
-          p.getFileName.toString.startsWith("graft_replay") || // q01's table scratch
-          p.getFileName.toString.startsWith("graft-spark-local"))
-        .toList.foreach(ChangelogGenerator.deleteRecursively)
-      finally s.close()
-    }
+    ChangelogGenerator.children(scratchRoot)
+      .filter(p => p.getFileName.toString.startsWith("graft_bench") ||
+        p.getFileName.toString.startsWith("graft_replay") || // q01's table scratch
+        p.getFileName.toString.startsWith("graft-spark-local"))
+      .foreach(ChangelogGenerator.deleteRecursively)
     val work = java.nio.file.Files.createTempDirectory(scratchRoot, "graft_bench")
     sys.addShutdownHook { // RAM-backed scratch must not outlive the run
       ChangelogGenerator.deleteRecursively(work)
@@ -186,11 +184,9 @@ object Bench {
     // bulk micro-batches: CDC catch-up shape; per-batch size is the
     // bulk_size analog (reference: global/config.go:54) scaled to Spark
     val chunksPerBatch = sys.env.getOrElse("SPARK_GRAFT_BENCH_TRIGGER_CHUNKS", "16").toInt
-    def lsSorted(dir: String): Seq[String] = {
-      val st = java.nio.file.Files.list(java.nio.file.Paths.get(dir))
-      try st.iterator().asScala.map(_.toString).filter(_.endsWith(".parquet")).toSeq.sorted
-      finally st.close()
-    }
+    def lsSorted(dir: String): Seq[String] =
+      ChangelogGenerator.children(java.nio.file.Paths.get(dir))
+        .map(_.toString).filter(_.endsWith(".parquet")).sorted
     def logFilesSorted(s: SparkSession): Seq[Seq[String]] =
       lsSorted(log).grouped(chunksPerBatch * spec.filesPerChunk).toSeq
     def applyAll(s: SparkSession, tableDir: String, logDir: String,

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Optimization-round helper bench (guide §1): times INDIVIDUAL catalog
   * queries with repeats, optionally dumps `.explain("formatted")` plans.
   * Methodology mirrors [[Bench]]'s query section exactly (same session conf,
@@ -17,42 +15,13 @@ import org.apache.spark.sql.SparkSession
   */
 object BenchExtra {
 
-  private def session(cores: Int): SparkSession = {
-    val s = SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName(s"graft-benchx-$cores")
-      .config("spark.sql.shuffle.partitions", cores)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir", s"${Bench.scratchRoot}/graft-spark-local")
-      .config("spark.sql.files.maxPartitionBytes", s"${8 * 1024 * 1024}")
-      .config("spark.sql.files.openCostInBytes", s"${1024 * 1024}")
-      .config("spark.io.compression.codec", "zstd")
-      .config("spark.sql.parquet.compression.codec", "zstd")
-      .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "10000")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    if (sys.env.contains("GRAFT_TIMING")) {
-      s.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-        override def onStageCompleted(
-            sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-          val i = sc.stageInfo
-          val secs = (i.completionTime.getOrElse(0L) - i.submissionTime.getOrElse(0L)) / 1e3
-          if (secs > 0.15)
-            System.err.println(f"[stage] ${i.stageId}%4d ${i.numTasks}%4d tasks $secs%7.2fs  ${i.name.take(90)}")
-        }
-      })
-    }
-    s
-  }
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val repeats = sys.env.getOrElse("SPARK_GRAFT_BENCHX_REPEATS", "3").toInt
     val only = sys.env.get("SPARK_GRAFT_BENCHX_QUERIES")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     val planDir = sys.env.get("SPARK_GRAFT_BENCHX_PLANS")
-    val spark = session(32)
+    val spark = Bench.session(32, app = "graft-benchx", slowStageSecs = 0.15)
 
     // untimed JIT/codegen warmup (same as Bench)
     val warmSf = "/root/testdata/sf0.001"

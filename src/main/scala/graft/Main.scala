@@ -93,7 +93,8 @@ object Main {
     case "changefeed" :: log :: outDir :: cp :: _ =>
       graft.streaming.ChangefeedSink.runToCompletion(spark,
         CdcPipeline.Config(log, cp), outDir, reserveRawData = true)
-      println(s"changefeed: ${spark.read.parquet(outDir).count()} messages at $outDir")
+      println(s"changefeed: ${graft.streaming.ConfigPipeline.readFeed(spark, outDir).count()} " +
+        s"messages at $outDir")
 
     // manual position override — the analog of the reference's
     // `-position file pos` mode (main.go:103-119); same caveat: operator

@@ -91,11 +91,7 @@ object QueryCatalog {
       val tmp = newScratch("graft_replay")
       val table = LakeTable.create(s, s"$tmp/table", tableSchema,
         keyCols = Seq("user_id", "slot"), bucketCols = Seq("user_id"), numBuckets = 16)
-      def timed[T](tag: String)(f: => T): T =
-        if (!sys.env.contains("GRAFT_TIMING")) f else {
-          val t0 = System.nanoTime(); val r = f
-          System.err.println(f"[timing] q01-$tag ${(System.nanoTime() - t0) / 1e9}%.3fs"); r
-        }
+      def timed[T](tag: String)(f: => T): T = graft.core.Timing.timed(s"q01-$tag")(f)
       // _pos IS event_id, so the batching bound comes from a bare column-
       // pruned parquet scan instead of forcing the cached projection through
       // a dedicated materialization pass (the cache fills during epoch 0's

@@ -32,41 +32,30 @@ object ChangelogCodec {
     * missing columns parse to null, widened types parse wide), carrying the
     * per-event `_schema_id` through so the merge can evolve the table from
     * the observed watermark without a separate scan.
-    */
-  def decode(wire: DataFrame, schema: StructType): DataFrame = {
-    // pick the image string first, parse ONCE (JSON parse dominates decode CPU)
-    val img = from_json(
-      when(col("op") === OpDelete, col("before")).otherwise(col("after")), schema)
-    wire.select(
-      col("op").as("_op"),
-      col("pos").as("_pos"),
-      col("ts").as("_event_ts"),
-      col("schema_id").as("_schema_id"),
-      img.as("_img")
-    ).select(col("_op"), col("_pos"), col("_event_ts"), col("_schema_id"), col("_img.*"))
-  }
-
-  /** [[decode]] plus a `_before` struct column carrying the BEFORE image —
+    *
+    * With `withBefore`, a `_before` struct column carries the BEFORE image —
     * parsed ONLY for updates (null otherwise), because that is the only op
     * whose old image any consumer reads: the changefeed's `reserve_raw_data`
     * emits `raw` = old row iff action == update (reference:
     * service/endpoint/kafka.go:216-218, endpoint.go:284-306 oldRowMap reads
-    * `req.Old`). The merge path stays on [[decode]] — one parse per event.
+    * `req.Old`). The merge path decodes without it — one parse per event.
     */
-  def decodeWithBefore(wire: DataFrame, schema: StructType): DataFrame = {
+  def decode(wire: DataFrame, schema: StructType, withBefore: Boolean = false): DataFrame = {
+    // pick the image string first, parse ONCE (JSON parse dominates decode CPU)
     val img = from_json(
       when(col("op") === OpDelete, col("before")).otherwise(col("after")), schema)
-    val old = from_json(when(col("op") === OpUpdate, col("before")), schema)
-    wire.select(
-      col("op").as("_op"),
-      col("pos").as("_pos"),
-      col("ts").as("_event_ts"),
-      col("schema_id").as("_schema_id"),
-      old.as("_before"),
-      img.as("_img")
-    ).select(col("_op"), col("_pos"), col("_event_ts"), col("_schema_id"),
-      col("_before"), col("_img.*"))
+    val meta = Seq(col("op").as("_op"), col("pos").as("_pos"), col("ts").as("_event_ts"),
+      col("schema_id").as("_schema_id")) ++
+      (if (withBefore) Seq(from_json(when(col("op") === OpUpdate, col("before")), schema)
+        .as(BeforeCol)) else Nil)
+    wire.select(meta :+ img.as("_img"): _*)
+      .select((MetaCols ++ (if (withBefore) Seq(BeforeCol) else Nil)).map(col) :+
+        col("_img.*"): _*)
   }
+
+  /** [[decode]] with the `_before` image. */
+  def decodeWithBefore(wire: DataFrame, schema: StructType): DataFrame =
+    decode(wire, schema, withBefore = true)
 
   /** Decode a STANDARD CDC envelope — the Debezium/Maxwell-style JSON wire
     * shape (`op: c/u/d/r`, `before`, `after`, `ts_ms`, `source{file,pos,lsn,

@@ -169,20 +169,15 @@ object ChangelogGenerator {
 
     // Flatten chunk=*/part-*.parquet → c<chunk>-<part>.parquet with ascending
     // modification times so the streaming file source replays in order.
-    // (directory streams closed eagerly — same FD discipline as MergeInto's
-    // commit listings; at the 10^10-event regime this loop visits a lot of
-    // chunk dirs on one driver)
-    def ls(dir: Path): Seq[Path] = {
-      val s = Files.list(dir)
-      try s.iterator().asScala.toSeq finally s.close()
-    }
-    val chunkDirs = ls(staging)
+    // (directory streams closed eagerly — at the 10^10-event regime this
+    // loop visits a lot of chunk dirs on one driver)
+    val chunkDirs = children(staging)
       .filter(p => p.getFileName.toString.startsWith("chunk="))
       .sortBy(_.getFileName.toString)
     var t = System.currentTimeMillis() - chunkDirs.size * 2000L - 10000L
     chunkDirs.foreach { cd =>
       val chunk = cd.getFileName.toString.stripPrefix("chunk=")
-      ls(cd)
+      children(cd)
         .filter(_.getFileName.toString.endsWith(".parquet"))
         .sortBy(_.getFileName.toString).foreach { f =>
           val dest = out.resolve(s"$chunk-${f.getFileName}")
@@ -193,6 +188,16 @@ object ChangelogGenerator {
     }
     deleteRecursively(staging)
   }
+
+  /** The entries of directory `dir`, its stream closed eagerly; none when
+    * `dir` does not exist.
+    */
+  def children(dir: Path): Seq[Path] =
+    if (!Files.isDirectory(dir)) Nil
+    else {
+      val s = Files.list(dir)
+      try s.iterator().asScala.toVector finally s.close()
+    }
 
   def deleteRecursively(p: Path): Unit = {
     if (Files.exists(p)) {

@@ -282,30 +282,27 @@ final class LakeTable private (val root: Path, val spark: SparkSession) {
     // group by (written schema, where the tombstone flag lives): each scan
     // uses exactly the schema its footers carry; a split file's flag
     // re-attaches from the manifest, a mixed file's comes from its column
-    val t0 = System.nanoTime()
-    val foreign = if (buckets == null) Set.empty[String]
-      else m.files.iterator.filterNot(f => buckets.contains(f.bucket)).map(_.path).toSet
-    val out = files.groupBy(f => (f.schemaId, f.del, f.storesDel, foreign.contains(f.path))).map {
-      case ((sid, del, storesDel, shared), group) =>
-        val stored = StructType(m.schemaFor(sid).fields ++
-          Seq(StructField(PosCol, LongType), StructField(TsCol, TimestampType)) ++
-          (if (storesDel) Seq(StructField(DelCol, BooleanType)) else Nil))
-        val storedNames = stored.fieldNames.toSet
-        val paths = group.map(f => root.resolve(f.path).toString)
-        val delFlag = if (storesDel) coalesce(col(DelCol), lit(false)) else lit(del)
-        val scan = spark.read.schema(stored).parquet(paths: _*)
-        // a row's bucket is hashed from its columns as stored
-        (if (shared) scan.where(bucketExpr(m.numBuckets, m.bucketCols).isin(buckets.toSeq: _*))
-         else scan)
-          .select((target.map { case (n, dt) =>
-            if (storedNames.contains(n)) col(n).cast(dt).as(n)
-            else lit(null).cast(dt).as(n)
-          } ++ Seq(col(PosCol), col(TsCol), delFlag.as(DelCol))): _*)
-    }.reduce(_ unionAll _)
-    if (sys.env.contains("GRAFT_TIMING"))
-      System.err.println(f"[timing] readAligned(${files.size} files) " +
-        f"${(System.nanoTime() - t0) / 1e9}%.3fs")
-    out
+    graft.core.Timing.timed(s"readAligned(${files.size} files)") {
+      val foreign = if (buckets == null) Set.empty[String]
+        else m.files.iterator.filterNot(f => buckets.contains(f.bucket)).map(_.path).toSet
+      files.groupBy(f => (f.schemaId, f.del, f.storesDel, foreign.contains(f.path))).map {
+        case ((sid, del, storesDel, shared), group) =>
+          val stored = StructType(m.schemaFor(sid).fields ++
+            Seq(StructField(PosCol, LongType), StructField(TsCol, TimestampType)) ++
+            (if (storesDel) Seq(StructField(DelCol, BooleanType)) else Nil))
+          val storedNames = stored.fieldNames.toSet
+          val paths = group.map(f => root.resolve(f.path).toString)
+          val delFlag = if (storesDel) coalesce(col(DelCol), lit(false)) else lit(del)
+          val scan = spark.read.schema(stored).parquet(paths: _*)
+          // a row's bucket is hashed from its columns as stored
+          (if (shared) scan.where(bucketExpr(m.numBuckets, m.bucketCols).isin(buckets.toSeq: _*))
+           else scan)
+            .select((target.map { case (n, dt) =>
+              if (storedNames.contains(n)) col(n).cast(dt).as(n)
+              else lit(null).cast(dt).as(n)
+            } ++ Seq(col(PosCol), col(TsCol), delFlag.as(DelCol))): _*)
+      }.reduce(_ unionAll _)
+    }
   }
 
   /** Lineage as a queryable DataFrame (C5 analog: the reference's web-admin
@@ -588,13 +585,8 @@ object LakeTable {
   def load(spark: SparkSession, dir: String): LakeTable =
     new LakeTable(Paths.get(dir), spark)
 
-  def exists(dir: String): Boolean = {
-    val metaDir = Paths.get(dir).resolve("meta")
-    if (!Files.isDirectory(metaDir)) return false
-    val s = Files.list(metaDir)
-    try s.iterator().asScala.exists(_.getFileName.toString.matches("v\\d{8,}\\.json"))
-    finally s.close()
-  }
+  def exists(dir: String): Boolean =
+    Files.isDirectory(Paths.get(dir, "meta")) && listVersions(Paths.get(dir)).nonEmpty
 
   private[lake] def listVersions(root: Path): Seq[Int] = {
     val metaDir = root.resolve("meta")

@@ -1,6 +1,6 @@
 package graft.merge
 
-import graft.core.Types
+import graft.core.{Timing, Types}
 import graft.lake.{CommitInfo, FileEntry, LakeTable, LineageEntry, TableMeta, TableWriter, WrittenPart}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -63,17 +63,6 @@ final case class MergeResult(epoch: Long, skipped: Boolean,
   */
 object MergeInto {
   import Types._
-
-  private val debugTiming = sys.env.contains("GRAFT_TIMING")
-  private def timed[T](tag: String)(f: => T): T = {
-    if (!debugTiming) f
-    else {
-      val t0 = System.nanoTime()
-      val r = f
-      System.err.println(f"[timing]   $tag ${(System.nanoTime() - t0) / 1e9}%.3fs")
-      r
-    }
-  }
 
   /** Broadcast the batch key set below this many deduped rows (COW path). */
   val BroadcastKeyLimit = 4000000L
@@ -252,7 +241,7 @@ object MergeInto {
     // write task; the tasks count the commit's stats while writing.
     val morWidth = writePartitions(table, m0.numBuckets, rowsHint)
     val commitRel = s"data/${UUID.randomUUID().toString.take(12)}"
-    val parts = timed("mor-write") {
+    val parts = Timing.timed("  mor-write") {
       val stored = dedup.select(
           (fileSchema.fields.map { f =>
             val base =
@@ -424,7 +413,7 @@ object MergeInto {
         .withColumn(TableWriter.BucketCol, bucket)
 
       val commitRel = s"data/${UUID.randomUUID().toString.take(12)}"
-      val parts = timed("cow-write")(TableWriter.write(table, finalRows
+      val parts = Timing.timed("  cow-write")(TableWriter.write(table, finalRows
         .repartition(rewrite.size, col(TableWriter.BucketCol))
         .sortWithinPartitions(TableWriter.BucketCol, TableWriter.SplitDelCol), commitRel))
       val newFiles = entries(parts, m.schemaId, "base")
@@ -502,7 +491,7 @@ object MergeInto {
     // rows being rewritten are known from the manifest — size the exchange
     val totalRows = inputs.toSeq.map(_.rows).sum
     val cWidth = writePartitions(table, m.numBuckets, totalRows)
-    val parts = timed("compact-write")(TableWriter.write(table, resolved
+    val parts = Timing.timed("  compact-write")(TableWriter.write(table, resolved
       .repartition(cWidth, col(TableWriter.BucketCol), writeSalt(table, cWidth, m.numBuckets))
       .sortWithinPartitions(TableWriter.BucketCol, TableWriter.SplitDelCol), commitRel))
     val newFiles = entries(parts, m.schemaId, "base")
@@ -562,14 +551,6 @@ object MergeInto {
   def awaitCompaction(): Unit = { while (!compacting.isEmpty) Thread.sleep(50) }
   def awaitCompaction(table: LakeTable): Unit =
     while (compacting.containsKey(table.root.toString)) Thread.sleep(50)
-
-  /** Delta-vs-base row ratio (compaction trigger input). */
-  def deltaRatio(table: LakeTable): Double = {
-    val m = table.meta
-    val d = m.files.filter(_.kind == "delta").map(_.rows).sum.toDouble
-    val b = m.files.filter(_.kind == "base").map(_.rows).sum.toDouble
-    if (b == 0) (if (d > 0) Double.MaxValue else 0.0) else d / b
-  }
 
   /** Manifest entries of a write: one per (file, bucket) it wrote. */
   private def entries(parts: Seq[WrittenPart], schemaId: Int, kind: String): List[FileEntry] =

@@ -1,5 +1,6 @@
 package graft.merge
 
+import graft.core.Timing
 import graft.core.Types.{OpDelete, OpInsert}
 import graft.lake.LakeTable
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -235,17 +236,6 @@ object SinkOpState {
     * ord — ord monotone across batches) to the state table, exactly-once via
     * the engine's (pipelineId, epoch) fence. foreachBatch-ready.
     */
-  private val debugTiming = sys.env.contains("GRAFT_TIMING")
-  private def timed[T](tag: String)(f: => T): T = {
-    if (!debugTiming) f
-    else {
-      val t0 = System.nanoTime()
-      val r = f
-      System.err.println(f"[timing]   sinkop-$tag ${(System.nanoTime() - t0) / 1e9}%.3fs")
-      r
-    }
-  }
-
   def applyBatch(table: LakeTable, batchOps: DataFrame, epoch: Long,
       pipelineId: String = "", allowTakeover: Boolean = false): MergeResult = {
     val prepped = normalize(batchOps)
@@ -262,7 +252,7 @@ object SinkOpState {
       // width and a small batch through a 128-partition exchange shatters
       // into ~256 near-empty files per commit (the round-2 q01 lesson).
       val ident = Seq("target", "structure", "key", "field", "elem")
-      val identStats = timed("touched")(
+      val identStats = Timing.timed("  sinkop-touched")(
         prepped.groupBy(ident.map(col): _*).agg(count(lit(1)).as("_n")).collect())
       val nOps = identStats.iterator.map(_.getLong(5)).sum
       import scala.jdk.CollectionConverters._
@@ -292,7 +282,7 @@ object SinkOpState {
           .withColumn("_event_ts", lit(null).cast("timestamp"))
           .select(Seq(col("_op"), col("_pos"), col("_event_ts")) ++
             StateSchema.fieldNames.toSeq.map(col): _*)
-        return timed("merge")(MergeInto.merge(table, changes, epoch,
+        return Timing.timed("  sinkop-merge")(MergeInto.merge(table, changes, epoch,
           pipelineId = pipelineId, allowTakeover = allowTakeover,
           rowsHint = 2 * nOps))
       }
@@ -326,7 +316,7 @@ object SinkOpState {
           .select(Seq(col("_op"), col("_pos"), col("_event_ts")) ++
             KeyCols.map(col) ++ payload.map(p =>
               col(s"_n_$p").as(p)): _*)
-        timed("merge")(MergeInto.merge(table, changes, epoch,
+        Timing.timed("  sinkop-merge")(MergeInto.merge(table, changes, epoch,
           pipelineId = pipelineId, allowTakeover = allowTakeover,
           rowsHint = 2 * nOps))
       } finally { old.unpersist(); () }

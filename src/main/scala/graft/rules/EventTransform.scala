@@ -37,6 +37,12 @@ object EventTransform {
 
   /** Ops-per-event cap in [[runOrdered]]'s ord encoding (4 bits). */
   val MaxOpsPerEvent = 16
+  /** Largest |pos| whose `pos * MaxOpsPerEvent + i` ord does not wrap; both
+    * transforms raise [[OrdOverflow]] past it.
+    */
+  val OrdBound: Long = Long.MaxValue / MaxOpsPerEvent
+  val OrdOverflow: String =
+    s"runOrdered: |_pos| > $OrdBound overflows the ord encoding (_pos*16+i)"
 
   /** [[run]] with a TOTAL op order attached, for structure-level application
     * ([[graft.merge.SinkOpState]]): input events carry their stream position;
@@ -49,12 +55,9 @@ object EventTransform {
     */
   def runOrdered[T](ds: Dataset[(Long, T)], t: EventTransform[T]): DataFrame = {
     val enc = Encoders.product[(String, String, String, String, Double, String, Long)]
-    val ordBound = Long.MaxValue / MaxOpsPerEvent
     ds.flatMap { case (pos, e) =>
-      // same bound and message as ExprTransform.runOrdered: pos·16 wraps
-      // past it and would silently reorder the op stream
-      require(pos >= -ordBound && pos <= ordBound,
-        s"runOrdered: |_pos| > $ordBound overflows the ord encoding (_pos*16+i)")
+      // pos·16 wraps past the bound and would silently reorder the op stream
+      require(pos >= -OrdBound && pos <= OrdBound, OrdOverflow)
       t(e).zipWithIndex.map { case (op, i) =>
         require(i < MaxOpsPerEvent,
           s"runOrdered: more than $MaxOpsPerEvent ops from one event")

@@ -2,8 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import java.nio.file.{Files, Paths}
-import scala.jdk.CollectionConverters._
+import java.nio.file.Paths
 
 /** S6: wildcard table expansion — the reference resolves regex table names
   * against `information_schema.tables` with RLIKE
@@ -30,14 +29,10 @@ object Tables {
     */
   def expandDir(dir: String, pattern: String): Seq[String] = {
     guard(pattern)
-    val p = Paths.get(dir)
-    if (!Files.isDirectory(p)) return Nil
-    val s = Files.list(p)
-    try s.iterator().asScala
+    graft.changelog.ChangelogGenerator.children(Paths.get(dir))
       .map(_.getFileName.toString)
       .collect { case n if n.endsWith(".parquet") => n.stripSuffix(".parquet") }
-      .filter(_.matches(pattern)).toSeq.sorted
-    finally s.close()
+      .filter(_.matches(pattern)).sorted
   }
 
   /** Read every matching table, tagged with its name — the multi-table

@@ -1,9 +1,9 @@
 package graft.streaming
 
 import graft.changelog.ChangelogCodec
-import graft.core.Types
+import graft.core.{Timing, Types}
 import graft.lake.LakeTable
-import graft.merge.{MergeInto, MergeResult}
+import graft.merge.{MergeInto, MergeResult, SinkOpState}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -104,58 +104,193 @@ object CdcPipeline {
     }
   }
 
+  /** Where a route's rows go: MERGE into a lake table, whose `registry`
+    * (schema_id → table shape) evolves it in-commit from the batch's
+    * `_schema_id` watermark; or a changefeed's `epoch=N` dirs
+    * ([[ConfigPipeline.writeFeed]]) — with `state`, an ordered op stream that
+    * also folds into that [[SinkOpState]] table — folded every `foldEvery`
+    * batches (0 = never) down to the newest `retainEpochs` dirs.
+    */
+  private[streaming] sealed trait Sink
+  private[streaming] final case class Lake(table: LakeTable,
+      registry: Map[Int, StructType]) extends Sink
+  private[streaming] final case class Feed(outDir: String, state: LakeTable = null,
+      foldEvery: Long = 0L, retainEpochs: Int = 8) extends Sink
+  /** One route: its rows of the decoded batch, and their sink. */
+  private[streaming] final case class Route(name: String,
+      rows: DataFrame => DataFrame, sink: Sink)
+
+  /** What a stream reads and where each of its batches goes: every
+    * pipeline front-end is one of these, run by [[run]].
+    */
+  private[streaming] final case class Plan(
+      routes: Seq[Route],
+      discover: DataFrame => Seq[Route] = null, // more routes, found per batch
+      wireFormat: String = "graft", // see GraftConfig.wireFormat
+      tableStartVersion: Int = 1,
+      withBefore: Boolean = false, // decode the before image
+      // the single-table entry's `[timing] applyBatch(<epoch>)` and `merge`
+      timed: Boolean = false)
+
+  private def single(table: LakeTable, cfg: Config): Plan =
+    Plan(Seq(Route(table.root.toString, identity, Lake(table, cfg.registry))), timed = true)
+
   /** Apply one micro-batch of wire-form events. Exposed for tests and the
     * batch replayer.
     */
-  private val debugTiming = sys.env.contains("GRAFT_TIMING")
-  private def timed[T](tag: String)(f: => T): T = {
-    if (!debugTiming) f
-    else {
-      val t0 = System.nanoTime()
-      val r = f
-      System.err.println(f"[timing] $tag ${(System.nanoTime() - t0) / 1e9}%.3fs " +
-        f"(at ${System.currentTimeMillis() % 1000000}ms)")
-      r
-    }
-  }
-
   def applyBatch(table: LakeTable, wire: DataFrame, epoch: Long,
-      cfg: Config, pipelineId: String = ""): MergeResult = timed(s"applyBatch($epoch)") {
-    // Decode against the newest registry schema (a superset — older events
-    // parse with nulls/wide types); the per-event _schema_id watermark rides
-    // into the merge stats and drives in-flight table evolution there
-    // (OnTableChanged analog) with no extra scan of the batch.
-    val newestSid = cfg.registry.keys.max
-    val decoded = ChangelogCodec.decode(wire, cfg.registry(newestSid))
-    val res = timed("merge")(
-      MergeInto.merge(table, decoded, epoch, cfg.saltedDedup, cfg.mergeMode,
-        cfg.registry, batchSchemaId = newestSid, pipelineId = pipelineId,
-        allowTakeover = cfg.allowPipelineTakeover))
-
-    // MOR maintenance: async amortized compaction keeps read-side resolve
-    // bounded without blocking ingest (rebase-safe vs concurrent merges).
-    MergeInto.maybeCompactAsync(table, cfg.autoCompactRatio, cfg.autoCompactMinRows)
-    res
-  }
+      cfg: Config, pipelineId: String = ""): MergeResult =
+    applyPlan(single(table, cfg), wire, epoch, cfg, pipelineId).head._2
 
   /** Start the continuous streaming query. */
   def start(spark: SparkSession, table: LakeTable, cfg: Config,
-      availableNow: Boolean = false): StreamingQuery = {
-    val wire = spark.readStream
-      .schema(Types.changeEventWireSchema)
-      .option("maxFilesPerTrigger", cfg.maxFilesPerTrigger)
-      .parquet(cfg.changelogDir)
+      availableNow: Boolean = false): StreamingQuery =
+    run(spark, single(table, cfg), cfg, availableNow)
+
+  /** The engine's one batch loop: the changelog source for the plan's wire
+    * format → foreachBatch → [[withBatchRetries]] → [[applyPlan]], on an
+    * AvailableNow (drain and stop) or processing-time trigger.
+    */
+  private[streaming] def run(spark: SparkSession, plan: Plan, cfg: Config,
+      availableNow: Boolean): StreamingQuery = {
+    val wire = plan.wireFormat match {
+      case "debezium" =>
+        // a Debezium topic dump: JSON-lines files, one envelope per line.
+        // Tombstones (null-value records Debezium emits after deletes),
+        // blank lines and non-envelope junk cannot contain an `"op"` key —
+        // dropped HERE on the text scan where the predicate is free;
+        // decodeDebezium raises on anything op-less that slips past
+        // (see its scaladoc for why the skip cannot live inside the decode)
+        spark.readStream
+          .option("maxFilesPerTrigger", cfg.maxFilesPerTrigger)
+          .text(cfg.changelogDir)
+          .where(instr(col("value"), "\"op\"") > 0)
+      case "table" =>
+        // tail another lake table's commits (pipeline chaining). Default
+        // start = version 1: a fresh downstream replays the full retained
+        // delta history and starts complete PROVIDED every replayed commit
+        // is delta-carrying (MOR merges) — cow/bootstrap commits land base
+        // files the tail cannot emit, and GraftStreamSource warns loudly on
+        // a fresh replay that spans one (Bootstrap the downstream first).
+        // Its own checkpoint dedups across restarts; history beyond the
+        // upstream's vacuum retention needs a Bootstrap first.
+        // table_start_version: 0 tails from NOW instead.
+        val r = spark.readStream.format("graft")
+        (if (plan.tableStartVersion > 0)
+          r.option("startingVersion", plan.tableStartVersion.toString)
+        else r).load(cfg.changelogDir)
+      case _ => spark.readStream
+        .schema(Types.changeEventWireSchema)
+        .option("maxFilesPerTrigger", cfg.maxFilesPerTrigger)
+        .parquet(cfg.changelogDir)
+    }
     val pipelineId = resolvePipelineId(cfg.checkpointDir)
     val writer = wire.writeStream
       .option("checkpointLocation", cfg.checkpointDir)
       .foreachBatch { (df: DataFrame, batchId: Long) =>
-        withBatchRetries(cfg, batchId)(applyBatch(table, df, batchId, cfg, pipelineId)); ()
+        withBatchRetries(cfg, batchId)(applyPlan(plan, df, batchId, cfg, pipelineId)); ()
       }
     val triggered =
       if (availableNow) writer.trigger(Trigger.AvailableNow())
       else writer.trigger(Trigger.ProcessingTime(cfg.triggerMs))
     triggered.start()
   }
+
+  /** One batch of `plan`: decode once, apply each route's sink, then
+    * maintenance. The decoded batch is persisted only when it is read more
+    * than once — by several routes, by a feed that also folds its op state,
+    * or by discovery plus the routes it finds.
+    */
+  private[streaming] def applyPlan(plan: Plan, wire: DataFrame, epoch: Long,
+      cfg: Config, pipelineId: String): Map[String, MergeResult] = {
+    def batch: Map[String, MergeResult] = {
+      // Decode against the newest registry schema (a superset — older events
+      // parse with nulls/wide types); the per-event _schema_id watermark rides
+      // into the merge stats and drives in-flight table evolution there
+      // (OnTableChanged analog) with no extra scan of the batch.
+      val newestSid = cfg.registry.keys.max
+      val decoded = decode(plan, wire, newestSid, cfg.registry(newestSid))
+      val reads = plan.routes.map(_.sink match {
+        case Feed(_, state, _, _) if state != null => 2; case _ => 1 }).sum
+      val shared = plan.discover != null || reads > 1
+      val input =
+        if (shared) decoded.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        else decoded
+      val (routes, results) = try {
+        val routes = plan.routes ++ Option(plan.discover).fold(Seq.empty[Route])(_(input))
+        (routes, routes.map(r =>
+          r.name -> sink(plan, r, r.rows(input), epoch, newestSid, cfg, pipelineId)).toMap)
+      } finally if (shared) input.unpersist()
+      maintain(wire.sparkSession, routes, epoch, cfg)
+      results
+    }
+    if (plan.timed) Timing.timed(s"applyBatch($epoch)", stamp = true)(batch) else batch
+  }
+
+  /** The batch in the merge-input layout, decoded against the newest
+    * registry schema.
+    */
+  private def decode(plan: Plan, wire: DataFrame, newestSid: Int,
+      newest: StructType): DataFrame = plan.wireFormat match {
+    case "debezium" =>
+      // no schema_id on the standard envelope: decode against (and evolve
+      // tables to) the newest registry schema — see GraftConfig.wireFormat
+      ChangelogCodec.decodeDebezium(wire, newest, withBefore = plan.withBefore)
+        .withColumn("_schema_id", lit(newestSid))
+    case "table" =>
+      // upstream-table commit tail: rows are already decoded — shape them
+      // into the merge-input layout (upsert→insert; no before images on a
+      // table tail), casting by name to the registry's newest schema
+      val metas = Seq(
+        when(col("_op") === "delete", Types.OpDelete)
+          .otherwise(Types.OpInsert).as("_op"),
+        col("_pos"),
+        lit(null).cast("timestamp").as("_event_ts"),
+        lit(newestSid).as("_schema_id")) ++
+        (if (plan.withBefore)
+          Seq(lit(null).cast(StructType(newest.fields)).as(ChangelogCodec.BeforeCol))
+        else Nil)
+      wire.select(metas ++ newest.fields.toSeq.map(f =>
+        (if (wire.columns.contains(f.name)) col(f.name)
+         else lit(null)).cast(f.dataType).as(f.name)): _*)
+    case _ => ChangelogCodec.decode(wire, newest, plan.withBefore)
+  }
+
+  private def sink(plan: Plan, r: Route, rows: DataFrame, epoch: Long,
+      newestSid: Int, cfg: Config, pipelineId: String): MergeResult = r.sink match {
+    case Lake(table, registry) =>
+      def merge = MergeInto.merge(table, rows, epoch, cfg.saltedDedup, cfg.mergeMode,
+        registry, batchSchemaId = newestSid, pipelineId = pipelineId,
+        allowTakeover = cfg.allowPipelineTakeover)
+      if (plan.timed) Timing.timed("merge", stamp = true)(merge) else merge
+    case Feed(outDir, state, _, _) =>
+      ConfigPipeline.writeFeed(r.name, outDir, rows, epoch)
+      if (state == null) MergeResult(epoch, skipped = false, 0, 0, 0, 0)
+      // the state table's OWN (epoch, pipelineId) fence makes the fold
+      // exactly-once; the feed write above is overwrite-idempotent only
+      else SinkOpState.applyBatch(state, rows, epoch, pipelineId = pipelineId,
+        allowTakeover = cfg.allowPipelineTakeover)
+  }
+
+  /** Maintenance after a batch, never blocking ingest: async amortized
+    * compaction keeps every written table's MOR read-side resolve bounded
+    * (rebase-safe vs concurrent merges), and each feed folds on its own
+    * cadence (a fold only touches epochs below the newest retained ones, so
+    * it cannot race the writer).
+    */
+  private def maintain(spark: SparkSession, routes: Seq[Route], epoch: Long,
+      cfg: Config): Unit = routes.foreach(_.sink match {
+    case Lake(table, _) =>
+      MergeInto.maybeCompactAsync(table, cfg.autoCompactRatio, cfg.autoCompactMinRows)
+    case Feed(outDir, state, foldEvery, retainEpochs) =>
+      // state tables are lake tables too: same file-compaction economics
+      // under a churn-heavy op stream (their op-algebra MARKER rows are
+      // app-level and GC separately via SinkOpState.gcMarkers)
+      if (state != null)
+        MergeInto.maybeCompactAsync(state, cfg.autoCompactRatio, cfg.autoCompactMinRows)
+      if (foldEvery > 0 && epoch > 0 && epoch % foldEvery == 0)
+        ConfigPipeline.maybeFoldFeedAsync(spark, outDir, retainEpochs)
+  })
 
   /** In-place retry with backoff for transient sink/merge failures. Safe to
     * retry blindly: a failed merge has not committed, and a merge that DID

@@ -1,18 +1,18 @@
 package graft.streaming
 
-import graft.changelog.ChangelogCodec
+import graft.config.{GraftConfig, RouteConf}
 import graft.core.Types
-import graft.rules.ChangefeedOut
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** MQ changefeed-out sink (K11-K13): the reference publishes one JSON
   * message per change event to Kafka/RocketMQ/RabbitMQ
   * (reference: service/endpoint/kafka.go:205-230, rocket.go:232-260,
-  * rabbit.go:194-223). Here the stream decodes, shapes the (key, value)
+  * rabbit.go:194-223). Here the stream decodes and shapes the (key, value)
   * message — keyed by row key, fixing the reference's random partitioner
-  * (kafka.go:51) so per-key order survives — and appends to a partitioned
-  * sink directory (swap the format for `kafka` on a cluster with brokers;
+  * (kafka.go:51) so per-key order survives. It runs as a one-changefeed-route
+  * config on the engine's batch loop, so it writes the config feed's
+  * `epoch=N` layout (swap the writer for `kafka` on a cluster with brokers;
   * the message shape is identical).
   */
 object ChangefeedSink {
@@ -21,22 +21,11 @@ object ChangefeedSink {
       keyCols: Seq[String] = Types.transcriptKey,
       reserveRawData: Boolean = false,
       availableNow: Boolean = false): StreamingQuery = {
-    val newest = cfg.registry(cfg.registry.keys.max)
-    val wire = spark.readStream
-      .schema(Types.changeEventWireSchema)
-      .option("maxFilesPerTrigger", cfg.maxFilesPerTrigger)
-      .parquet(cfg.changelogDir)
-    val decoded =
-      if (reserveRawData) ChangelogCodec.decodeWithBefore(wire, newest)
-      else ChangelogCodec.decode(wire, newest)
-    val messages = ChangefeedOut.toMessages(decoded, keyCols, reserveRawData)
-    val writer = messages.writeStream
-      .option("checkpointLocation", cfg.checkpointDir)
-      .format("parquet") // stand-in for format("kafka") — same (key, value) contract
-      .option("path", outDir)
-      .outputMode("append")
-    (if (availableNow) writer.trigger(Trigger.AvailableNow())
-     else writer.trigger(Trigger.ProcessingTime(cfg.triggerMs))).start()
+    val feed = GraftConfig(cfg.changelogDir, cfg.checkpointDir, routes = Seq(
+      RouteConf("changefeed", target = "changefeed", outDir = outDir,
+        keyColumns = keyCols, reserveRawData = reserveRawData)))
+    CdcPipeline.run(spark, ConfigPipeline.plan(ConfigPipeline.build(spark, feed), feed),
+      cfg, availableNow)
   }
 
   def runToCompletion(spark: SparkSession, cfg: CdcPipeline.Config, outDir: String,
@@ -46,5 +35,5 @@ object ChangefeedSink {
       .awaitTermination()
 
   def read(spark: SparkSession, outDir: String): DataFrame =
-    spark.read.parquet(outDir)
+    ConfigPipeline.readFeed(spark, outDir)
 }

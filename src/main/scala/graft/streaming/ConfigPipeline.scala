@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.changelog.ChangelogCodec
+import graft.changelog.{ChangelogCodec, ChangelogGenerator}
 import graft.config.{GraftConfig, RouteConf}
 import graft.core.Types
 import graft.lake.LakeTable
@@ -8,7 +8,7 @@ import graft.merge.{MergeInto, MergeResult}
 import graft.rules.{ChangefeedOut, ExprTransform, RulePipeline}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StructType
 
 /** Config-file-driven pipeline: `GraftConfig` (one YAML) → running streams —
@@ -16,15 +16,16 @@ import org.apache.spark.sql.types.StructType
   * global/config.go:142-196, rule compile global/rule.go:345-407) without
   * writing Scala.
   *
-  * Per micro-batch: decode once, cache, then per route filter → rule
-  * transform (all Catalyst expressions, including the runtime `filter`/
-  * `computed` strings) → apply:
+  * A config is a [[CdcPipeline.Plan]] run by the engine's one batch loop.
+  * Per micro-batch: decode once (cached when several routes read it), then
+  * per route filter → rule transform (all Catalyst expressions, including
+  * the runtime `filter`/`computed` strings) → apply:
   *   - `lake` routes MERGE into their own LakeTable, each with its own
   *     (epoch, offset, pipelineId) fence ⇒ per-route exactly-once;
-  *   - `changefeed` routes append keyed (key, value) JSON messages (or
-  *     configured `ops` rows — the script-sink analog) to their out dir;
-  *     at-least-once on crash replay, exactly the reference's MQ contract
-  *     (service/handler.go:173-191).
+  *   - `changefeed` routes write keyed (key, value) JSON messages (or
+  *     configured `ops` rows — the script-sink analog) as one `epoch=N` dir
+  *     of their out dir per batch, overwritten on replay (the reference's
+  *     MQ contract, service/handler.go:173-191, is at-least-once).
   */
 object ConfigPipeline {
 
@@ -108,101 +109,68 @@ object ConfigPipeline {
     } else out.drop("_before")
   }
 
+  /** The one `GraftConfig` → [[CdcPipeline.Config]] conversion (the retry
+    * and restart knobs keep their defaults: the YAML does not set them).
+    */
+  private def cdcConfig(c: GraftConfig): CdcPipeline.Config =
+    CdcPipeline.Config(c.changelogDir, c.checkpointDir,
+      maxFilesPerTrigger = c.maxFilesPerTrigger, triggerMs = c.triggerMs,
+      saltedDedup = c.saltedDedup, mergeMode = c.mergeMode,
+      autoCompactRatio = c.autoCompactRatio,
+      autoCompactMinRows = c.autoCompactMinRows,
+      registry = registryOf(c),
+      allowPipelineTakeover = c.allowPipelineTakeover)
+
+  /** Built routes as the batch loop's plan. A lake route merges its rule
+    * output; a changefeed route writes (key, value) messages, or its `ops`
+    * rows — with the total op order when they also fold into a state table.
+    */
+  private[streaming] def plan(routes: Seq[Built], c: GraftConfig): CdcPipeline.Plan =
+    CdcPipeline.Plan(routes.map { b =>
+      val r = b.conf
+      if (r.target == "lake")
+        CdcPipeline.Route(r.name, routeTransform(_, r), CdcPipeline.Lake(b.table, b.outRegistry))
+      else CdcPipeline.Route(r.name, { decoded =>
+        val routed = routeTransform(decoded, r)
+        if (r.ops.isEmpty)
+          ChangefeedOut.toMessages(routed.drop("_schema_id"), r.keyColumns, r.reserveRawData)
+        else if (b.stateTable != null) ExprTransform.runOrdered(routed, r.ops)
+        else ExprTransform.run(routed, r.ops)
+      }, CdcPipeline.Feed(r.outDir, b.stateTable, c.feedFoldEvery, c.feedRetainEpochs))
+    }, wireFormat = c.wireFormat, tableStartVersion = c.tableStartVersion,
+      withBefore = routes.exists(b => b.conf.target != "lake" && b.conf.reserveRawData))
+
   def applyBatch(routes: Seq[Built], wire: DataFrame, epoch: Long,
-      c: GraftConfig, pipelineId: String): Map[String, MergeResult] = {
-    val registry = registryOf(c)
-    val newestSid = registry.keys.max
-    val needBefore = routes.exists(b => b.conf.target != "lake" && b.conf.reserveRawData)
-    val newest = registry(newestSid)
-    val decoded = c.wireFormat match {
-      case "debezium" =>
-        // no schema_id on the standard envelope: decode against (and evolve
-        // tables to) the newest registry schema — see GraftConfig.wireFormat
-        ChangelogCodec.decodeDebezium(wire, newest, withBefore = needBefore)
-          .withColumn("_schema_id", lit(newestSid))
-      case "table" =>
-        // upstream-table commit tail: rows are already decoded — shape them
-        // into the merge-input layout (upsert→insert; no before images on a
-        // table tail), casting by name to the registry's newest schema
-        val metas = Seq(
-          when(col("_op") === "delete", Types.OpDelete)
-            .otherwise(Types.OpInsert).as("_op"),
-          col("_pos"),
-          lit(null).cast("timestamp").as("_event_ts"),
-          lit(newestSid).as("_schema_id")) ++
-          (if (needBefore)
-            Seq(lit(null).cast(org.apache.spark.sql.types.StructType(
-              newest.fields)).as(ChangelogCodec.BeforeCol))
-          else Nil)
-        wire.select(metas ++ newest.fields.toSeq.map(f =>
-          (if (wire.columns.contains(f.name)) col(f.name)
-           else lit(null)).cast(f.dataType).as(f.name)): _*)
-      case _ =>
-        if (needBefore) ChangelogCodec.decodeWithBefore(wire, newest)
-        else ChangelogCodec.decode(wire, newest)
-    }
-    val cached = decoded.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      routes.map { b =>
-        val routed = routeTransform(cached, b.conf)
-        val res = b.conf.target match {
-          case "lake" =>
-            // the observed _schema_id watermark + the route's OUTPUT
-            // registry evolve the table in-commit, same as the code-level
-            // API (OnTableChanged analog)
-            MergeInto.merge(b.table, routed, epoch,
-              c.saltedDedup, c.mergeMode,
-              registry = b.outRegistry, batchSchemaId = newestSid,
-              pipelineId = pipelineId, allowTakeover = c.allowPipelineTakeover)
-          case _ =>
-            val out =
-              if (b.conf.ops.nonEmpty) {
-                // state_dir routes carry the total op order on the feed too
-                if (b.stateTable != null) ExprTransform.runOrdered(routed, b.conf.ops)
-                else ExprTransform.run(routed, b.conf.ops)
-              } else ChangefeedOut.toMessages(routed.drop("_schema_id"),
-                b.conf.keyColumns, b.conf.reserveRawData)
-            // exactly-once: one partition dir per epoch, OVERWRITTEN on
-            // replay — a crash between this write and the checkpoint save
-            // re-runs the batch into the same dir instead of appending
-            // duplicates (the foreachBatch analog of the lake routes' fence).
-            // A feed dir written by the old flat-append layout would leave
-            // parquet mixed with partition dirs — unreadable by any
-            // partition-discovering reader — so fail fast with a pointer
-            // instead of corrupting the feed.
-            // a RESET checkpoint against an existing folded feed restarts
-            // batchIds at 0: epochs at/below the fold watermark would be
-            // hidden by readFeed's pruning filter and then DELETED by the
-            // next fold's deferred cleanup — fail fast like the flat-layout
-            // guard below instead of silently losing new messages
-            readFoldCommit(b.conf.outDir).foreach(fc =>
-              require(epoch > fc.watermark,
-                s"route ${b.conf.name}: epoch $epoch is at/below the feed's " +
-                  s"fold watermark ${fc.watermark} — the checkpoint was reset " +
-                  "against an existing feed; use a fresh out_dir, or clear " +
-                  "_fold.json + _folded after verifying the overlap"))
-            val outRoot = java.nio.file.Paths.get(b.conf.outDir)
-            if (java.nio.file.Files.isDirectory(outRoot)) {
-              val flat = java.nio.file.Files.list(outRoot)
-              try require(!flat.anyMatch(p =>
-                p.getFileName.toString.startsWith("part-")),
-                s"changefeed outDir ${b.conf.outDir} holds flat pre-epoch " +
-                  "output; move it aside or point the route at a fresh dir")
-              finally flat.close()
-            }
-            LakeTable.writeParquet(out.write.mode("overwrite"), s"${b.conf.outDir}/epoch=$epoch")
-            if (b.stateTable == null) MergeResult(epoch, skipped = false, 0, 0, 0, 0)
-            else
-              // fold the op stream into the route's state table — its OWN
-              // (epoch, pipelineId) fence makes the apply exactly-once even
-              // though the feed write above is overwrite-idempotent only
-              graft.merge.SinkOpState.applyBatch(b.stateTable, out, epoch,
-                pipelineId = pipelineId,
-                allowTakeover = c.allowPipelineTakeover)
-        }
-        b.conf.name -> res
-      }.toMap
-    } finally { cached.unpersist(); () }
+      c: GraftConfig, pipelineId: String): Map[String, MergeResult] =
+    CdcPipeline.applyPlan(plan(routes, c), wire, epoch, cdcConfig(c), pipelineId)
+
+  /** Write one batch of a changefeed route: one partition dir per epoch,
+    * OVERWRITTEN on replay — a crash between this write and the checkpoint
+    * save re-runs the batch into the same dir instead of appending
+    * duplicates (the foreachBatch analog of the lake routes' fence). This is
+    * the engine's one feed writer, and `epoch=N` its one on-disk layout.
+    */
+  private[streaming] def writeFeed(route: String, outDir: String, out: DataFrame,
+      epoch: Long): Unit = {
+    // a RESET checkpoint against an existing folded feed restarts
+    // batchIds at 0: epochs at/below the fold watermark would be
+    // hidden by readFeed's pruning filter and then DELETED by the
+    // next fold's deferred cleanup — fail fast like the flat-layout
+    // guard below instead of silently losing new messages
+    readFoldCommit(outDir).foreach(fc =>
+      require(epoch > fc.watermark,
+        s"route $route: epoch $epoch is at/below the feed's " +
+          s"fold watermark ${fc.watermark} — the checkpoint was reset " +
+          "against an existing feed; use a fresh out_dir, or clear " +
+          "_fold.json + _folded after verifying the overlap"))
+    // A feed dir written by a flat-append layout would leave parquet mixed
+    // with partition dirs — unreadable by any partition-discovering reader —
+    // so fail fast with a pointer instead of corrupting the feed.
+    require(!ChangelogGenerator.children(java.nio.file.Paths.get(outDir))
+      .exists(_.getFileName.toString.startsWith("part-")),
+      s"changefeed outDir $outDir holds flat pre-epoch " +
+        "output; move it aside or point the route at a fresh dir")
+    LakeTable.writeParquet(out.write.mode("overwrite"), s"$outDir/epoch=$epoch")
   }
 
   /** Read a changefeed route's output — folded history (if [[foldFeed]] has
@@ -241,23 +209,13 @@ object ConfigPipeline {
       new String(java.nio.file.Files.readAllBytes(f), "UTF-8")))
   }
 
-  private def epochDirs(outDir: String): Seq[(Long, java.nio.file.Path)] = {
-    val root = java.nio.file.Paths.get(outDir)
-    if (!java.nio.file.Files.isDirectory(root)) return Nil
-    val s = java.nio.file.Files.list(root)
-    try {
-      import scala.jdk.CollectionConverters._
-      s.iterator().asScala.flatMap { p =>
-        val n = p.getFileName.toString
-        if (n.startsWith("epoch=") && java.nio.file.Files.isDirectory(p))
-          scala.util.Try(n.stripPrefix("epoch=").toLong).toOption.map(_ -> p)
-        else None
-      }.toVector
-    } finally s.close()
-  }
-
-  private def deleteRec(p: java.nio.file.Path): Unit =
-    graft.changelog.ChangelogGenerator.deleteRecursively(p)
+  private def epochDirs(outDir: String): Seq[(Long, java.nio.file.Path)] =
+    ChangelogGenerator.children(java.nio.file.Paths.get(outDir)).flatMap { p =>
+      val n = p.getFileName.toString
+      if (n.startsWith("epoch=") && java.nio.file.Files.isDirectory(p))
+        scala.util.Try(n.stripPrefix("epoch=").toLong).toOption.map(_ -> p)
+      else None
+    }
 
   /** Single-flight async fold per out dir — the feed-side analog of
     * `MergeInto.maybeCompactAsync`: maintenance must not block ingest, and a
@@ -287,7 +245,6 @@ object ConfigPipeline {
     * being drained) so a hung fold of some OTHER out dir in the same JVM
     * cannot block this caller, and bounded by `timeoutMs` so a wedged fold
     * thread surfaces as a loud warning instead of an indefinite busy-wait.
-    * The no-arg form (tests/bench teardown) joins every in-flight fold.
     */
   def awaitFeedFold(outDirs: Iterable[String], timeoutMs: Long = 600000L): Unit = {
     val deadline = System.nanoTime() + timeoutMs * 1000000L
@@ -302,10 +259,6 @@ object ConfigPipeline {
             "(the atomic pointer publish keeps the feed readable either way)")
       }
     }
-  }
-  def awaitFeedFold(): Unit = {
-    import scala.jdk.CollectionConverters._
-    awaitFeedFold(folding.keys.asScala.toVector)
   }
 
   /** Changefeed feed maintenance — the retention the reference gets for free
@@ -351,16 +304,11 @@ object ConfigPipeline {
     // deferred cleanup from the previous fold: live dirs its commit already
     // covers, and any fold dir the pointer no longer references
     prev.foreach { p =>
-      epochDirs(outDir).filter(_._1 <= p.watermark).foreach(d => deleteRec(d._2))
-      val froot = java.nio.file.Paths.get(outDir, "_folded")
-      if (java.nio.file.Files.isDirectory(froot)) {
-        val s = java.nio.file.Files.list(froot)
-        try {
-          import scala.jdk.CollectionConverters._
-          s.iterator().asScala.filter(d => !p.dirs.contains(d.getFileName.toString))
-            .foreach(deleteRec)
-        } finally s.close()
-      }
+      epochDirs(outDir).filter(_._1 <= p.watermark).foreach(d =>
+        ChangelogGenerator.deleteRecursively(d._2))
+      ChangelogGenerator.children(java.nio.file.Paths.get(outDir, "_folded"))
+        .filterNot(d => p.dirs.contains(d.getFileName.toString))
+        .foreach(ChangelogGenerator.deleteRecursively)
     }
     val live = epochDirs(outDir)
     val foldable = live.map(_._1).sorted.dropRight(retainLast)
@@ -409,11 +357,15 @@ object ConfigPipeline {
   /** YAML `target: dynamic` route → [[DynamicRoutePipeline]] configs — the
     * reference's `include_table_regex` UX in the one-file surface
     * (transfer_service.go:197-237). A dynamic route is its own stream shape
-    * (per-batch discovery), so it must be the config's only route.
+    * (per-batch discovery), so it must be the config's only route, and it
+    * reads the graft wire format.
     */
   def dynamicConfigs(c: GraftConfig): (DynamicRoutePipeline.Config, CdcPipeline.Config) = {
     require(c.routes.size == 1,
       "a dynamic route runs as its own stream; declare it alone in the config")
+    require(c.wireFormat == "graft",
+      "dynamic routes read the graft wire format (table routing needs the " +
+        "route column on the wire); decode the debezium feed first")
     val r = c.routes.head
     val d = DynamicRoutePipeline.Config(
       r.routeCol, r.pattern, r.tablesDir, r.keyColumns,
@@ -422,98 +374,21 @@ object ConfigPipeline {
       snapshotDirFor = n => Option(r.snapshotDirPattern)
         .map(_.replace("{table}", n))
         .filter(p => java.nio.file.Files.isDirectory(java.nio.file.Paths.get(p))))
-    val cdc = CdcPipeline.Config(c.changelogDir, c.checkpointDir,
-      maxFilesPerTrigger = c.maxFilesPerTrigger, triggerMs = c.triggerMs,
-      saltedDedup = c.saltedDedup, mergeMode = c.mergeMode,
-      autoCompactRatio = c.autoCompactRatio,
-      autoCompactMinRows = c.autoCompactMinRows,
-      registry = registryOf(c),
-      allowPipelineTakeover = c.allowPipelineTakeover)
-    (d, cdc)
+    (d, cdcConfig(c))
   }
 
   def start(spark: SparkSession, c: GraftConfig,
-      availableNow: Boolean = false): StreamingQuery = {
+      availableNow: Boolean = false): StreamingQuery =
     if (c.routes.exists(_.target == "dynamic")) {
-      require(c.wireFormat == "graft",
-        "dynamic routes read the graft wire format (table routing needs the " +
-          "route column on the wire); decode the debezium feed first")
       val (d, cdc) = dynamicConfigs(c)
-      return DynamicRoutePipeline.start(spark, d, cdc, availableNow)._1
-    }
-    val routes = build(spark, c)
-    val pipelineId = CdcPipeline.resolvePipelineId(c.checkpointDir)
-    // default retry knobs; only the retry fields of this config are used
-    val retryCfg = CdcPipeline.Config(c.changelogDir, c.checkpointDir)
-    val wire = c.wireFormat match {
-      case "debezium" =>
-        // a Debezium topic dump: JSON-lines files, one envelope per line.
-        // Tombstones (null-value records Debezium emits after deletes),
-        // blank lines and non-envelope junk cannot contain an `"op"` key —
-        // dropped HERE on the text scan where the predicate is free;
-        // decodeDebezium raises on anything op-less that slips past
-        // (see its scaladoc for why the skip cannot live inside the decode)
-        spark.readStream
-          .option("maxFilesPerTrigger", c.maxFilesPerTrigger)
-          .text(c.changelogDir)
-          .where(instr(col("value"), "\"op\"") > 0)
-      case "table" =>
-        // tail another lake table's commits (pipeline chaining). Default
-        // start = version 1: a fresh downstream replays the full retained
-        // delta history and starts complete PROVIDED every replayed commit
-        // is delta-carrying (MOR merges) — cow/bootstrap commits land base
-        // files the tail cannot emit, and GraftStreamSource warns loudly on
-        // a fresh replay that spans one (Bootstrap the downstream first).
-        // Its own checkpoint dedups across restarts; history beyond the
-        // upstream's vacuum retention needs a Bootstrap first.
-        // table_start_version: 0 tails from NOW instead.
-        val r = spark.readStream.format("graft")
-        (if (c.tableStartVersion > 0)
-          r.option("startingVersion", c.tableStartVersion.toString)
-        else r).load(c.changelogDir)
-      case _ => spark.readStream
-        .schema(Types.changeEventWireSchema)
-        .option("maxFilesPerTrigger", c.maxFilesPerTrigger)
-        .parquet(c.changelogDir)
-    }
-    val writer = wire.writeStream
-      .option("checkpointLocation", c.checkpointDir)
-      .foreachBatch { (df: DataFrame, batchId: Long) =>
-        // transient failures retry in place (merges are fenced-idempotent;
-        // changefeed epochs overwrite), as in the single-table pipeline
-        CdcPipeline.withBatchRetries(retryCfg, batchId)(
-          applyBatch(routes, df, batchId, c, pipelineId))
-        routes.foreach { b =>
-          if (b.table != null)
-            MergeInto.maybeCompactAsync(b.table, c.autoCompactRatio, c.autoCompactMinRows)
-          // state tables are lake tables too: same file-compaction economics
-          // under a churn-heavy op stream (their op-algebra MARKER rows are
-          // app-level and GC separately via SinkOpState.gcMarkers)
-          if (b.stateTable != null)
-            MergeInto.maybeCompactAsync(b.stateTable, c.autoCompactRatio, c.autoCompactMinRows)
-        }
-        // feed-side maintenance on its own cadence (fold only ever touches
-        // epochs below the newest `retain`, so it cannot race the writer)
-        if (c.feedFoldEvery > 0 && batchId > 0 && batchId % c.feedFoldEvery == 0)
-          routes.foreach(b => if (b.conf.target != "lake")
-            maybeFoldFeedAsync(spark, b.conf.outDir, c.feedRetainEpochs))
-        ()
-      }
-    (if (availableNow) writer.trigger(Trigger.AvailableNow())
-     else writer.trigger(Trigger.ProcessingTime(c.triggerMs))).start()
-  }
+      DynamicRoutePipeline.start(spark, d, cdc, availableNow)._1
+    } else CdcPipeline.run(spark, plan(build(spark, c), c), cdcConfig(c), availableNow)
 
   def runToCompletion(spark: SparkSession, c: GraftConfig): Unit = {
-    if (c.routes.exists(_.target == "dynamic")) {
-      val (d, cdc) = dynamicConfigs(c)
-      DynamicRoutePipeline.runToCompletion(spark, d, cdc)
-      return
-    }
     start(spark, c, availableNow = true).awaitTermination()
     MergeInto.awaitCompaction()
     // scoped: only this config's feed dirs — another pipeline's fold in the
     // same JVM must not block this drain
-    awaitFeedFold(c.routes.filter(r => r.target != "lake" && r.outDir != null)
-      .map(_.outDir))
+    awaitFeedFold(c.routes.filter(_.target == "changefeed").map(_.outDir))
   }
 }

@@ -1,12 +1,10 @@
 package graft.streaming
 
-import graft.changelog.ChangelogCodec
 import graft.lake.LakeTable
 import graft.merge.{MergeInto, MergeResult}
-import graft.core.Types
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** S6 dynamic half: MID-STREAM wildcard route discovery. The reference
   * re-expands its `include_table_regex` against the database whenever tables
@@ -102,56 +100,34 @@ object DynamicRoutePipeline {
       t
     })
 
-  def applyBatch(spark: SparkSession, d: Config, state: State, wire: DataFrame,
-      epoch: Long, cfg: CdcPipeline.Config,
-      pipelineId: String = ""): Map[String, MergeResult] = {
+  /** The dynamic stream as the batch loop's plan: no fixed routes — each
+    * batch's routes come from discovery over the (cached) decoded batch: its
+    * distinct matching route values (small — table names, not rows; the
+    * aggregate is map-side combined). A retry re-discovers the same route
+    * set from the same batch; every discovered table gets async MOR
+    * maintenance, or its read-side resolve cost grows without bound.
+    */
+  private def plan(spark: SparkSession, d: Config, state: State,
+      cfg: CdcPipeline.Config): CdcPipeline.Plan = {
     require(d.pattern != "*" && d.pattern != ".*",
       "wildcard pattern must constrain the table name (reference: lone * is illegal)")
-    val newestSid = cfg.registry.keys.max
-    val decoded = ChangelogCodec.decode(wire, cfg.registry(newestSid))
-    val cached = decoded.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // discovery: the batch's distinct matching route values (small — table
-      // names, not rows; the aggregate is map-side combined)
-      val observed = cached.select(col(d.routeCol).cast("string").as("n"))
+    CdcPipeline.Plan(Nil, discover = decoded =>
+      decoded.select(col(d.routeCol).cast("string").as("n"))
         .where(col("n").isNotNull).distinct().collect().map(_.getString(0))
-        .filter(n => n.matches(d.pattern) && safeSegment(n)).sorted
-      observed.map { name =>
-        val t = tableFor(spark, d, state, name, cfg)
-        name -> MergeInto.merge(t, cached.where(col(d.routeCol) === name),
-          epoch, cfg.saltedDedup, cfg.mergeMode, cfg.registry,
-          batchSchemaId = newestSid, pipelineId = pipelineId,
-          allowTakeover = cfg.allowPipelineTakeover)
-      }.toMap
-    } finally { cached.unpersist(); () }
+        .filter(n => n.matches(d.pattern) && safeSegment(n)).sorted.toSeq
+        .map(name => CdcPipeline.Route(name, _.where(col(d.routeCol) === name),
+          CdcPipeline.Lake(tableFor(spark, d, state, name, cfg), cfg.registry))))
   }
+
+  def applyBatch(spark: SparkSession, d: Config, state: State, wire: DataFrame,
+      epoch: Long, cfg: CdcPipeline.Config,
+      pipelineId: String = ""): Map[String, MergeResult] =
+    CdcPipeline.applyPlan(plan(spark, d, state, cfg), wire, epoch, cfg, pipelineId)
 
   def start(spark: SparkSession, d: Config, cfg: CdcPipeline.Config,
       availableNow: Boolean = false): (StreamingQuery, State) = {
     val state = new State
-    val wire = spark.readStream
-      .schema(Types.changeEventWireSchema)
-      .option("maxFilesPerTrigger", cfg.maxFilesPerTrigger)
-      .parquet(cfg.changelogDir)
-    val pipelineId = CdcPipeline.resolvePipelineId(cfg.checkpointDir)
-    val writer = wire.writeStream
-      .option("checkpointLocation", cfg.checkpointDir)
-      .foreachBatch { (df: DataFrame, batchId: Long) =>
-        // same per-batch contract as the other three pipelines: transient
-        // failures retry in place (merges are fenced-idempotent, and a retry
-        // re-discovers the same route set from the same batch), and every
-        // DISCOVERED table gets async MOR maintenance — without this,
-        // dynamically attached tables never compact and their read-side
-        // resolve cost grows without bound over a long stream
-        CdcPipeline.withBatchRetries(cfg, batchId)(
-          applyBatch(spark, d, state, df, batchId, cfg, pipelineId))
-        state.tables.values.foreach(t =>
-          MergeInto.maybeCompactAsync(t, cfg.autoCompactRatio, cfg.autoCompactMinRows))
-        ()
-      }
-    val q = (if (availableNow) writer.trigger(Trigger.AvailableNow())
-      else writer.trigger(Trigger.ProcessingTime(cfg.triggerMs))).start()
-    (q, state)
+    (CdcPipeline.run(spark, plan(spark, d, state, cfg), cfg, availableNow), state)
   }
 
   def runToCompletion(spark: SparkSession, d: Config,

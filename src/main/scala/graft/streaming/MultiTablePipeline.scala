@@ -1,11 +1,9 @@
 package graft.streaming
 
-import graft.changelog.ChangelogCodec
-import graft.core.Types
 import graft.lake.LakeTable
 import graft.merge.{MergeInto, MergeResult}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Rule-key routing: one change stream fanned out to several target tables —
   * the analog of the reference's per-`schema:table` rule dispatch
@@ -27,45 +25,18 @@ object MultiTablePipeline {
       table: LakeTable,
       transform: DataFrame => DataFrame = identity)
 
+  private def plan(routes: Seq[Route], cfg: CdcPipeline.Config): CdcPipeline.Plan =
+    CdcPipeline.Plan(routes.map(r => CdcPipeline.Route(r.name,
+      decoded => r.transform(decoded.where(r.predicate)),
+      CdcPipeline.Lake(r.table, cfg.registry))))
+
   def applyBatch(routes: Seq[Route], wire: DataFrame, epoch: Long,
-      cfg: CdcPipeline.Config, pipelineId: String = ""): Map[String, MergeResult] = {
-    val newestSid = cfg.registry.keys.max
-    val decoded = ChangelogCodec.decode(wire, cfg.registry(newestSid))
-    // cache once: every route scans the same decoded batch
-    val cached = decoded.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      routes.map { r =>
-        val routed = r.transform(cached.where(r.predicate))
-        r.name -> MergeInto.merge(r.table, routed, epoch, cfg.saltedDedup,
-          cfg.mergeMode, cfg.registry, batchSchemaId = newestSid,
-          pipelineId = pipelineId, allowTakeover = cfg.allowPipelineTakeover)
-      }.toMap
-    } finally { cached.unpersist(); () }
-  }
+      cfg: CdcPipeline.Config, pipelineId: String = ""): Map[String, MergeResult] =
+    CdcPipeline.applyPlan(plan(routes, cfg), wire, epoch, cfg, pipelineId)
 
   def start(spark: SparkSession, routes: Seq[Route], cfg: CdcPipeline.Config,
-      availableNow: Boolean = false): StreamingQuery = {
-    val wire = spark.readStream
-      .schema(Types.changeEventWireSchema)
-      .option("maxFilesPerTrigger", cfg.maxFilesPerTrigger)
-      .parquet(cfg.changelogDir)
-    val pipelineId = CdcPipeline.resolvePipelineId(cfg.checkpointDir)
-    val writer = wire.writeStream
-      .option("checkpointLocation", cfg.checkpointDir)
-      .foreachBatch { (df: DataFrame, batchId: Long) =>
-        // same per-batch contract as the single-table and config pipelines:
-        // transient failures retry in place (merges are idempotent — the
-        // fence no-ops a half-applied replay), and every route's table gets
-        // async MOR maintenance, or deltas accumulate without bound
-        CdcPipeline.withBatchRetries(cfg, batchId)(
-          applyBatch(routes, df, batchId, cfg, pipelineId))
-        routes.foreach(r =>
-          MergeInto.maybeCompactAsync(r.table, cfg.autoCompactRatio, cfg.autoCompactMinRows))
-        ()
-      }
-    (if (availableNow) writer.trigger(Trigger.AvailableNow())
-     else writer.trigger(Trigger.ProcessingTime(cfg.triggerMs))).start()
-  }
+      availableNow: Boolean = false): StreamingQuery =
+    CdcPipeline.run(spark, plan(routes, cfg), cfg, availableNow)
 
   def runToCompletion(spark: SparkSession, routes: Seq[Route],
       cfg: CdcPipeline.Config): Unit = {

@@ -274,4 +274,22 @@ class PlanSpec extends SparkSpec {
     assert(!p.contains("SortMergeJoin"), s"gram membership degraded to SMJ:\n$p")
     assert(!p.contains("CartesianProduct"), s"cartesian in decontaminate:\n$p")
   }
+
+  test("ExprTransform: 4 ops project in one pass over one scan, not a union of 4") {
+    import graft.rules.{ExprOp, ExprTransform}
+    import spark.implicits._
+    val dir = tmpDir("plan-ops").resolve("in").toString
+    Seq((1L, "a"), (2L, "b")).toDF("_pos", "k").write.parquet(dir)
+    val df = spark.read.parquet(dir)
+    val ops = (0 until 4).map(i => ExprOp("redis", "SET", key = s"concat('k$i:', k)",
+      when = s"_pos > $i", value = "k"))
+    Seq(ExprTransform.run(df, ops), ExprTransform.runOrdered(df, ops)).foreach { out =>
+      val leaves = out.queryExecution.optimizedPlan.collectLeaves()
+      assert(leaves.size == 1, s"${leaves.size} scan leaves:\n${out.queryExecution.optimizedPlan}")
+    }
+    // the gated ops of each event, in declaration order within it
+    val got = ExprTransform.runOrdered(df, ops).select("key", "ord").as[(String, Long)]
+      .collect().toSet
+    assert(got == Set(("k0:a", 16L), ("k0:b", 32L), ("k1:b", 33L)), s"got $got")
+  }
 }
