@@ -13,7 +13,8 @@ import org.apache.spark.sql.SparkSession
   *   graft.Main gen <logDir> [nEvents] [nConversations]   # synth changelog
   *   graft.Main init <tableDir> [numBuckets]              # create lake table
   *   graft.Main run <logDir> <tableDir> <checkpointDir>   # drain changelog → MERGE
-  *   graft.Main bootstrap <parquetPath> <tableDir>        # stock/full-snapshot load
+  *   graft.Main bootstrap <parquetPath> <tableDir>        # stock/full-snapshot load (MOR deltas)
+  *   graft.Main compact <tableDir>                        # fold deltas into base files
   *   graft.Main status <tableDir>                         # table + lineage status
   * }}}
   */

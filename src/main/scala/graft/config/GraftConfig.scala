@@ -15,7 +15,6 @@ import scala.jdk.CollectionConverters._
   * checkpoint_dir: /data/cp
   * max_files_per_trigger: 8
   * trigger_ms: 200
-  * merge_mode: mor
   * routes:
   *   - name: transcripts
   *     filter: "conv_id IS NOT NULL"       # routing predicate (S3)
@@ -47,6 +46,10 @@ import scala.jdk.CollectionConverters._
   *     key_columns: [conv_id, turn_idx]
   *     snapshot_dir_pattern: "/snap/{table}"  # optional stock handoff
   * }}}
+  *
+  * Every key is checked: an unknown top-level, route, `rule:` or `ops:` key
+  * fails the parse and names the keys the parser knows (the sid keys of
+  * `schemas:` are free).
   */
 final case class RouteConf(
     name: String,
@@ -81,7 +84,6 @@ final case class GraftConfig(
     checkpointDir: String,
     maxFilesPerTrigger: Int = 4,
     triggerMs: Long = 200L,
-    mergeMode: String = "mor",
     saltedDedup: Int = 0,
     autoCompactRatio: Double = 4.0,
     autoCompactMinRows: Long = 200000L,
@@ -137,6 +139,7 @@ object GraftConfig {
   def parse(yamlText: String): GraftConfig = {
     val yaml = new org.yaml.snakeyaml.Yaml()
     val root = asMap(yaml.load[Any](yamlText))
+    known("top-level", root, RootKeys)
     val routes = list(root, "routes").map(r => parseRoute(asMap(r)))
     require(routes.nonEmpty, "config needs at least one route")
     val retain = int(root, "feed_retain_epochs", 8)
@@ -148,7 +151,6 @@ object GraftConfig {
       checkpointDir = str(root, "checkpoint_dir", required = true),
       maxFilesPerTrigger = int(root, "max_files_per_trigger", 4),
       triggerMs = long(root, "trigger_ms", 200L),
-      mergeMode = str(root, "merge_mode", default = "mor"),
       saltedDedup = int(root, "salted_dedup", 0),
       autoCompactRatio = dbl(root, "auto_compact_ratio", 4.0),
       autoCompactMinRows = long(root, "auto_compact_min_rows", 200000L),
@@ -169,6 +171,7 @@ object GraftConfig {
   }
 
   private def parseRoute(m: Map[String, Any]): RouteConf = {
+    known(s"route '${m.getOrElse("name", "?")}'", m, RouteKeys)
     val target = str(m, "target", default = "lake")
     require(Set("lake", "changefeed", "dynamic")(target),
       s"unknown route target: $target")
@@ -229,24 +232,50 @@ object GraftConfig {
     * (include/exclude/mappings/defaults/case: global/rule.go:345-448;
     * date formatters: rule.go:242-248; filter/computed replace Lua).
     */
-  private def parseRule(m: Map[String, Any]): Rule = Rule(
-    includeColumns = strList(m, "include_columns"),
-    excludeColumns = strList(m, "exclude_columns"),
-    columnMappings = strMap(m, "column_mappings"),
-    caseTransform = Option(str(m, "case_transform")),
-    defaultColumns = strPairs(m, "default_columns"),
-    dateFormats = strMap(m, "date_formats"),
-    filterExpr = Option(str(m, "filter")),
-    computedColumns = strPairs(m, "computed"))
+  private def parseRule(m: Map[String, Any]): Rule = {
+    known("rule", m, RuleKeys)
+    Rule(
+      includeColumns = strList(m, "include_columns"),
+      excludeColumns = strList(m, "exclude_columns"),
+      columnMappings = strMap(m, "column_mappings"),
+      caseTransform = Option(str(m, "case_transform")),
+      defaultColumns = strPairs(m, "default_columns"),
+      dateFormats = strMap(m, "date_formats"),
+      filterExpr = Option(str(m, "filter")),
+      computedColumns = strPairs(m, "computed"))
+  }
 
-  private def parseOp(m: Map[String, Any]): ExprOp = ExprOp(
-    target = str(m, "target", required = true),
-    action = str(m, "action", required = true),
-    key = str(m, "key", required = true),
-    when = str(m, "when", default = "true"),
-    field = str(m, "field", default = "NULL"),
-    score = str(m, "score", default = "0.0"),
-    value = str(m, "value", default = "NULL"))
+  private def parseOp(m: Map[String, Any]): ExprOp = {
+    known("ops", m, OpKeys)
+    ExprOp(
+      target = str(m, "target", required = true),
+      action = str(m, "action", required = true),
+      key = str(m, "key", required = true),
+      when = str(m, "when", default = "true"),
+      field = str(m, "field", default = "NULL"),
+      score = str(m, "score", default = "0.0"),
+      value = str(m, "value", default = "NULL"))
+  }
+
+  // The keys each section's parse reads — exactly those, no more: a key
+  // outside its set is a typo or a removed option, never silently ignored.
+  private val RootKeys = Set("changelog_dir", "checkpoint_dir",
+    "max_files_per_trigger", "trigger_ms", "salted_dedup", "auto_compact_ratio",
+    "auto_compact_min_rows", "allow_pipeline_takeover", "feed_fold_every",
+    "feed_retain_epochs", "wire_format", "table_start_version", "routes", "schemas")
+  private val RouteKeys = Set("name", "filter", "target", "table_dir", "out_dir",
+    "key_columns", "bucket_columns", "num_buckets", "reserve_raw_data", "rule",
+    "ops", "state_dir", "route_col", "pattern", "tables_dir", "snapshot_dir_pattern")
+  private val RuleKeys = Set("include_columns", "exclude_columns",
+    "column_mappings", "case_transform", "default_columns", "date_formats",
+    "filter", "computed")
+  private val OpKeys = Set("target", "action", "key", "when", "field", "score", "value")
+
+  private def known(where: String, m: Map[String, Any], keys: Set[String]): Unit = {
+    val unknown = m.keySet -- keys
+    require(unknown.isEmpty, s"unknown $where config key(s): " +
+      s"${unknown.toSeq.sorted.mkString(", ")}; known: ${keys.toSeq.sorted.mkString(", ")}")
+  }
 
   // ------------------------------------------------ permissive YAML access
 

@@ -27,9 +27,9 @@ import scala.jdk.CollectionConverters._
   * Tombstones: a MOR delta file holds a commit's upserts AND tombstones,
   * with the flag in its own `_graft_del` column (true on tombstones, null on
   * live rows); `delRows` is the bucket's tombstone count. Base files
-  * (compaction, COW) keep tombstones in separate files instead: `del` marks
-  * a tombstone-only file, so live reads of pure-base buckets prune them at
-  * the manifest with no scan. `delRows` = -1 on such split files: their flag
+  * (written by compaction) keep tombstones in separate files instead: `del`
+  * marks a tombstone-only file, so live reads of pure-base buckets prune
+  * them at the manifest with no scan. `delRows` = -1 on such split files: their flag
   * comes from `del`. `maxPos`: the bucket's max applied pos (per-bucket
   * applied-offset watermark). All statistics are counted by the write task
   * that wrote the file ([[TableWriter]]).
@@ -190,9 +190,9 @@ final class LakeTable private (val root: Path, val spark: SparkSession) {
   /** Hidden per-row event timestamp (millis may be null): persisted so the
     * read-side LWW resolve uses the SAME (pos, ts, tombstone-rank) order as
     * the merge path — inputs with duplicate positions no longer get
-    * nondeterministic MOR/COW-divergent winners (only an exact (pos, ts) tie
-    * between an insert and an update of the same key stays ambiguous, as it
-    * is in any LWW scheme).
+    * nondeterministic winners (only an exact (pos, ts) tie between an insert
+    * and an update of the same key stays ambiguous, as it is in any LWW
+    * scheme).
     */
   val TsCol = "_graft_ts"
 

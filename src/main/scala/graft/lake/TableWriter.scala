@@ -23,7 +23,7 @@ import scala.collection.mutable
 final case class WrittenPart(path: String, bucket: Int, del: Option[Boolean],
     rows: Long, maxPos: Long, tombstones: Long, replays: Long, maxSid: Int)
 
-/** The one parquet writer of every engine table write (MOR deltas, COW and
+/** The one parquet writer of every engine table write (MOR deltas and
   * compaction base files): each task of `df`'s plan writes its rows straight
   * to `<commitRel>/part-<task>-<attempt>-<uuid>.<codec>.parquet` through
   * Spark's own parquet `OutputWriterFactory`, and returns per-bucket

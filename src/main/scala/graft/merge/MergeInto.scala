@@ -8,12 +8,10 @@ import org.apache.spark.sql.types.StructType
 
 import java.util.UUID
 
-/** Counter semantics differ by mode, deliberately: MOR skips in-batch dedup
-  * (read-side LWW picks the same winners), so its counters tally EVENTS
-  * applied — the reference's Prometheus insert/update/delete counters count
-  * exactly that, one tick per handled event (metrics.go ops counters). COW
-  * dedups before rewriting, so its counters tally post-LWW ROWS. A hot key
-  * with k events in one batch therefore counts k in MOR and 1 in COW.
+/** Counters tally EVENTS applied: the merge skips in-batch dedup (read-side
+  * LWW picks the same winners), so a hot key with k events in one batch
+  * counts k — the reference's Prometheus insert/update/delete counters count
+  * exactly that, one tick per handled event (metrics.go ops counters).
   */
 final case class MergeResult(epoch: Long, skipped: Boolean,
     upserted: Long, deleted: Long, replayed: Long, touchedBuckets: Int)
@@ -34,25 +32,18 @@ final case class MergeResult(epoch: Long, skipped: Boolean,
   *     mongo.go:144-153); delete removes; delete-of-absent is tolerated
   *     (reference: elastic7.go:230-233 not_found ignored).
   *
-  * Scale design (100 TB / 1000 executors):
-  *   - **merge-on-read (default)**: ONE Spark job per micro-batch — scan →
-  *     partial-aggregated `max_by` LWW dedup (map-side combine collapses
-  *     per-key duplicates before the exchange, so hot-conversation skew
-  *     cannot overload a reducer) → write delta row-version files. Commit
-  *     cost is O(batch) regardless of table size (the Iceberg-v2 MOR shape):
-  *     the metadata commit serializes only this commit's manifest segment.
-  *     Each write task writes ONE delta file holding its buckets and returns
-  *     per-bucket (rows, maxPos, tombstones) stats ([[TableWriter]]), so the
-  *     manifest gets one entry per bucket of each file with no footer
-  *     re-read. The read path resolves per-key LWW over base+delta;
-  *     [[compact]] folds deltas into base, amortizing read cost.
-  *   - **copy-on-write (option)**: rewrites touched buckets, producing
-  *     resolve-free base files — right for low-churn tables / bootstrap.
-  *     The TABLE side never shuffles: touched buckets come from the small
-  *     deduped batch (manifest pruning) and matched/unmatched splitting uses
-  *     broadcast semi/anti hash joins of the batch KEY SET.
-  *   - an optional salted two-phase dedup bounds pathological single-key
-  *     floods (SURVEY.md §7.5).
+  * Scale design (100 TB / 1000 executors): merge-on-read, ONE Spark job per
+  * micro-batch — scan → bucket exchange → write delta row-version files,
+  * with no join against the table (the batch is applied without reading
+  * it). Commit cost is O(batch) regardless of table size (the Iceberg-v2
+  * MOR shape): the metadata commit serializes only this commit's manifest
+  * segment. Each write task writes ONE delta file holding its buckets and
+  * returns per-bucket (rows, maxPos, tombstones) stats ([[TableWriter]]),
+  * so the manifest gets one entry per bucket of each file with no footer
+  * re-read. The read path resolves per-key LWW over base+delta; [[compact]]
+  * folds deltas into base, amortizing read cost. An optional salted
+  * two-phase dedup (`salt`) slims the deltas of pathological single-key
+  * floods (SURVEY.md §7.5).
   *
   * Exactly-once: the (epoch, offset) fence rides in the same atomic commit
   * as the data. When a `pipelineId` is supplied, the fence is additionally
@@ -63,9 +54,6 @@ final case class MergeResult(epoch: Long, skipped: Boolean,
   */
 object MergeInto {
   import Types._
-
-  /** Broadcast the batch key set below this many deduped rows (COW path). */
-  val BroadcastKeyLimit = 4000000L
 
   /** Writer-wave fanout: enough (bucket, salt) partitions for ≥16 waves per
     * core so stragglers amortize; 1 when buckets already dominate cores.
@@ -154,7 +142,7 @@ object MergeInto {
       .agg(max_by(all2, ordCol).as("_w")).select(col("_w.*"))
   }
 
-  /** Fence/adoption decision shared by both merge modes. Returns true when
+  /** Fence/adoption decision of a merge. Returns true when
     * the batch must be SKIPPED as a replay; throws on a cross-pipeline
     * conflict (different checkpoint identity, epoch at-or-below the fence).
     */
@@ -198,7 +186,6 @@ object MergeInto {
     * commit (OnTableChanged analog — reference: service/handler.go:56-62).
     */
   def merge(table: LakeTable, batch: DataFrame, epoch: Long, salt: Int = 0,
-      mode: String = "mor",
       registry: Map[Int, StructType] = Map.empty,
       batchSchemaId: Int = -1,
       pipelineId: String = "",
@@ -207,23 +194,12 @@ object MergeInto {
     val m0 = table.refresh()
     if (fenced(m0, epoch, pipelineId, allowTakeover))
       return MergeResult(epoch, skipped = true, 0, 0, 0, 0)
-    if (mode == "mor")
-      mergeMor(table, m0, batch, epoch, salt, registry, batchSchemaId, pipelineId,
-        if (rowsHint >= 0) rowsHint else estimateRows(batch))
-    else mergeCow(table, m0, batch, epoch, salt, registry, batchSchemaId, pipelineId)
-  }
-
-  // ------------------------------------------------------------------- MOR
-
-  private def mergeMor(table: LakeTable, m0: TableMeta, batch: DataFrame,
-      epoch: Long, salt: Int, registry: Map[Int, StructType],
-      batchSchemaIdIn: Int, pipelineId: String, rowsHint: Long): MergeResult = {
     val keyCols = m0.keyCols
     val hasSid = batch.columns.contains("_schema_id")
-    val batchSchemaId = if (batchSchemaIdIn >= 0) batchSchemaIdIn else m0.schemaId
-    val fileSchema = registry.getOrElse(batchSchemaId,
-      if (batchSchemaId == m0.schemaId) m0.schema
-      else m0.schemaFor(batchSchemaId))
+    val sid = if (batchSchemaId >= 0) batchSchemaId else m0.schemaId
+    val fileSchema = registry.getOrElse(sid,
+      if (sid == m0.schemaId) m0.schema
+      else m0.schemaFor(sid))
 
     // No in-batch dedup: positions are unique, so the read-side LWW resolve
     // picks the same winner whether or not intra-batch losers are written.
@@ -239,7 +215,11 @@ object MergeInto {
     // become tombstone rows — key + pos, payload nulled, `_graft_del` true;
     // null on upserts), shuffle by bucket, and write ONE delta file per
     // write task; the tasks count the commit's stats while writing.
-    val morWidth = writePartitions(table, m0.numBuckets, rowsHint)
+    val morWidth = writePartitions(table, m0.numBuckets,
+      if (rowsHint >= 0) rowsHint else estimateRows(batch))
+    // a table that never applied an epoch has nothing to replay: its
+    // lastOffset (-1) would count every bootstrap row (pos -1) as a replay
+    val replayAtOrBelow = if (m0.lastEpoch == Long.MinValue) Long.MinValue else m0.lastOffset
     val commitRel = s"data/${UUID.randomUUID().toString.take(12)}"
     val parts = Timing.timed("  mor-write") {
       val stored = dedup.select(
@@ -261,7 +241,7 @@ object MergeInto {
       // otherwise idles the tail); a small batch shrinks the width
       // (file-count hygiene)
       TableWriter.write(table, stored.repartition(morWidth, col(TableWriter.BucketCol),
-        writeSalt(table, morWidth, m0.numBuckets)), commitRel, replayAtOrBelow = m0.lastOffset)
+        writeSalt(table, morWidth, m0.numBuckets)), commitRel, replayAtOrBelow)
     }
     val nDedup = parts.map(_.rows).sum
     if (nDedup == 0) { // empty batch: advance the fence only
@@ -275,9 +255,9 @@ object MergeInto {
     val nDeletes = parts.map(_.tombstones).sum
     val maxPos = parts.map(_.maxPos).max
     val nReplays = parts.map(_.replays).sum
-    val maxSid = if (hasSid) parts.map(_.maxSid).max else batchSchemaId
+    val maxSid = if (hasSid) parts.map(_.maxSid).max else sid
 
-    val newFiles = entries(parts, batchSchemaId, "delta")
+    val newFiles = entries(parts, sid, "delta")
     val lineage = newFiles.groupBy(_.bucket).map { case (b, fs) =>
       LineageEntry(epoch, b,
         upserted = fs.map(f => f.rows - f.tombstones).sum,
@@ -290,8 +270,8 @@ object MergeInto {
     // land in the SAME atomic commit as the data
     table.commitAtomic { latest =>
       var schemas = latest.schemas
-      if (!schemas.contains(batchSchemaId.toString))
-        schemas += batchSchemaId.toString -> fileSchema.json
+      if (!schemas.contains(sid.toString))
+        schemas += sid.toString -> fileSchema.json
       var schemaId = latest.schemaId
       if (maxSid > schemaId) {
         val target = registry.getOrElse(maxSid, throw new IllegalStateException(
@@ -316,130 +296,6 @@ object MergeInto {
 
     MergeResult(epoch, skipped = false, upserted = nDedup - nDeletes,
       deleted = nDeletes, replayed = nReplays, touchedBuckets = lineage.size)
-  }
-
-  // ------------------------------------------------------------------- COW
-
-  private def mergeCow(table: LakeTable, m0: TableMeta, batch: DataFrame,
-      epoch: Long, salt: Int, registry: Map[Int, StructType],
-      batchSchemaIdIn: Int, pipelineId: String): MergeResult = {
-    val keyCols = m0.keyCols
-    val hasSid = batch.columns.contains("_schema_id")
-    // same contract as mergeMor: an explicit batchSchemaId declares how a
-    // batch WITHOUT a _schema_id column is shaped, so the evolution path
-    // below fires for it too (previously cow silently ignored the argument
-    // and dropped new-column data on such batches)
-    val batchSchemaId = if (batchSchemaIdIn >= 0) batchSchemaIdIn else m0.schemaId
-    val bucket = table.bucketExpr(m0.numBuckets, m0.bucketCols)
-
-    val dedup = lwwDedup(batch, keyCols, salt)
-      .withColumn("_bucket", bucket)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val sidAgg = if (hasSid) max(col("_schema_id")) else max(lit(batchSchemaId))
-      val stats = dedup.groupBy("_bucket").agg(
-        count(lit(1)).as("n"),
-        sum(when(col("_op") === OpDelete, 1L).otherwise(0L)).as("dels"),
-        max(col("_pos")).as("maxPos"),
-        sum(when(col("_pos") <= m0.lastOffset, 1L).otherwise(0L)).as("replays"),
-        sidAgg.as("maxSid")).collect()
-
-      if (stats.isEmpty) {
-        table.commitAtomic(latest => latest.copy(
-          version = latest.version + 1, lastEpoch = epoch,
-          lastPipelineId = pidOr(latest, pipelineId),
-          history = latest.history :+ CommitInfo(latest.version + 1, epoch,
-            latest.lastOffset, System.currentTimeMillis(), "merge-empty")))
-        return MergeResult(epoch, skipped = false, 0, 0, 0, 0)
-      }
-
-      val touched = stats.map(_.getInt(0)).toSet
-      val nDedup = stats.map(_.getLong(1)).sum
-      val nDeletes = stats.map(_.getLong(2)).sum
-      val maxPos = stats.map(_.getLong(3)).max
-      val nReplays = stats.map(_.getLong(4)).sum
-
-      // evolve BEFORE the rewrite so new base files carry the new schema
-      val maxSid = stats.map(_.getInt(5)).max
-      if (maxSid > m0.schemaId) {
-        val target = registry.getOrElse(maxSid, throw new IllegalStateException(
-          s"batch carries schema_id $maxSid but registry has no schema for it"))
-        table.evolveSchema(maxSid, target)
-      }
-      val m = table.meta
-      // rewrite whole data files: a delta file shared with untouched buckets
-      // pulls them into the rewrite (its entries leave the manifest together)
-      val rewrite = wholeFiles(m.files, touched)
-      val rowCols = m.schema.fieldNames.toSeq
-      val batchCols = batch.columns.toSet
-      val isDel = col("_op") === OpDelete
-
-      def toStorage(winners: DataFrame): DataFrame = {
-        val wCols = winners.columns.toSet
-        winners.select(
-          (m.schema.fields.map { f =>
-            val base =
-              if (!wCols.contains(f.name)) lit(null)
-              else if (keyCols.contains(f.name)) col(f.name)
-              else when(isDel, lit(null)).otherwise(col(f.name))
-            base.cast(f.dataType).as(f.name)
-          }.toSeq
-            :+ col("_pos").as(table.PosCol)
-            :+ col("_event_ts").as(table.TsCol)
-            :+ isDel.as(TableWriter.SplitDelCol)): _*)
-      }
-
-      val keysOnly = dedup.select(keyCols.map(col): _*)
-      val keySet = if (nDedup <= BroadcastKeyLimit) broadcast(keysOnly) else keysOnly
-      val existing = table.snapshotForBuckets(m, rewrite) // rowCols + Pos/Ts/DelCol
-      val unmatched = existing.join(keySet, keyCols, "left_anti")
-        .withColumnRenamed(table.DelCol, TableWriter.SplitDelCol)
-      // Matched existing rows (live or tombstone) re-enter LWW as events at
-      // their applied (pos, ts): a replayed (old-pos) batch event loses; a
-      // newer one wins; tombstones compete as deletes so a replayed old
-      // insert cannot resurrect a deleted key.
-      val matchedAsEvents = existing.join(keySet, keyCols, "left_semi")
-        .withColumn("_op",
-          when(col(table.DelCol), lit(OpDelete)).otherwise(lit(OpInsert)))
-        .withColumnRenamed(table.PosCol, "_pos")
-        .withColumnRenamed(table.TsCol, "_event_ts")
-        .select((Seq("_op", "_pos", "_event_ts") ++ rowCols).map(col): _*)
-      val batchEvents = dedup.drop("_bucket", "_schema_id")
-        .select((Seq("_op", "_pos", "_event_ts") ++
-          rowCols.filter(batchCols.contains)).map(col): _*)
-      val winners = lwwDedup(matchedAsEvents.unionByName(batchEvents,
-        allowMissingColumns = true), keyCols)
-      val finalRows = unmatched.unionByName(toStorage(winners))
-        .withColumn(TableWriter.BucketCol, bucket)
-
-      val commitRel = s"data/${UUID.randomUUID().toString.take(12)}"
-      val parts = Timing.timed("  cow-write")(TableWriter.write(table, finalRows
-        .repartition(rewrite.size, col(TableWriter.BucketCol))
-        .sortWithinPartitions(TableWriter.BucketCol, TableWriter.SplitDelCol), commitRel))
-      val newFiles = entries(parts, m.schemaId, "base")
-      val lineage = stats.map { r =>
-        LineageEntry(epoch, r.getInt(0), upserted = r.getLong(1) - r.getLong(2),
-          deleted = r.getLong(2), appliedOffset = r.getLong(3))
-      }
-
-      table.commitAtomic { latest =>
-        latest.copy(
-          version = latest.version + 1,
-          lastEpoch = epoch,
-          lastOffset = math.max(latest.lastOffset, maxPos),
-          lastPipelineId = pidOr(latest, pipelineId),
-          files = (latest.files.filterNot(f => rewrite.contains(f.bucket)) ++ newFiles)
-            .sortBy(f => (f.bucket, f.path)),
-          lineage = latest.lineage ++ lineage,
-          history = latest.history :+ CommitInfo(latest.version + 1, epoch, maxPos,
-            System.currentTimeMillis(),
-            s"merge-cow:buckets=${touched.size}:rows=$nDedup", replayed = nReplays))
-      }
-
-      MergeResult(epoch, skipped = false,
-        upserted = nDedup - nDeletes, deleted = nDeletes,
-        replayed = nReplays, touchedBuckets = touched.size)
-    } finally dedup.unpersist()
   }
 
   // ----------------------------------------------------------- maintenance
@@ -557,19 +413,4 @@ object MergeInto {
     parts.map(p => FileEntry(p.bucket, p.path, p.rows, schemaId, kind,
       p.del.getOrElse(false), p.maxPos,
       delRows = if (p.del.isEmpty) p.tombstones else -1L)).toList
-
-  /** `buckets` widened, to a fixpoint, by every bucket that shares a data
-    * file with one of them.
-    */
-  private def wholeFiles(files: Seq[FileEntry], buckets: Set[Int]): Set[Int] = {
-    val shared = files.groupBy(_.path).values.map(_.map(_.bucket).toSet).filter(_.size > 1)
-    var out = buckets
-    var grown = true
-    while (grown) {
-      val next = out ++ shared.filter(_.exists(out.contains)).flatten
-      grown = next.size > out.size
-      out = next
-    }
-    out
-  }
 }

@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.lake.{CommitInfo, LakeTable}
+import graft.lake.LakeTable
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.streaming.{Offset => V1Offset, Source}
 import org.apache.spark.sql.execution.streaming.runtime.LongOffset
@@ -33,8 +33,11 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
   *     the polled range is still emitted — data files are immutable until
   *     vacuum). A tail must keep up within the vacuum retention window, the
   *     standard CDC log-retention contract.
-  *   - MOR tables only (the default): COW merges rewrite whole buckets, so
-  *     their commits carry no per-change delta files to tail.
+  *   - every merge, [[graft.streaming.Bootstrap]]'s stock load included,
+  *     lands its rows as delta files, so a fresh `startingVersion` 1 replay
+  *     of a table whose history is retained starts complete. (A table
+  *     written by an earlier build may hold copy-on-write commits, whose
+  *     base files no tail emits: bootstrap its downstream instead.)
   *   - schema is pinned at source creation; restart the stream to pick up
   *     evolved columns (the same rule as every file-based Spark source).
   *
@@ -68,35 +71,9 @@ final class GraftStreamSource(spark: SparkSession, path: String,
   override def getOffset: Option[V1Offset] =
     Some(LongOffset(table.refresh().version.toLong))
 
-  /** Commits in `(fromV, toV]` that landed resolved BASE files outside
-    * compaction — cow merges, including [[graft.streaming.Bootstrap]]
-    * (mode=cow): their rows carry no delta files, so the tail never emits
-    * them and a fresh full replay that spans them starts INCOMPLETE.
-    * (`compact:*` only folds deltas that were already emitted; `create` /
-    * `vacuum-snapshot` / `evolve-schema` add no new rows.)
-    */
-  private[graft] def baseCommitsIn(fromV: Int, toV: Int): Seq[CommitInfo] =
-    table.metaAt(toV).history.filter(h =>
-      h.version > fromV && h.version <= toV &&
-        h.operation.startsWith("merge-cow"))
-
   override def getBatch(start: Option[V1Offset], end: V1Offset): DataFrame = {
     val vs = start.map(versionOf).getOrElse(startVersion)
     val ve = versionOf(end)
-    if (start.isEmpty && vs < ve) {
-      // fresh-checkpoint replay: 'a new derived table starts complete' only
-      // holds if every replayed commit is delta-carrying — warn loudly when
-      // cow/bootstrap commits fall inside the range (their rows will be
-      // silently absent from the tail; Bootstrap the downstream first)
-      val baseCommits = baseCommitsIn(vs, ve)
-      if (baseCommits.nonEmpty)
-        System.err.println(s"[graft] WARNING: replaying $path from version " +
-          s"$vs, but version(s) ${baseCommits.map(_.version).mkString(",")} " +
-          s"(${baseCommits.map(_.operation).mkString("; ")}) landed base " +
-          "files the delta tail cannot emit — the derived table will start " +
-          "INCOMPLETE. Bootstrap the downstream from a snapshot first, " +
-          "then tail from now (table_start_version: 0).")
-    }
     val files = table.addedFilesBetween(vs, ve).filter(_.kind == "delta")
     val m = table.metaAt(ve)
     val out = table.readFilesAligned(m, files).select(

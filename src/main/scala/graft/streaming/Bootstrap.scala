@@ -18,6 +18,12 @@ import org.apache.spark.sql.functions._
   * change event (pos ≥ 0) supersedes the snapshot under LWW — the stream can
   * even start concurrently-overlapping, as with the reference's
   * stock-then-incremental handoff.
+  *
+  * The load is one ordinary MOR merge at epoch -1: the stock rows land as
+  * delta files, so a `format("graft")` tail from version 1 replays them like
+  * any change. The stream's auto-compaction folds them into base once the
+  * deltas reach `autoCompactMinRows`; after a CLI-only load, run
+  * `Main compact`.
   */
 object Bootstrap {
   val BootstrapEpoch: Long = -1L
@@ -27,8 +33,7 @@ object Bootstrap {
     val asEvents = snapshot.select(
       (Seq(lit(Types.OpInsert).as("_op"), lit(startPos).as("_pos"),
         lit(null).cast("timestamp").as("_event_ts")) ++ rowCols.map(col)): _*)
-    // cow ⇒ the stock load lands as resolved base files
-    val r = MergeInto.merge(table, asEvents, BootstrapEpoch, mode = "cow")
+    val r = MergeInto.merge(table, asEvents, BootstrapEpoch)
     // epoch -1 passes the fence only on a FRESH table (lastEpoch starts at
     // Long.MinValue): on a table the stream already wrote, the load would be
     // silently fenced as a replay and every snapshot-only key dropped —

@@ -24,7 +24,8 @@ import org.apache.spark.sql.types.StructType
   *        write and checkpoint save replays the batch, which the fence
   *        no-ops — exactly-once table state instead of at-least-once.
   *  - OnTableChanged schema refresh (handler.go:56-62)
-  *      → schema_id watermark per batch drives `evolveSchema` before decode.
+  *      → the batch's schema_id watermark evolves the table in the merge's
+  *        own commit.
   */
 object CdcPipeline {
 
@@ -34,7 +35,6 @@ object CdcPipeline {
       maxFilesPerTrigger: Int = 4,
       triggerMs: Long = 200L, // reference default flush_bulk_interval=200ms
       saltedDedup: Int = 0,
-      mergeMode: String = "mor", // mor = O(batch) commits; cow = resolved buckets
       // fold deltas into base when deltaRows ≥ ratio × baseRows (and ≥ minRows)
       autoCompactRatio: Double = 4.0,
       autoCompactMinRows: Long = 200000L,
@@ -168,12 +168,10 @@ object CdcPipeline {
       case "table" =>
         // tail another lake table's commits (pipeline chaining). Default
         // start = version 1: a fresh downstream replays the full retained
-        // delta history and starts complete PROVIDED every replayed commit
-        // is delta-carrying (MOR merges) — cow/bootstrap commits land base
-        // files the tail cannot emit, and GraftStreamSource warns loudly on
-        // a fresh replay that spans one (Bootstrap the downstream first).
-        // Its own checkpoint dedups across restarts; history beyond the
-        // upstream's vacuum retention needs a Bootstrap first.
+        // delta history (bootstrap loads included: they land deltas too)
+        // and starts complete. Its own checkpoint dedups across restarts;
+        // history beyond the upstream's vacuum retention needs a Bootstrap
+        // first.
         // table_start_version: 0 tails from NOW instead.
         val r = spark.readStream.format("graft")
         (if (plan.tableStartVersion > 0)
@@ -259,8 +257,8 @@ object CdcPipeline {
   private def sink(plan: Plan, r: Route, rows: DataFrame, epoch: Long,
       newestSid: Int, cfg: Config, pipelineId: String): MergeResult = r.sink match {
     case Lake(table, registry) =>
-      def merge = MergeInto.merge(table, rows, epoch, cfg.saltedDedup, cfg.mergeMode,
-        registry, batchSchemaId = newestSid, pipelineId = pipelineId,
+      def merge = MergeInto.merge(table, rows, epoch, cfg.saltedDedup, registry,
+        batchSchemaId = newestSid, pipelineId = pipelineId,
         allowTakeover = cfg.allowPipelineTakeover)
       if (plan.timed) Timing.timed("merge", stamp = true)(merge) else merge
     case Feed(outDir, state, _, _) =>

@@ -115,7 +115,7 @@ object ConfigPipeline {
   private def cdcConfig(c: GraftConfig): CdcPipeline.Config =
     CdcPipeline.Config(c.changelogDir, c.checkpointDir,
       maxFilesPerTrigger = c.maxFilesPerTrigger, triggerMs = c.triggerMs,
-      saltedDedup = c.saltedDedup, mergeMode = c.mergeMode,
+      saltedDedup = c.saltedDedup,
       autoCompactRatio = c.autoCompactRatio,
       autoCompactMinRows = c.autoCompactMinRows,
       registry = registryOf(c),

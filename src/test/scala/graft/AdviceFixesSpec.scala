@@ -5,7 +5,6 @@ import graft.functions.{Dedup, Packing}
 import graft.lake.LakeTable
 import graft.merge.MergeInto
 import graft.rules.{EventTransform, ExprOp, ExprTransform, SinkOp}
-import graft.sources.GraftStreamSource
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -168,8 +167,8 @@ class AdviceFixesSpec extends SparkSpec {
     }
   }
 
-  test("graft stream source: fresh full replay across a cow/bootstrap " +
-    "commit is detected (base files never reach the delta tail)") {
+  test("graft stream source: a fresh startingVersion 1 tail of a bootstrapped, " +
+    "compacted table emits every stock and stream row") {
     val work = tmpDir("advice-tail")
     val t = LakeTable.create(spark, s"$work/t",
       StructType.fromDDL("k STRING, v STRING"), Seq("k"), Seq("k"), 4)
@@ -177,18 +176,26 @@ class AdviceFixesSpec extends SparkSpec {
       rows.toDF("_op", "_pos", "k", "v")
         .withColumn("_event_ts", lit(null).cast("timestamp"))
         .select("_op", "_pos", "_event_ts", "k", "v")
-    import graft.core.Types.OpInsert
-    MergeInto.merge(t, batch((OpInsert, 1L, "a", "v1")), 0) // mor → delta
-    MergeInto.merge(t, batch((OpInsert, 2L, "b", "v2")), 1,
-      mode = "cow") // bootstrap-style → base files
-    MergeInto.merge(t, batch((OpInsert, 3L, "c", "v3")), 2) // mor
-    val src = new GraftStreamSource(spark, s"$work/t",
-      Map("startingversion" -> "1"))
-    val v = t.refresh().version
-    val offenders = src.baseCommitsIn(1, v)
-    assert(offenders.map(_.operation).exists(_.startsWith("merge-cow")),
-      s"cow commit not detected in (1, $v]: $offenders")
-    // delta-only ranges are clean
-    assert(src.baseCommitsIn(v - 1, v).isEmpty)
+    import graft.core.Types.{OpInsert, OpUpdate}
+    graft.streaming.Bootstrap.run(t, Seq(("a", "s1"), ("b", "s2")).toDF("k", "v"))
+    MergeInto.merge(t, batch((OpInsert, 1L, "c", "v1")), 0)
+    MergeInto.merge(t, batch((OpUpdate, 2L, "a", "v2")), 1)
+    MergeInto.compact(t)
+    assert(t.refresh().files.forall(_.kind == "base"))
+    val got = new java.util.concurrent.ConcurrentLinkedQueue[(String, String, String, Long)]()
+    val q = spark.readStream.format("graft").option("startingVersion", "1")
+      .load(s"$work/t")
+      .writeStream.option("checkpointLocation", s"$work/cp")
+      .foreachBatch { (df: DataFrame, _: Long) =>
+        df.collect().foreach(r =>
+          got.add((r.getString(0), r.getString(1), r.getString(2), r.getLong(3))))
+        ()
+      }.start()
+    try {
+      q.processAllAvailable()
+      import scala.jdk.CollectionConverters._
+      assert(got.asScala.toSet == Set(("a", "s1", "upsert", -1L), ("b", "s2", "upsert", -1L),
+        ("c", "v1", "upsert", 1L), ("a", "v2", "upsert", 2L)), s"got=$got")
+    } finally q.stop()
   }
 }

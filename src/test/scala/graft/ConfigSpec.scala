@@ -606,7 +606,6 @@ class ConfigSpec extends SparkSpec {
     val c = GraftConfig.parse(
       """changelog_dir: /x/log
         |checkpoint_dir: /x/cp
-        |merge_mode: cow
         |routes:
         |  - name: r1
         |    target: lake
@@ -621,12 +620,22 @@ class ConfigSpec extends SparkSpec {
         |    ops:
         |      - {target: redis, action: SET, key: "concat('u:', k)", value: v}
         |""".stripMargin)
-    assert(c.mergeMode == "cow" && c.maxFilesPerTrigger == 4)
+    assert(c.maxFilesPerTrigger == 4)
     assert(c.routes.head.rule.filterExpr.contains("v IS NOT NULL"))
     assert(c.routes(1).ops.head.action == "SET")
     intercept[IllegalArgumentException](GraftConfig.parse("routes: []"))
     intercept[IllegalArgumentException](GraftConfig.parse(
       "changelog_dir: /x\ncheckpoint_dir: /y\nroutes:\n  - name: r\n    target: lake\n"))
+    // unknown keys fail the parse: a removed option, a misspelled route key
+    val lake = "routes:\n  - name: r\n    table_dir: /x/t\n    key_columns: [k]\n"
+    val removed = intercept[IllegalArgumentException](GraftConfig.parse(
+      "changelog_dir: /x\ncheckpoint_dir: /y\nmerge_mode: cow\n" + lake))
+    assert(removed.getMessage.contains("merge_mode") &&
+      removed.getMessage.contains("max_files_per_trigger"), removed.getMessage)
+    val typo = intercept[IllegalArgumentException](GraftConfig.parse(
+      "changelog_dir: /x\ncheckpoint_dir: /y\n" + lake + "    num_bucket: 8\n"))
+    assert(typo.getMessage.contains("num_bucket") &&
+      typo.getMessage.contains("num_buckets"), typo.getMessage)
   }
 
   test("ExprTransform: 0..n config-string ops per event == compiled script sink (q13 shape)") {

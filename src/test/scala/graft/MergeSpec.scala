@@ -8,8 +8,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** Unit semantics of the MERGE operator (SURVEY.md §2.4/§5.3): every branch
-  * of the apply algebra on tiny hand-built batches, in both MOR and COW
-  * modes, which must be observationally identical.
+  * of the apply algebra on tiny hand-built batches, through the one
+  * merge-on-read path and the compaction that folds its deltas.
   */
 class MergeSpec extends SparkSpec {
   import Types._
@@ -18,8 +18,8 @@ class MergeSpec extends SparkSpec {
     StructField("k", StringType, nullable = false),
     StructField("v", StringType)))
 
-  private def mkTable(mode: String) = LakeTable.create(spark,
-    tmpDir(s"graft-merge-$mode").resolve("t").toString, schema,
+  private def mkTable(label: String) = LakeTable.create(spark,
+    tmpDir(s"graft-merge-$label").resolve("t").toString, schema,
     keyCols = Seq("k"), bucketCols = Seq("k"), numBuckets = 4)
 
   private def batch(rows: (String, Long, String, String)*): DataFrame = {
@@ -32,78 +32,62 @@ class MergeSpec extends SparkSpec {
   private def state(t: LakeTable): Map[String, String] =
     t.snapshot().collect().map(r => r.getString(0) -> r.getString(1)).toMap
 
-  for (mode <- Seq("mor", "cow")) {
-    test(s"[$mode] insert / update-as-upsert / delete / delete-of-absent") {
-      val t = mkTable(mode)
-      MergeInto.merge(t, batch(
-        (OpInsert, 1L, "a", "a1"),
-        (OpInsert, 2L, "b", "b1"),
-        (OpUpdate, 3L, "c", "c1"), // update of absent key upserts (Lua-mongo UPSERT)
-        (OpDelete, 4L, "zz", null) // delete-of-absent tolerated (elastic7 not_found)
-      ), epoch = 0, mode = mode)
-      assert(state(t) == Map("a" -> "a1", "b" -> "b1", "c" -> "c1"))
+  test("[mor] insert / update-as-upsert / delete / delete-of-absent") {
+    val t = mkTable("mor")
+    MergeInto.merge(t, batch(
+      (OpInsert, 1L, "a", "a1"),
+      (OpInsert, 2L, "b", "b1"),
+      (OpUpdate, 3L, "c", "c1"), // update of absent key upserts (Lua-mongo UPSERT)
+      (OpDelete, 4L, "zz", null) // delete-of-absent tolerated (elastic7 not_found)
+    ), epoch = 0)
+    assert(state(t) == Map("a" -> "a1", "b" -> "b1", "c" -> "c1"))
 
-      MergeInto.merge(t, batch(
-        (OpUpdate, 5L, "a", "a2"), // genuine update
-        (OpDelete, 6L, "b", null)  // genuine delete
-      ), epoch = 1, mode = mode)
-      assert(state(t) == Map("a" -> "a2", "c" -> "c1"))
-    }
-
-    test(s"[$mode] in-batch LWW: greatest pos wins; delete winner removes") {
-      val t = mkTable(mode)
-      MergeInto.merge(t, batch(
-        (OpInsert, 1L, "a", "old"),
-        (OpUpdate, 9L, "a", "new"),
-        (OpUpdate, 5L, "a", "mid"),
-        (OpInsert, 2L, "b", "b1"),
-        (OpDelete, 8L, "b", null),
-        (OpInsert, 3L, "b", "b2")
-      ), epoch = 0, mode = mode)
-      assert(state(t) == Map("a" -> "new"))
-    }
-
-    test(s"[$mode] cross-batch LWW: replayed older events lose; newer win") {
-      val t = mkTable(mode)
-      MergeInto.merge(t, batch((OpInsert, 10L, "a", "v10")), 0, mode = mode)
-      // replay an OLDER pos in a LATER epoch — must not regress the row
-      MergeInto.merge(t, batch((OpUpdate, 5L, "a", "v5")), 1, mode = mode)
-      assert(state(t) == Map("a" -> "v10"))
-      MergeInto.merge(t, batch((OpUpdate, 11L, "a", "v11")), 2, mode = mode)
-      assert(state(t) == Map("a" -> "v11"))
-    }
-
-    test(s"[$mode] tombstones defeat replayed-old-insert resurrection") {
-      val t = mkTable(mode)
-      MergeInto.merge(t, batch((OpInsert, 1L, "a", "v1")), 0, mode = mode)
-      MergeInto.merge(t, batch((OpDelete, 9L, "a", null)), 1, mode = mode)
-      assert(state(t) == Map.empty[String, String])
-      // the original insert replays after the delete was applied
-      MergeInto.merge(t, batch((OpInsert, 1L, "a", "v1")), 2, mode = mode)
-      assert(state(t) == Map.empty[String, String], "deleted key resurrected!")
-    }
-
-    test(s"[$mode] epoch fence: same epoch applied twice is a no-op") {
-      val t = mkTable(mode)
-      MergeInto.merge(t, batch((OpInsert, 1L, "a", "v1")), 0, mode = mode)
-      val r = MergeInto.merge(t, batch((OpInsert, 2L, "a", "OTHER")), 0, mode = mode)
-      assert(r.skipped)
-      assert(state(t) == Map("a" -> "v1"))
-    }
+    MergeInto.merge(t, batch(
+      (OpUpdate, 5L, "a", "a2"), // genuine update
+      (OpDelete, 6L, "b", null)  // genuine delete
+    ), epoch = 1)
+    assert(state(t) == Map("a" -> "a2", "c" -> "c1"))
   }
 
-  test("MOR and COW produce identical state on the same event sequence") {
-    val batches = Seq(
-      batch((OpInsert, 1L, "a", "a1"), (OpInsert, 2L, "b", "b1"), (OpInsert, 3L, "c", "c1")),
-      batch((OpUpdate, 4L, "a", "a2"), (OpDelete, 5L, "b", null)),
-      batch((OpInsert, 6L, "d", "d1"), (OpUpdate, 7L, "d", "d2"), (OpDelete, 8L, "c", null)))
-    val mor = mkTable("mor"); val cow = mkTable("cow2")
-    batches.zipWithIndex.foreach { case (b, e) =>
-      MergeInto.merge(mor, b, e, mode = "mor")
-      MergeInto.merge(cow, b, e, mode = "cow")
-    }
-    assert(state(mor) == state(cow))
-    assert(state(mor) == Map("a" -> "a2", "d" -> "d2"))
+  test("[mor] in-batch LWW: greatest pos wins; delete winner removes") {
+    val t = mkTable("mor")
+    MergeInto.merge(t, batch(
+      (OpInsert, 1L, "a", "old"),
+      (OpUpdate, 9L, "a", "new"),
+      (OpUpdate, 5L, "a", "mid"),
+      (OpInsert, 2L, "b", "b1"),
+      (OpDelete, 8L, "b", null),
+      (OpInsert, 3L, "b", "b2")
+    ), epoch = 0)
+    assert(state(t) == Map("a" -> "new"))
+  }
+
+  test("[mor] cross-batch LWW: replayed older events lose; newer win") {
+    val t = mkTable("mor")
+    MergeInto.merge(t, batch((OpInsert, 10L, "a", "v10")), 0)
+    // replay an OLDER pos in a LATER epoch — must not regress the row
+    MergeInto.merge(t, batch((OpUpdate, 5L, "a", "v5")), 1)
+    assert(state(t) == Map("a" -> "v10"))
+    MergeInto.merge(t, batch((OpUpdate, 11L, "a", "v11")), 2)
+    assert(state(t) == Map("a" -> "v11"))
+  }
+
+  test("[mor] tombstones defeat replayed-old-insert resurrection") {
+    val t = mkTable("mor")
+    MergeInto.merge(t, batch((OpInsert, 1L, "a", "v1")), 0)
+    MergeInto.merge(t, batch((OpDelete, 9L, "a", null)), 1)
+    assert(state(t) == Map.empty[String, String])
+    // the original insert replays after the delete was applied
+    MergeInto.merge(t, batch((OpInsert, 1L, "a", "v1")), 2)
+    assert(state(t) == Map.empty[String, String], "deleted key resurrected!")
+  }
+
+  test("[mor] epoch fence: same epoch applied twice is a no-op") {
+    val t = mkTable("mor")
+    MergeInto.merge(t, batch((OpInsert, 1L, "a", "v1")), 0)
+    val r = MergeInto.merge(t, batch((OpInsert, 2L, "a", "OTHER")), 0)
+    assert(r.skipped)
+    assert(state(t) == Map("a" -> "v1"))
   }
 
   test("compaction folds deltas without changing state; read path prunes deltas") {
@@ -126,9 +110,10 @@ class MergeSpec extends SparkSpec {
 
   test("selective compaction: only delta-carrying buckets rewrite; others keep their files") {
     val t = mkTable("compact-sel")
-    // base layer across several buckets (cow ⇒ resolved base files)
+    // base layer across several buckets (merge + compact ⇒ resolved base files)
     val seed = (0 until 8).map(i => (OpInsert, i.toLong, s"k$i", s"v$i"))
-    MergeInto.merge(t, batch(seed: _*), 0, mode = "cow")
+    MergeInto.merge(t, batch(seed: _*), 0)
+    MergeInto.compact(t)
     val baseEntries = t.refresh().files
     assert(baseEntries.map(_.bucket).distinct.size > 1, "seed should span buckets")
     // churn ONE key → delta lands in exactly its bucket
@@ -172,8 +157,8 @@ class MergeSpec extends SparkSpec {
     assert(winners("b")._1 == "delete") // delete outranks insert at equal (pos, ts)
   }
 
-  test("MOR merges, then a COW merge on a subset of buckets: state equals the " +
-    "oracle and no data file loses only some of its bucket entries") {
+  test("MOR merges, then a compaction of their shared delta files: state equals " +
+    "the oracle and no data file loses only some of its bucket entries") {
     import spark.implicits._
     val t = LakeTable.create(spark, tmpDir("graft-merge-mixed").resolve("t").toString,
       schema, Seq("k"), Seq("k"), 8)
@@ -194,22 +179,24 @@ class MergeSpec extends SparkSpec {
     val shared = before.files.groupBy(_.path).filter(_._2.size > 1)
     assert(shared.nonEmpty, s"no shared delta file: ${before.files}")
 
-    // COW batch on ONE bucket that shares a delta file with other buckets
+    // a batch on ONE bucket that shares a delta file with other buckets,
+    // then a compaction that folds every delta (shared files included)
     val b0 = shared.head._2.head.bucket
     val inB0 = (0 until 200).map(i => s"k$i").toDF("k")
       .where(t.bucketExpr(8, Seq("k")) === b0).as[String].collect().toSeq
     val (old, fresh) = inB0.partition(oracle.contains)
     assert(old.nonEmpty && fresh.nonEmpty, s"bucket $b0 keys: $inB0")
-    val cowEvents = Seq(event(old.head, OpUpdate), event(fresh.head, OpInsert)) ++
+    val b0Events = Seq(event(old.head, OpUpdate), event(fresh.head, OpInsert)) ++
       old.drop(1).take(1).map(event(_, OpDelete))
-    MergeInto.merge(t, batch(cowEvents: _*), 3, mode = "cow")
+    MergeInto.merge(t, batch(b0Events: _*), 3)
+    MergeInto.compact(t)
     assert(state(t) == oracle.toMap)
     val after = t.refresh()
     val afterByPath = after.files.groupBy(_.path)
     before.files.groupBy(_.path).foreach { case (p, es) =>
       afterByPath.get(p).foreach(now => assert(now.toSet == es.toSet, s"$p lost entries"))
     }
-    assert(!afterByPath.contains(shared.head._1), "the shared file of the COW bucket stayed")
+    assert(!afterByPath.contains(shared.head._1), "the shared file of the bucket stayed")
 
     // MOR on top of the rewrite, and a commit that drops one entry of a
     // shared file fails loudly
@@ -259,7 +246,7 @@ class MergeSpec extends SparkSpec {
   }
 
   test("a SinkOpState-shaped table (non-nullable columns) round-trips " +
-    "tombstones through MOR, compaction and COW") {
+    "tombstones through MOR, compaction and MOR over the compacted base") {
     import spark.implicits._
     val t = SinkOpState.createOrLoad(spark,
       tmpDir("graft-merge-state").resolve("state").toString, numBuckets = 4)
@@ -279,7 +266,7 @@ class MergeSpec extends SparkSpec {
     assert(live == Map("b" -> "5", "c" -> "3")) // a second read of the same files
     MergeInto.compact(t)
     assert(live == Map("b" -> "5", "c" -> "3"))
-    MergeInto.merge(t, ops((OpDelete, 6L, "c", null)), 2, mode = "cow")
+    MergeInto.merge(t, ops((OpDelete, 6L, "c", null)), 2)
     MergeInto.merge(t, ops((OpInsert, 7L, "a", "7")), 3)
     assert(live == Map("a" -> "7", "b" -> "5"))
   }
@@ -297,5 +284,16 @@ class MergeSpec extends SparkSpec {
     // surface as an error instead of reporting upserted=0
     val e = intercept[IllegalStateException](graft.streaming.Bootstrap.run(t, snap))
     assert(e.getMessage.contains("bootstrap fenced"))
+  }
+
+  test("bootstrap of a fresh table counts no stock row as a replay") {
+    import spark.implicits._
+    val t = mkTable("boot-replays")
+    val r = graft.streaming.Bootstrap.run(t, Seq(("a", "snap-a"), ("b", "snap-b")).toDF("k", "v"))
+    assert(r.upserted == 2 && r.replayed == 0, s"$r")
+    assert(t.refresh().history.last.replayed == 0, s"${t.meta.history.last}")
+    // a stream batch after the load still counts its genuine replays
+    MergeInto.merge(t, batch((OpUpdate, 0L, "a", "live-a")), 0)
+    assert(MergeInto.merge(t, batch((OpUpdate, 0L, "a", "live-a")), 1).replayed == 1)
   }
 }

@@ -246,7 +246,8 @@ class PlanSpec extends SparkSpec {
       Seq("k"), Seq("k"), 4)
     MergeInto.merge(t, Seq(("insert", 1L, "a", "v1", "w1"), ("insert", 2L, "b", "v2", "w2"))
       .toDF("_op", "_pos", "k", "v", "w")
-      .withColumn("_event_ts", lit(null).cast("timestamp")), 0, mode = "cow")
+      .withColumn("_event_ts", lit(null).cast("timestamp")), 0)
+    MergeInto.compact(t) // base files
     val rel = new graft.sources.GraftDataSource()
       .createRelation(spark.sqlContext, Map("path" -> dir))
       .asInstanceOf[graft.sources.GraftRelation]
