@@ -166,7 +166,7 @@ object Main {
       println(s"version=${m.version} schema_id=${m.schemaId} lastEpoch=${m.lastEpoch} " +
         s"lastOffset=${m.lastOffset} files=${m.dataFiles} buckets=${m.numBuckets}")
       println(s"rows=${table.snapshot().count()}")
-      println("lineage (last 10 commits):")
+      println("lineage (retained versions, newest first):")
       table.lineage().orderBy(org.apache.spark.sql.functions.desc("epoch"))
         .show(10, truncate = false)
 

@@ -32,7 +32,9 @@ import scala.jdk.CollectionConverters._
   * them at the manifest with no scan. `delRows` = -1 on such split files: their flag
   * comes from `del`. `maxPos`: the bucket's max applied pos (per-bucket
   * applied-offset watermark). All statistics are counted by the write task
-  * that wrote the file ([[TableWriter]]).
+  * that wrote the file ([[TableWriter]]). The delta entries a commit adds
+  * are also its lineage: [[LakeTable.lineage]] reads them, nothing else
+  * stores it.
   */
 final case class FileEntry(bucket: Int, path: String, rows: Long, schemaId: Int,
     kind: String = "base", del: Boolean = false, maxPos: Long = -1L,
@@ -43,19 +45,24 @@ final case class FileEntry(bucket: Int, path: String, rows: Long, schemaId: Int,
   def tombstones: Long = if (storesDel) delRows else if (del) rows else 0L
 }
 
-/** Per-commit, per-bucket lineage record — the analog of the reference's
+/** Per-commit, per-bucket lineage row — the analog of the reference's
   * Prometheus insert/update/delete counters and position gauge
-  * (reference: metrics/metrics.go:145-223), persisted INSIDE the table
-  * metadata so it survives failover and is queryable as a DataFrame.
-  * `replayed` (events at-or-below the previous applied offset) is tracked
-  * per COMMIT (see [[CommitInfo.replayed]]); per-bucket counters come free
-  * from the write tasks' statistics.
+  * (reference: metrics/metrics.go:145-223). Not stored: [[LakeTable.lineage]]
+  * derives each row from the delta [[FileEntry]]s one commit added to one
+  * bucket (`rows − tombstones`, `tombstones`, max `maxPos`), so it reads
+  * what the manifest segments retain.
   */
 final case class LineageEntry(epoch: Long, bucket: Int, upserted: Long,
     deleted: Long, appliedOffset: Long)
 
+/** One commit's record, stored in its own segment. `upserted`/`deleted`
+  * are the events a merge applied (0 for other operations) and `replayed`
+  * those at-or-below the previous applied offset; the metrics endpoint sums
+  * them over the retained `history`.
+  */
 final case class CommitInfo(version: Int, epoch: Long, offset: Long,
-    tsMillis: Long, operation: String, replayed: Long = 0L)
+    tsMillis: Long, operation: String, replayed: Long = 0L,
+    upserted: Long = 0L, deleted: Long = 0L)
 
 /** The FOLDED, in-memory view of the table at one version. The pair
   * (lastEpoch, lastOffset) is the exactly-once fence: it is committed
@@ -68,8 +75,9 @@ final case class CommitInfo(version: Int, epoch: Long, offset: Long,
   * txn-appId pattern).
   *
   * NOT serialized as a whole: on disk each version is a [[MetaSegment]]
-  * (delta of one commit, or a periodic full snapshot); `baseVersion` points
-  * at the snapshot segment this view folds from.
+  * (one commit's record, plus a periodic full snapshot); `baseVersion`
+  * points at the snapshot segment this view folds from. It holds no
+  * lineage: [[LakeTable.lineage]] reads that from the segments.
   */
 final case class TableMeta(
     version: Int,
@@ -81,7 +89,6 @@ final case class TableMeta(
     lastEpoch: Long,
     lastOffset: Long,
     files: List[FileEntry],
-    lineage: List[LineageEntry],
     history: List[CommitInfo],
     baseVersion: Int = 1,
     lastPipelineId: String = "",
@@ -99,13 +106,19 @@ final case class TableMeta(
   def dataFiles: Int = files.iterator.map(_.path).distinct.size
 }
 
-/** One version file on disk. A commit serializes ONLY its own delta (files
-  * added/removed, its lineage/history rows) plus the small scalar state;
-  * every `SnapshotEvery` commits a full snapshot segment (`filesFull`
-  * present) re-anchors the chain — the Iceberg manifest-list shape. Commit
-  * cost is therefore O(batch), not O(table): round 1 reserialized the entire
-  * file list + up to 100k lineage rows on EVERY commit, which at 100 TB
-  * (millions of files) means GBs of JSON per micro-batch.
+/** One version file on disk. Every segment records its own commit once:
+  * the files it added (`addedFiles`), the paths it removed and its
+  * `historyAdd` row, plus the small scalar state. Every `SnapshotEvery`
+  * commits a snapshot segment also carries the full file list and history
+  * (`filesFull`, `historyFull`) and re-anchors the chain — the Iceberg
+  * manifest-list shape. Commit cost is therefore O(batch) between
+  * snapshots.
+  *
+  * Snapshot segments written by earlier builds (v > 1, `historyAdd`
+  * empty) hold only the full lists: their own adds are unknown, so
+  * [[LakeTable.addedFilesBetween]] and [[LakeTable.lineage]] refuse them
+  * and `vacuum(1)` replaces them. Those builds also stored lineage lists,
+  * which parsing ignores.
   */
 final case class MetaSegment(
     version: Int,
@@ -120,19 +133,20 @@ final case class MetaSegment(
     lastPipelineId: String,
     addedFiles: List[FileEntry],
     removedPaths: List[String],
-    lineageAdd: List[LineageEntry],
     historyAdd: List[CommitInfo],
     filesFull: Option[List[FileEntry]] = None,
-    lineageFull: Option[List[LineageEntry]] = None,
     historyFull: Option[List[CommitInfo]] = None,
     lastCompactOffset: Long = -1L) {
   def isSnapshot: Boolean = filesFull.isDefined
+  /** A snapshot written before segments recorded their own commit. */
+  def lacksOwnCommit: Boolean = isSnapshot && version > 1 && historyAdd.isEmpty
 }
 
 /** Minimal snapshot-table format ("LakeTable") with the lake properties the
   * north rule exercises: atomic snapshot commits, epoch/offset fencing,
   * schema evolution (add-column, type-widen), hash-bucketed parquet data
-  * files, a time-travelable version list, and embedded per-partition lineage.
+  * files, a time-travelable version list, and per-partition lineage read
+  * from the manifest entries each commit added.
   *
   * Layout:
   * {{{
@@ -306,11 +320,35 @@ final class LakeTable private (val root: Path, val spark: SparkSession) {
   }
 
   /** Lineage as a queryable DataFrame (C5 analog: the reference's web-admin
-    * metrics read path, web/router.go:64-126, as a table instead of gauges).
+    * metrics read path, web/router.go:64-126, as a table instead of gauges):
+    * one [[LineageEntry]] per (commit, bucket) that commit added delta rows
+    * to, read from every retained segment's `addedFiles` with the segment's
+    * `lastEpoch` as the epoch. Compaction leaves it alone (segments keep
+    * their own adds); after a `vacuum` it covers the retained versions only.
     */
   def lineage(): DataFrame = {
     import spark.implicits._
-    meta.lineage.toDF()
+    versions().flatMap { v =>
+      val seg = commitSegment(v)
+      seg.addedFiles.filter(_.kind == "delta").groupBy(_.bucket).toSeq.sortBy(_._1)
+        .map { case (b, fs) =>
+          LineageEntry(seg.lastEpoch, b,
+            upserted = fs.map(f => f.rows - f.tombstones).sum,
+            deleted = fs.map(_.tombstones).sum,
+            appliedOffset = fs.map(_.maxPos).max)
+        }
+    }.toDF()
+  }
+
+  /** Segment `v`, refused if it does not record its own commit. */
+  private def commitSegment(v: Int): MetaSegment = {
+    val seg = readSegment(root, v)
+    if (seg.lacksOwnCommit) throw new IllegalStateException(
+      s"meta segment v$v at $root is a snapshot written by an earlier build and " +
+        "does not record its own commit, so its added files and lineage are " +
+        "unknown. Run `graft.Main vacuum <table> 1` (LakeTable.vacuum(1)) to " +
+        "re-anchor the table on a current snapshot segment.")
+    seg
   }
 
   /** List all snapshot versions currently on disk (time-travel index). */
@@ -331,19 +369,12 @@ final class LakeTable private (val root: Path, val spark: SparkSession) {
     * segments, so a delta that was added and already compacted away INSIDE
     * the range is still returned (data files are immutable; only vacuum
     * removes them — a tail must keep up within the vacuum retention window,
-    * the same contract as any CDC source with log retention). A snapshot
-    * (re-anchor) segment lists no additions itself; its adds are recovered
-    * by diffing against the previous version's file set.
+    * the same contract as any CDC source with log retention). Every
+    * segment, snapshot segments included, lists its own additions; a
+    * snapshot segment from an earlier build does not and is refused.
     */
   def addedFilesBetween(fromV: Int, toV: Int): Seq[FileEntry] =
-    (fromV + 1 to toV).flatMap { v =>
-      val seg = LakeTable.readSegment(root, v)
-      if (!seg.isSnapshot) seg.addedFiles
-      else {
-        val prev = LakeTable.readMetaVersion(root, v - 1).files.map(_.path).toSet
-        seg.filesFull.get.filterNot(f => prev.contains(f.path))
-      }
-    }
+    (fromV + 1 to toV).flatMap(v => commitSegment(v).addedFiles)
 
   /** Schema-aligned read of an explicit file subset of version `m` —
     * exposes [[readAligned]] for the streaming tail.
@@ -353,8 +384,9 @@ final class LakeTable private (val root: Path, val spark: SparkSession) {
 
   /** Vacuum: bound metadata history and data storage.
     *
-    *  - Re-anchors the tip on a full snapshot segment (if it is a delta), so
-    *    retention can actually cut the fold chain.
+    *  - Re-anchors the tip on a full snapshot segment (if it is a delta, or
+    *    a snapshot from an earlier build that does not record its own
+    *    commit), so retention can actually cut the fold chain.
     *  - Drops every segment below the retention window (minus any segments
     *    still needed to FOLD a retained version).
     *  - Deletes data files that were referenced by dropped versions but by
@@ -366,7 +398,8 @@ final class LakeTable private (val root: Path, val spark: SparkSession) {
     */
   def vacuum(keepVersions: Int = 2, orphanGraceMs: Long = -1L): (Int, Int) = synchronized {
     // self-contained tip so the fold chain can be cut at the window edge
-    if (!readSegment(root, versions().last).isSnapshot)
+    val tip = readSegment(root, versions().last)
+    if (!tip.isSnapshot || tip.lacksOwnCommit)
       commitAtomic(m => m.copy(
         version = m.version + 1,
         history = m.history :+ CommitInfo(m.version + 1, m.lastEpoch, m.lastOffset,
@@ -446,23 +479,6 @@ final class LakeTable private (val root: Path, val spark: SparkSession) {
     (dropSegs.size, removedFiles)
   }
 
-  /** Evolve the table schema in place (metadata-only commit; no data rewrite —
-    * old files are aligned at read time). Only compatible evolutions are
-    * allowed: add nullable column, widen int→long / float→double.
-    */
-  def evolveSchema(newSchemaId: Int, newSchema: StructType): Unit = synchronized {
-    if (newSchemaId <= refresh().schemaId) return
-    commitAtomic { m =>
-      LakeTable.checkCompatible(m.schema, newSchema)
-      m.copy(
-        version = m.version + 1,
-        schemaId = newSchemaId,
-        schemas = m.schemas + (newSchemaId.toString -> newSchema.json),
-        history = m.history :+ CommitInfo(m.version + 1, m.lastEpoch, m.lastOffset,
-          System.currentTimeMillis(), s"evolve-schema:$newSchemaId"))
-    }
-  }
-
   /** Build-and-commit against the LATEST snapshot under the table monitor —
     * the in-process half of optimistic concurrency (the ingest thread and
     * the async compactor both commit through here; `build` must rebase its
@@ -477,8 +493,10 @@ final class LakeTable private (val root: Path, val spark: SparkSession) {
   }
 
   /** Atomically publish `next` as the successor of `prev` (one version
-    * bump). Caller stages data files first. Serializes ONLY the commit's
-    * delta unless the snapshot cadence (or `forceSnapshot`) re-anchors.
+    * bump). Caller stages data files first. Serializes the commit's own
+    * changes, plus the full lists when the snapshot cadence (or
+    * `forceSnapshot`) re-anchors. A `next` without a history row of its
+    * own gets a generic "commit" row, so every segment records its commit.
     */
   def commitMeta(prev: TableMeta, next: TableMeta,
       forceSnapshot: Boolean = false): TableMeta = synchronized {
@@ -493,6 +511,9 @@ final class LakeTable private (val root: Path, val spark: SparkSession) {
     val partial = prev.files.filter(f => nextPaths.contains(f.path) && !keptEntries.contains(f))
     require(partial.isEmpty, s"commit v${next.version} removes only some bucket " +
       s"entries of ${partial.map(_.path).distinct.take(3).mkString(", ")}")
+    val history = if (next.history.size > prev.history.size) next.history
+      else next.history :+ CommitInfo(next.version, next.lastEpoch, next.lastOffset,
+        System.currentTimeMillis(), "commit")
     val seg = MetaSegment(
       version = next.version,
       baseVersion = if (snapshot) next.version else prev.baseVersion,
@@ -502,20 +523,15 @@ final class LakeTable private (val root: Path, val spark: SparkSession) {
       lastEpoch = next.lastEpoch, lastOffset = next.lastOffset,
       lastPipelineId = next.lastPipelineId,
       lastCompactOffset = next.lastCompactOffset,
-      addedFiles = if (snapshot) Nil
-        else next.files.filterNot(f => prevPaths.contains(f.path)),
-      removedPaths = if (snapshot) Nil
-        else prev.files.iterator.map(_.path).filterNot(nextPaths.contains).toList,
-      lineageAdd = if (snapshot) Nil else next.lineage.drop(prev.lineage.size),
-      historyAdd = if (snapshot) Nil else next.history.drop(prev.history.size),
+      addedFiles = next.files.filterNot(f => prevPaths.contains(f.path)),
+      removedPaths = prev.files.iterator.map(_.path).filterNot(nextPaths.contains)
+        .distinct.toList,
+      historyAdd = history.drop(prev.history.size),
       filesFull = if (snapshot) Some(next.files) else None,
-      lineageFull = if (snapshot) Some(next.lineage.takeRight(LineageCap)) else None,
-      historyFull = if (snapshot) Some(next.history.takeRight(HistoryCap)) else None)
+      historyFull = if (snapshot) Some(history.takeRight(HistoryCap)) else None)
     LakeTable.writeSegment(root, seg)
-    val folded = next.copy(
-      baseVersion = seg.baseVersion,
-      lineage = next.lineage.takeRight(LineageCap),
-      history = next.history.takeRight(HistoryCap))
+    val folded = next.copy(baseVersion = seg.baseVersion,
+      history = history.takeRight(HistoryCap))
     metaCache = folded
     folded
   }
@@ -531,8 +547,7 @@ object LakeTable {
     */
   val SnapshotEvery = 16
 
-  /** Caps applied at FOLD time (commits serialize only their own rows). */
-  val LineageCap = 100000
+  /** Cap applied at FOLD time (commits serialize only their own rows). */
   val HistoryCap = 10000
 
   /** Per-write Hadoop options of every engine parquet write.
@@ -568,16 +583,16 @@ object LakeTable {
     Files.createDirectories(root.resolve("data"))
     // MinValue so the bootstrap epoch (-1) and stream epochs (0..) both
     // pass the fence on a fresh table.
+    val created = List(CommitInfo(1, Long.MinValue, -1L,
+      System.currentTimeMillis(), "create"))
     val seg = MetaSegment(
       version = 1, baseVersion = 1, schemaId = schemaId,
       schemas = Map(schemaId.toString -> schema.json),
       keyCols = keyCols.toList, bucketCols = bucketCols.toList,
       numBuckets = numBuckets,
       lastEpoch = Long.MinValue, lastOffset = -1L, lastPipelineId = "",
-      addedFiles = Nil, removedPaths = Nil, lineageAdd = Nil, historyAdd = Nil,
-      filesFull = Some(Nil), lineageFull = Some(Nil),
-      historyFull = Some(List(CommitInfo(1, Long.MinValue, -1L,
-        System.currentTimeMillis(), "create"))))
+      addedFiles = Nil, removedPaths = Nil, historyAdd = created,
+      filesFull = Some(Nil), historyFull = Some(created))
     writeSegment(root, seg)
     new LakeTable(root, spark)
   }
@@ -619,7 +634,6 @@ object LakeTable {
     numBuckets = seg.numBuckets, lastEpoch = seg.lastEpoch,
     lastOffset = seg.lastOffset,
     files = seg.filesFull.getOrElse(Nil),
-    lineage = seg.lineageFull.getOrElse(Nil),
     history = seg.historyFull.getOrElse(Nil),
     baseVersion = seg.version, lastPipelineId = seg.lastPipelineId,
     lastCompactOffset = seg.lastCompactOffset)
@@ -639,7 +653,6 @@ object LakeTable {
           lastPipelineId = seg.lastPipelineId,
           lastCompactOffset = seg.lastCompactOffset,
           files = m.files.filterNot(f => removed.contains(f.path)) ++ seg.addedFiles,
-          lineage = (m.lineage ++ seg.lineageAdd).takeRight(LineageCap),
           history = (m.history ++ seg.historyAdd).takeRight(HistoryCap),
           baseVersion = seg.baseVersion)
       }

@@ -1,7 +1,7 @@
 package graft.merge
 
 import graft.core.{Timing, Types}
-import graft.lake.{CommitInfo, FileEntry, LakeTable, LineageEntry, TableMeta, TableWriter, WrittenPart}
+import graft.lake.{CommitInfo, FileEntry, LakeTable, TableMeta, TableWriter, WrittenPart}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -258,12 +258,7 @@ object MergeInto {
     val maxSid = if (hasSid) parts.map(_.maxSid).max else sid
 
     val newFiles = entries(parts, sid, "delta")
-    val lineage = newFiles.groupBy(_.bucket).map { case (b, fs) =>
-      LineageEntry(epoch, b,
-        upserted = fs.map(f => f.rows - f.tombstones).sum,
-        deleted = fs.map(_.tombstones).sum,
-        appliedOffset = fs.map(_.maxPos).max)
-    }.toSeq
+    val touched = newFiles.map(_.bucket).distinct.size
 
     // append-only commit, rebased onto whatever the async compactor may
     // have published meanwhile; schema registration + in-flight evolution
@@ -288,21 +283,20 @@ object MergeInto {
         lastOffset = math.max(latest.lastOffset, maxPos),
         lastPipelineId = pidOr(latest, pipelineId),
         files = (latest.files ++ newFiles).sortBy(f => (f.bucket, f.path)),
-        lineage = latest.lineage ++ lineage, // capped at fold, not here
         history = latest.history :+ CommitInfo(latest.version + 1, epoch, maxPos,
-          System.currentTimeMillis(),
-          s"merge-mor:buckets=${lineage.size}:rows=$nDedup", replayed = nReplays))
+          System.currentTimeMillis(), s"merge-mor:buckets=$touched:rows=$nDedup",
+          replayed = nReplays, upserted = nDedup - nDeletes, deleted = nDeletes))
     }
 
     MergeResult(epoch, skipped = false, upserted = nDedup - nDeletes,
-      deleted = nDeletes, replayed = nReplays, touchedBuckets = lineage.size)
+      deleted = nDeletes, replayed = nReplays, touchedBuckets = touched)
   }
 
   // ----------------------------------------------------------- maintenance
 
   /** Fold delta files into resolved base files (MOR maintenance). Keeps
     * tombstones (they defend against replayed-old-insert resurrection;
-    * `gcTombstonesBelowPos` may drop those whose pos is provably below any
+    * `gcBelowPos` may drop those whose pos is provably below any
     * replayable offset). Pure maintenance: epoch/offset fences unchanged —
     * except `lastCompactOffset`, which records the resolved snapshot's
     * applied offset so the NEXT compaction can GC below it (see
@@ -318,8 +312,10 @@ object MergeInto {
     * progress) after it was applied; upstream redelivery horizons (the
     * reference replays at most from its last saved position,
     * service/handler.go:173-191) are orders of magnitude shorter. A source
-    * that can redeliver events older than a full compaction cycle must
-    * disable GC (keep the manual `compact(table)` default).
+    * that can redeliver events older than a full compaction cycle should
+    * raise `auto_compact_min_rows` (`autoCompactMinRows`) so high that the
+    * auto path never fires, and compact with `Main compact <table>` given
+    * no watermark, which GCs nothing.
     *
     * Commit is REBASE-safe against concurrent MOR merges (the Iceberg
     * RewriteDataFiles shape): the rewrite resolves the file set of snapshot
@@ -328,7 +324,7 @@ object MergeInto {
     * ADD files and LWW resolution is order-independent (max pos wins
     * regardless of which file holds it).
     */
-  def compact(table: LakeTable, gcTombstonesBelowPos: Long = Long.MinValue): Unit = {
+  def compact(table: LakeTable, gcBelowPos: Long = Long.MinValue): Unit = {
     val m = table.refresh()
     // SELECTIVE: only buckets that carry delta files are resolved and
     // rewritten — compaction cost is proportional to churn, not table size
@@ -340,7 +336,7 @@ object MergeInto {
     val inputs = m.files.filter(f => deltaBuckets.contains(f.bucket)).toSet
     val bucket = table.bucketExpr(m.numBuckets, m.bucketCols)
     val resolved = table.snapshotForBuckets(m, deltaBuckets)
-      .where(!col(table.DelCol) || col(table.PosCol) >= gcTombstonesBelowPos)
+      .where(!col(table.DelCol) || col(table.PosCol) >= gcBelowPos)
       .withColumnRenamed(table.DelCol, TableWriter.SplitDelCol)
       .withColumn(TableWriter.BucketCol, bucket)
     val commitRel = s"data/${UUID.randomUUID().toString.take(12)}"
@@ -366,7 +362,7 @@ object MergeInto {
           .sortBy(f => (f.bucket, f.path)),
         history = latest.history :+ CommitInfo(latest.version + 1, latest.lastEpoch,
           latest.lastOffset, System.currentTimeMillis(),
-          s"compact:files=${parts.map(_.path).distinct.size}:gcBelow=$gcTombstonesBelowPos"))
+          s"compact:files=${parts.map(_.path).distinct.size}:gcBelow=$gcBelowPos"))
     }
   }
 
@@ -378,8 +374,7 @@ object MergeInto {
     */
   private val compacting =
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
-  def maybeCompactAsync(table: LakeTable, ratio: Double, minRows: Long,
-      gcTombstones: Boolean = true): Boolean = {
+  def maybeCompactAsync(table: LakeTable, ratio: Double, minRows: Long): Boolean = {
     val m = table.meta
     val deltaRows = m.files.filter(_.kind == "delta").map(_.rows).sum
     val baseRows = m.files.filter(_.kind == "base").map(_.rows).sum
@@ -392,9 +387,8 @@ object MergeInto {
     // leak at the 10^10-event regime). -1 on a never-compacted table GCs
     // nothing; the watermark is persisted in the table meta so it survives
     // restarts.
-    val gcBelow = if (gcTombstones) m.lastCompactOffset else Long.MinValue
     val t = new Thread(() =>
-      try compact(table, gcTombstonesBelowPos = gcBelow)
+      try compact(table, gcBelowPos = m.lastCompactOffset)
       catch { case e: Throwable =>
         System.err.println(s"[graft] async compaction failed (will retry later): $e")
       } finally { compacting.remove(table.root.toString); () }, "graft-compactor")

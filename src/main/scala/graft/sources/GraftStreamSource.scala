@@ -29,10 +29,13 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
   *
   * Scale/caveats:
   *   - reads ONLY the per-commit delta files ([[LakeTable.addedFilesBetween]]
-  *     walks segments, so a delta already folded away by compaction inside
-  *     the polled range is still emitted — data files are immutable until
-  *     vacuum). A tail must keep up within the vacuum retention window, the
-  *     standard CDC log-retention contract.
+  *     reads each version's own commit record from its segment, so a delta
+  *     already folded away by compaction inside the polled range is still
+  *     emitted — data files are immutable until vacuum). A tail must keep up
+  *     within the vacuum retention window, the standard CDC log-retention
+  *     contract. A range that crosses a snapshot segment written by an
+  *     earlier build (one without its own commit record) fails with that
+  *     version; `vacuum(1)` re-anchors such a table.
   *   - every merge, [[graft.streaming.Bootstrap]]'s stock load included,
   *     lands its rows as delta files, so a fresh `startingVersion` 1 replay
   *     of a table whose history is retained starts complete. (A table

@@ -9,8 +9,9 @@ import java.nio.file.{Files, Paths, StandardOpenOption}
   * (reference: metrics/metrics.go:41-223, web/router.go:64-126). Here a
   * `StreamingQueryListener` appends one JSON line per micro-batch progress
   * (rows/sec, batch duration, offsets) to a metrics log, complementing the
-  * per-commit lineage already embedded in table metadata — both queryable as
-  * DataFrames (`spark.read.json(metricsPath)` / `table.lineage()`).
+  * per-commit lineage read from the table's manifest segments — both
+  * queryable as DataFrames (`spark.read.json(metricsPath)` /
+  * `table.lineage()`).
   */
 object Metrics {
 

@@ -11,8 +11,8 @@ import java.net.InetSocketAddress
   * dependencies). Serves:
   *
   *  - `GET /metrics` — Prometheus text format: per-table version, fence
-  *    epoch/offset, file/row counts, upsert/delete totals from the embedded
-  *    lineage;
+  *    epoch/offset, file/row counts, upsert/delete/replay totals summed
+  *    over the retained commit history;
   *  - `GET /status`  — the same as one JSON object.
   *
   * Reads only the in-memory `TableMeta` (refreshing first), so a scrape
@@ -85,10 +85,10 @@ final class MetricsServer(tables: Map[String, LakeTable], port: Int = 0) {
       ms.map { case (n, m) => n -> m.dataFiles.toLong })
     gauge("graft_live_rows", "rows across live files (incl. unresolved deltas)",
       ms.map { case (n, m) => n -> m.files.map(_.rows).sum })
-    gauge("graft_rows_upserted_total", "upserts recorded in retained lineage",
-      ms.map { case (n, m) => n -> m.lineage.map(_.upserted).sum })
-    gauge("graft_rows_deleted_total", "deletes recorded in retained lineage",
-      ms.map { case (n, m) => n -> m.lineage.map(_.deleted).sum })
+    gauge("graft_rows_upserted_total", "upserted events recorded in retained history",
+      ms.map { case (n, m) => n -> m.history.map(_.upserted).sum })
+    gauge("graft_rows_deleted_total", "deleted events recorded in retained history",
+      ms.map { case (n, m) => n -> m.history.map(_.deleted).sum })
     gauge("graft_replayed_total", "replayed events recorded in retained history",
       ms.map { case (n, m) => n -> m.history.map(_.replayed).sum })
     sb.toString

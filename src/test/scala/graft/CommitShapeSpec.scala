@@ -2,7 +2,7 @@ package graft
 
 import graft.changelog.{ChangelogCodec, ChangelogGenerator, ChangelogSpec}
 import graft.core.Types
-import graft.lake.LakeTable
+import graft.lake.{LakeTable, LineageEntry}
 import graft.streaming.CdcPipeline
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -63,12 +63,13 @@ class CommitShapeSpec extends SparkSpec {
     val width = math.min(numBuckets, spark.sparkContext.defaultParallelism)
     val merges = m.history.filter(_.operation.startsWith("merge-mor"))
     assert(merges.nonEmpty)
+    val lineage = table.lineage().as[LineageEntry].collect().toSeq
     merges.foreach { c =>
       val added = table.addedFilesBetween(c.version - 1, c.version)
       val paths = added.map(_.path).distinct
       assert(paths.size <= width, s"v${c.version}: ${paths.size} files > width $width")
       assert(added.size == added.map(_.bucket).distinct.size, s"v${c.version}: $added")
-      assert(added.map(_.bucket).toSet == m.lineage.filter(_.epoch == c.epoch).map(_.bucket).toSet)
+      assert(added.map(_.bucket).toSet == lineage.filter(_.epoch == c.epoch).map(_.bucket).toSet)
       // nothing else on disk under the commit's directory: no staging, no markers
       val dir = table.root.resolve(paths.head).getParent
       val s = Files.list(dir)
@@ -84,10 +85,11 @@ class CommitShapeSpec extends SparkSpec {
     "per bucket") {
     val (_, table, decoded) = run
     val m = table.refresh()
+    val lineage = table.lineage().as[LineageEntry].collect().toSeq
     // per commit: lineage totals == the merge's own observed row count
     m.history.filter(_.operation.startsWith("merge-mor")).foreach { c =>
       val rows = c.operation.split(":rows=")(1).toLong
-      val lin = m.lineage.filter(_.epoch == c.epoch)
+      val lin = lineage.filter(_.epoch == c.epoch)
       assert(lin.map(l => l.upserted + l.deleted).sum == rows, s"epoch ${c.epoch}")
     }
     // per bucket: lineage (from footer null counts) == the changelog's events
@@ -96,7 +98,7 @@ class CommitShapeSpec extends SparkSpec {
       .agg(sum(when($"_op" === OpDelete, 0L).otherwise(1L)).as("u"),
         sum(when($"_op" === OpDelete, 1L).otherwise(0L)).as("d"))
       .as[(Int, Long, Long)].collect().map(r => r._1 -> (r._2, r._3)).toMap
-    val got = m.lineage.groupBy(_.bucket).map { case (b, ls) =>
+    val got = lineage.groupBy(_.bucket).map { case (b, ls) =>
       b -> (ls.map(_.upserted).sum, ls.map(_.deleted).sum)
     }
     assert(got == expected)

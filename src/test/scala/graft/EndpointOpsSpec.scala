@@ -144,6 +144,35 @@ class EndpointOpsSpec extends SparkSpec {
     } finally srv.stop()
   }
 
+  test("MetricsServer _total gauges sum the commit history past snapshot " +
+    "segments, a compaction and a replayed span") {
+    val schema = StructType(Seq(StructField("k", StringType, nullable = false),
+      StructField("v", StringType)))
+    val t = LakeTable.create(spark, tmpDir("metrics-hist").resolve("t").toString,
+      schema, Seq("k"), Seq("k"), 4)
+    def batch(lo: Long, hi: Long) = (lo until hi).map { p =>
+      (if (p % 5 == 4) "delete" else "insert", p, s"k${p % 7}", s"v$p")
+    }.toDF("_op", "_pos", "k", "v").withColumn("_event_ts", lit(null).cast("timestamp"))
+    val results = (0 until LakeTable.SnapshotEvery + 3).map { e =>
+      if (e == 9) MergeInto.compact(t)
+      // the last epoch re-applies an earlier span: replayed events count too
+      if (e == LakeTable.SnapshotEvery + 2) MergeInto.merge(t, batch(0L, 12L), e.toLong)
+      else MergeInto.merge(t, batch(3L * e, 3L * e + 3), e.toLong)
+    }
+    val m = t.refresh()
+    assert(m.version - m.baseVersion < m.version - 1, "no snapshot segment re-anchored")
+    assert(results.map(_.replayed).sum > 0)
+    val srv = new MetricsServer(Map("t" -> t)).start()
+    try {
+      val url = java.net.URI.create(s"http://127.0.0.1:${srv.boundPort}/metrics").toURL
+      val in = url.openStream()
+      val prom = try new String(in.readAllBytes(), "UTF-8") finally in.close()
+      assert(prom.contains(s"""graft_rows_upserted_total{table="t"} ${results.map(_.upserted).sum}\n"""))
+      assert(prom.contains(s"""graft_rows_deleted_total{table="t"} ${results.map(_.deleted).sum}\n"""))
+      assert(prom.contains(s"""graft_replayed_total{table="t"} ${results.map(_.replayed).sum}\n"""))
+    } finally srv.stop()
+  }
+
   test("MetricsServer escapes hostile table names; scrape errors answer 500") {
     val schema = StructType(Seq(StructField("k", StringType, nullable = false),
       StructField("v", StringType)))

@@ -1,13 +1,14 @@
 package graft
 
 import graft.core.Types
-import graft.lake.LakeTable
+import graft.lake.{LakeTable, LineageEntry, MetaSegment}
 import graft.merge.MergeInto
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 
 /** Snapshot-table mechanics: versioned commits, time travel, vacuum,
   * wildcard expansion.
@@ -314,6 +315,91 @@ class LakeTableSpec extends SparkSpec {
     assert(!Files.exists(Paths.get(dir, "meta", f"v$cached%08d.json")))
     assert(reader.refresh() == writer.refresh())
     assert(state(reader.snapshot()) == Map("a" -> "a2"))
+  }
+
+  private def segmentJson(t: LakeTable): Seq[String] = {
+    val s = Files.list(t.root.resolve("meta"))
+    try s.iterator().asScala.filter(_.getFileName.toString.endsWith(".json"))
+      .map(p => new String(Files.readAllBytes(p), "UTF-8")).toList
+    finally s.close()
+  }
+
+  test("every segment records its own commit: the change tail and lineage " +
+    "read it across snapshot segments, compactions and an empty merge") {
+    import spark.implicits._
+    val t = LakeTable.create(spark, tmpDir("lt-own").resolve("t").toString,
+      schema, Seq("k"), Seq("k"), 4)
+    val rnd = new scala.util.Random(8)
+    var pos = 0L
+    val events = scala.collection.mutable.ArrayBuffer.empty[(Long, String, Long, String)]
+    val results = (0 until 2 * LakeTable.SnapshotEvery + 4).map { e =>
+      if (e % 7 == 6) MergeInto.compact(t)
+      val rows = if (e == 5) Nil else (0 until 1 + rnd.nextInt(6)).map { _ =>
+        pos += 1
+        val k = s"k${rnd.nextInt(12)}"
+        if (rnd.nextInt(4) == 0) (OpDelete, pos, k, null) else (OpUpdate, pos, k, s"v$pos")
+      }
+      rows.foreach { case (op, p, k, _) => events += ((e.toLong, op, p, k)) }
+      MergeInto.merge(t, batch(rows: _*), e.toLong)
+    }
+    val tip = t.refresh().version
+    assert(t.meta.history.exists(_.operation == "merge-empty"))
+    assert(segmentJson(t).count(_.contains("filesFull")) >= 3, "v1 + fewer than two re-anchors")
+    assert(segmentJson(t).forall(!_.contains("lineage")), "a segment stores lineage")
+    // the change tail: each version's own adds == the diff of the folded views
+    (2 to tip).foreach { v =>
+      val prev = t.metaAt(v - 1).files.map(_.path).toSet
+      assert(t.addedFilesBetween(v - 1, v).toSet ==
+        t.metaAt(v).files.filterNot(f => prev.contains(f.path)).toSet, s"v$v")
+    }
+    // lineage: per (epoch, bucket) == the changelog; per epoch == the MergeResult
+    val lineage = t.lineage().as[LineageEntry].collect().toSeq
+    val want = events.toSeq.toDF("e", "op", "p", "k")
+      .groupBy($"e", t.bucketExpr(4, Seq("k")).as("b"))
+      .agg(sum(when($"op" === OpDelete, 0L).otherwise(1L)),
+        sum(when($"op" === OpDelete, 1L).otherwise(0L)), max($"p"))
+      .as[(Long, Int, Long, Long, Long)].collect()
+      .map { case (e, b, u, d, p) => LineageEntry(e, b, u, d, p) }.toSet
+    assert(lineage.toSet == want && lineage.size == want.size)
+    results.foreach { r =>
+      val ls = lineage.filter(_.epoch == r.epoch)
+      assert((ls.map(_.upserted).sum, ls.map(_.deleted).sum, ls.size) ==
+        (r.upserted, r.deleted, r.touchedBuckets), s"epoch ${r.epoch}")
+    }
+  }
+
+  test("a snapshot segment from an earlier build is refused by its version; " +
+    "vacuum(1) re-anchors the table past it") {
+    val dir = tmpDir("lt-legacy").resolve("t")
+    val t = LakeTable.create(spark, dir.toString, schema, Seq("k"), Seq("k"), 4)
+    MergeInto.merge(t, batch((OpInsert, 1L, "a", "a1"), (OpInsert, 2L, "b", "b1")), 0)
+    MergeInto.merge(t, batch((OpDelete, 3L, "b", null)), 1)
+    MergeInto.merge(t, batch((OpUpdate, 4L, "a", "a2"), (OpInsert, 5L, "c", "c1")), 2)
+    // rewrite v4 as an earlier build wrote a snapshot segment: full lists and
+    // lineage lists, but no record of its own commit
+    val m = t.refresh()
+    val legacy = MetaSegment(version = 4, baseVersion = 4, schemaId = m.schemaId,
+      schemas = m.schemas, keyCols = m.keyCols, bucketCols = m.bucketCols,
+      numBuckets = m.numBuckets, lastEpoch = m.lastEpoch, lastOffset = m.lastOffset,
+      lastPipelineId = m.lastPipelineId, addedFiles = Nil, removedPaths = Nil,
+      historyAdd = Nil, filesFull = Some(m.files), historyFull = Some(m.history))
+    val json = org.json4s.jackson.Serialization.write(legacy)(org.json4s.DefaultFormats)
+      .replace("\"historyAdd\"", "\"lineageAdd\":[],\"lineageFull\":[{\"epoch\":2," +
+        "\"bucket\":0,\"upserted\":2,\"deleted\":0,\"appliedOffset\":5}],\"historyAdd\"")
+    Files.write(dir.resolve("meta").resolve("v00000004.json"), json.getBytes("UTF-8"))
+    val old = LakeTable.load(spark, dir.toString)
+    assert(state(old.snapshot()) == Map("a" -> "a2", "c" -> "c1"))
+    assert(old.addedFilesBetween(1, 3).nonEmpty)
+    for (read <- Seq(() => old.addedFilesBetween(3, 4), () => old.lineage())) {
+      val e = intercept[IllegalStateException](read())
+      assert(e.getMessage.contains("v4") && e.getMessage.contains("vacuum"), e.getMessage)
+    }
+    old.vacuum(keepVersions = 1)
+    assert(old.versions() == Seq(5))
+    assert(segmentJson(old).forall(!_.contains("lineage")))
+    assert(old.meta.history.last.operation == "vacuum-snapshot")
+    assert(old.addedFilesBetween(4, 5).isEmpty && old.lineage().count() == 0)
+    assert(state(old.snapshot()) == Map("a" -> "a2", "c" -> "c1"))
   }
 
   test("wildcard table expansion (S6): regex match, lone-* rejected") {

@@ -104,7 +104,7 @@ class MergeSpec extends SparkSpec {
     MergeInto.merge(t, batch((OpInsert, 2L, "b", "b1")), 2)
     assert(state(t) == before, "replayed insert resurrected a compacted delete")
     // tombstone GC below a safe watermark drops it
-    MergeInto.compact(t, gcTombstonesBelowPos = 100L)
+    MergeInto.compact(t, gcBelowPos = 100L)
     assert(!t.refresh().files.exists(_.del))
   }
 

@@ -185,27 +185,28 @@ class PropertySpec extends SparkSpec {
     import spark.implicits._
     val wide = StructType(schema.fields :+ StructField("extra", StringType))
     val registry = Map(0 -> schema, 1 -> wide)
-    // t1: evolve first, then apply v0-shaped events
-    val t1 = fresh()
-    t1.evolveSchema(1, wide)
-    MergeInto.merge(t1, toDf(Seq(Ev(OpInsert, 1, "a", "v1"))), 0)
-    // t2: apply events that ANNOUNCE schema 1, carrying null for the new col
-    val t2 = fresh()
+    // apply events that ANNOUNCE schema 1, carrying null for the new col:
+    // the state v0-shaped events leave on a table already at schema 1
+    val t = fresh()
     val d = Seq(("insert", 1L, "a", "v1", null.asInstanceOf[String], 1))
       .toDF("_op", "_pos", "k", "v", "extra", "_schema_id")
       .withColumn("_event_ts", lit(null).cast("timestamp"))
-    MergeInto.merge(t2, d, 0, registry = registry, batchSchemaId = 1)
-    assert(t2.refresh().schemaId == 1)
-    val s1 = t1.snapshot().select("k", "v", "extra").collect().toSeq
-    val s2 = t2.snapshot().select("k", "v", "extra").collect().toSeq
-    assert(s1 == s2)
+    MergeInto.merge(t, d, 0, registry = registry, batchSchemaId = 1)
+    assert(t.refresh().schemaId == 1)
+    val s = t.snapshot().select("k", "v", "extra").collect().toSeq
+    assert(s == Seq(org.apache.spark.sql.Row("a", "v1", null)))
   }
 
   test("incompatible evolutions are rejected") {
     val t = fresh()
-    intercept[IllegalArgumentException] { // dropping a column
-      t.evolveSchema(1, StructType(Seq(StructField("k", StringType))))
+    val dropped = intercept[IllegalArgumentException] { // dropping a column, in flight
+      import spark.implicits._
+      val narrow = StructType(Seq(StructField("k", StringType, nullable = false)))
+      val d = Seq(("insert", 1L, "a", 1)).toDF("_op", "_pos", "k", "_schema_id")
+        .withColumn("_event_ts", lit(null).cast("timestamp"))
+      MergeInto.merge(t, d, 0, registry = Map(0 -> schema, 1 -> narrow), batchSchemaId = 1)
     }
+    assert(dropped.getMessage.contains("drops column v"), dropped.getMessage)
     intercept[IllegalArgumentException] { // narrowing a type
       LakeTable.checkCompatible(
         StructType(Seq(StructField("x", LongType))),
@@ -243,8 +244,7 @@ class PropertySpec extends SparkSpec {
         (live.version, live.schemaId, live.lastEpoch, live.lastOffset,
           live.baseVersion, live.lastPipelineId, live.lastCompactOffset),
         s"seed=$seed scalars diverge")
-      assert(cold.lineage == live.lineage && cold.history == live.history,
-        s"seed=$seed lineage/history diverge")
+      assert(cold.history == live.history, s"seed=$seed history diverges")
       // every retained version reconstructs (time travel across anchors)
       t.versions().foreach { v =>
         val m = t.metaAt(v)
@@ -286,13 +286,13 @@ class PropertySpec extends SparkSpec {
     // churn into EVERY bucket so the 2nd compaction rewrites both
     MergeInto.merge(t,
       toDf((0 until 16).map(i => Ev(OpInsert, 20L + i, s"n$i", s"w$i"))), 2)
-    val lineageBefore = t.refresh().lineage
+    val lineageBefore = t.lineage().collect().toSeq
     assert(MergeInto.maybeCompactAsync(t, ratio = 0.0, minRows = 0L))
     MergeInto.awaitCompaction(t)
     val m = t.refresh()
     // tombstones at pos 10..12 < watermark 13 are GC'd; pos 13 survives
     assert(tombstoneRows == 1, s"want only the pos-13 tombstone, files=${m.files.filter(_.del)}")
-    assert(m.lineage == lineageBefore, "compaction must not touch lineage")
+    assert(t.lineage().collect().toSeq == lineageBefore, "compaction must not touch lineage")
     assert(m.lastEpoch == 2 && m.lastOffset == 35L, "compaction must not move the fence")
     // fenced replay of the ORIGINAL epochs (the engine's only replay path)
     // is skipped wholesale — GC'd keys cannot resurrect
