@@ -102,8 +102,7 @@ object QueryCatalog {
       val step = maxPos / nBatches + 1
       timed("merges")((0L until nBatches).foreach { e =>
         MergeInto.merge(table,
-          input.where(col("_pos") >= e * step && col("_pos") < (e + 1) * step), e,
-          rowsHint = step) // positions are dense: batch size ≈ step
+          input.where(col("_pos") >= e * step && col("_pos") < (e + 1) * step), e)
       })
       timed("snapshot-plan")(table.snapshot().orderBy("user_id", "slot"))
     } finally input.unpersist()

@@ -235,32 +235,22 @@ final class LakeTable private (val root: Path, val spark: SparkSession) {
     * metaCache, racing the async compactor).
     */
   def snapshot(m: TableMeta): DataFrame =
-    snapshotForBuckets(m, null, includeBaseTombstones = false)
-      .where(!col(DelCol)).drop(PosCol, TsCol, DelCol)
+    resolve(m, m.files).where(!col(DelCol)).drop(PosCol, TsCol, DelCol)
 
-  /** Resolved snapshot including hidden [[PosCol]]/[[TsCol]]/[[DelCol]] and
-    * tombstones: merge-on-read resolution — buckets that carry delta files
-    * get a per-key LWW reduce; pure-base buckets stream through untouched
-    * (no shuffle).
+  /** Merge-on-read resolution of `files` of version `m`, hidden
+    * [[PosCol]]/[[TsCol]]/[[DelCol]] included: buckets that carry a delta
+    * file get a per-key LWW reduce that keeps their tombstones; pure-base
+    * buckets stream through untouched (no shuffle), and their tombstone
+    * files are pruned at the manifest — with no delta in the bucket they
+    * shadow nothing. Pass whole buckets: [[MergeInto.compact]] passes every
+    * file of its delta buckets, and every bucket of a delta file is one.
     */
-  def snapshotWithMeta(m: TableMeta = meta): DataFrame = snapshotForBuckets(m, null)
-
-  /** Resolved snapshot restricted to the given buckets (null = all) —
-    * partition pruning via the file manifest.
-    */
-  def snapshotForBuckets(m: TableMeta, buckets: Set[Int],
-      includeBaseTombstones: Boolean = true): DataFrame = {
-    val files = if (buckets == null) m.files
-      else m.files.filter(f => buckets.contains(f.bucket))
+  private[graft] def resolve(m: TableMeta, files: Seq[FileEntry]): DataFrame = {
     val deltaBuckets = files.filter(_.kind == "delta").map(_.bucket).toSet
     val (unresolved, pure) = files.partition(f => deltaBuckets.contains(f.bucket))
-    // pure-base buckets need no LWW resolve; for LIVE reads their tombstone
-    // files can additionally be pruned at the manifest (no scan at all) —
-    // merge-side reads must keep them (anti-resurrection)
-    val pureDf = readAligned(m,
-      if (includeBaseTombstones) pure else pure.filterNot(_.del))
+    val pureDf = readAligned(m, pure.filterNot(_.del))
     if (unresolved.isEmpty) pureDf
-    else pureDf.unionAll(resolveLww(readAligned(m, unresolved, buckets), m.keyCols))
+    else pureDf.unionAll(resolveLww(readAligned(m, unresolved), m.keyCols))
   }
 
   /** Per-key LWW over base+delta rows: winner = greatest (applied pos, event
@@ -279,11 +269,9 @@ final class LakeTable private (val root: Path, val spark: SparkSession) {
     * types → cast (int→long etc.). Grouped by schemaId so each parquet scan
     * uses exactly the schema its footers carry — no reliance on reader-side
     * type promotion. Each path is read once, however many bucket entries it
-    * has; with `buckets` (null = all), a file that also holds buckets outside
-    * them keeps only the rows whose [[bucketExpr]] is in `buckets`.
+    * has.
     */
-  private def readAligned(m: TableMeta, entries: Seq[FileEntry],
-      buckets: Set[Int] = null): DataFrame = {
+  private def readAligned(m: TableMeta, entries: Seq[FileEntry]): DataFrame = {
     val files = entries.distinctBy(_.path)
     val cur = m.schema
     val target = cur.fields.map(f => (f.name, f.dataType))
@@ -297,20 +285,15 @@ final class LakeTable private (val root: Path, val spark: SparkSession) {
     // uses exactly the schema its footers carry; a split file's flag
     // re-attaches from the manifest, a mixed file's comes from its column
     graft.core.Timing.timed(s"readAligned(${files.size} files)") {
-      val foreign = if (buckets == null) Set.empty[String]
-        else m.files.iterator.filterNot(f => buckets.contains(f.bucket)).map(_.path).toSet
-      files.groupBy(f => (f.schemaId, f.del, f.storesDel, foreign.contains(f.path))).map {
-        case ((sid, del, storesDel, shared), group) =>
+      files.groupBy(f => (f.schemaId, f.del, f.storesDel)).map {
+        case ((sid, del, storesDel), group) =>
           val stored = StructType(m.schemaFor(sid).fields ++
             Seq(StructField(PosCol, LongType), StructField(TsCol, TimestampType)) ++
             (if (storesDel) Seq(StructField(DelCol, BooleanType)) else Nil))
           val storedNames = stored.fieldNames.toSet
           val paths = group.map(f => root.resolve(f.path).toString)
           val delFlag = if (storesDel) coalesce(col(DelCol), lit(false)) else lit(del)
-          val scan = spark.read.schema(stored).parquet(paths: _*)
-          // a row's bucket is hashed from its columns as stored
-          (if (shared) scan.where(bucketExpr(m.numBuckets, m.bucketCols).isin(buckets.toSeq: _*))
-           else scan)
+          spark.read.schema(stored).parquet(paths: _*)
             .select((target.map { case (n, dt) =>
               if (storedNames.contains(n)) col(n).cast(dt).as(n)
               else lit(null).cast(dt).as(n)

@@ -40,10 +40,13 @@ final case class MergeResult(epoch: Long, skipped: Boolean,
   * segment. Each write task writes ONE delta file holding its buckets and
   * returns per-bucket (rows, maxPos, tombstones) stats ([[TableWriter]]),
   * so the manifest gets one entry per bucket of each file with no footer
-  * re-read. The read path resolves per-key LWW over base+delta; [[compact]]
-  * folds deltas into base, amortizing read cost. An optional salted
-  * two-phase dedup (`salt`) slims the deltas of pathological single-key
-  * floods (SURVEY.md §7.5).
+  * re-read. The write width is Spark's: the bucket exchange is a
+  * `rebalance` hint, so adaptive execution coalesces a small batch into one
+  * write task (one file) and splits a hot bucket over several, from the
+  * shuffle bytes it measured. The read path resolves per-key LWW over
+  * base+delta; [[compact]] folds deltas into base, amortizing read cost.
+  * An optional salted two-phase dedup (`salt`) slims the deltas of
+  * pathological single-key floods (SURVEY.md §7.5).
   *
   * Exactly-once: the (epoch, offset) fence rides in the same atomic commit
   * as the data. When a `pipelineId` is supplied, the fence is additionally
@@ -54,70 +57,6 @@ final case class MergeResult(epoch: Long, skipped: Boolean,
   */
 object MergeInto {
   import Types._
-
-  /** Writer-wave fanout: enough (bucket, salt) partitions for ≥16 waves per
-    * core so stragglers amortize; 1 when buckets already dominate cores.
-    */
-  private def writeFanout(table: LakeTable, numBuckets: Int): Int = {
-    val cores = table.spark.sparkContext.defaultParallelism
-    // prefer sizing numBuckets ≥ 4×cores instead of salting: salt multiplies
-    // files per bucket; fanout only kicks in for very coarse tables
-    math.max(1, (4 * cores + numBuckets - 1) / numBuckets)
-  }
-  /** Salt MODULUS for a write of `width` partitions: the (bucket, salt)
-    * combos of a bucket spread its rows over that many write tasks, so the
-    * salt must scale with the width actually chosen, or a small batch
-    * through a narrow exchange still shatters every bucket over many files
-    * (the round-2 q01 profile measured 196 files/commit from exactly this:
-    * width 16, but salt modulus fixed at 8).
-    */
-  private def saltModulus(width: Int, numBuckets: Int): Int =
-    math.max(1, width / numBuckets)
-  private def writeSalt(table: LakeTable, width: Int, numBuckets: Int) =
-    pmod(xxhash64(col(table.PosCol)), lit(saltModulus(width, numBuckets)))
-
-  /** Rows a single write task should own before fanning out further. */
-  val TargetRowsPerWriteTask = 100000L
-
-  /** Write-exchange width. Full bucket×fanout width amortizes stragglers on
-    * big batches; a `rowsHint` (the caller's batch size, or
-    * [[estimateRows]]) scales the width DOWN for small batches — a 10k-row
-    * trigger through 144 partitions writes ~250 near-empty parquet files per
-    * commit, which costs more in writer open/close + manifest growth +
-    * read-side task scheduling than the write itself.
-    */
-  private def writePartitions(table: LakeTable, numBuckets: Int, rowsHint: Long): Int = {
-    val full = numBuckets * writeFanout(table, numBuckets)
-    if (rowsHint < 0) full
-    else {
-      // floor: one writer per bucket (capped by cores) — a single dynamic-
-      // partition writer task serializes all per-dir writer opens (~1 s for
-      // 32 dirs); rows-based width above that, full fanout as the ceiling
-      val floor = math.min(numBuckets, table.spark.sparkContext.defaultParallelism)
-      val rowsBased = (rowsHint + TargetRowsPerWriteTask - 1) / TargetRowsPerWriteTask
-      math.max(math.min(floor.toLong, full.toLong), math.min(full.toLong, rowsBased)).toInt
-    }
-  }
-
-  /** Parquet wire-format bytes per change event, biased LOW (the wire runs
-    * ~20-25 bytes/event) so a big batch keeps the full write fanout.
-    */
-  private val WireBytesPerEvent = 20L
-
-  /** Batch-size estimate from the `sizeInBytes` Spark keeps on the leaves of
-    * the batch's analyzed plan: a file scan knows its input files' bytes,
-    * and a streaming `foreachBatch` frame's `LogicalRDD` carries its file
-    * source's size too — no extra I/O or job. -1 (unknown → full width) when
-    * any leaf has no size (it reports the session default) or on any
-    * surprise: a sizing hint never fails a merge.
-    */
-  private def estimateRows(batch: DataFrame): Long =
-    try {
-      val unknown = BigInt(batch.sparkSession.sessionState.conf.defaultSizeInBytes)
-      val sizes = batch.queryExecution.analyzed.collectLeaves().map(_.stats.sizeInBytes)
-      if (sizes.isEmpty || sizes.exists(_ >= unknown)) -1L
-      else (sizes.sum / WireBytesPerEvent).min(BigInt(Long.MaxValue)).toLong
-    } catch { case scala.util.control.NonFatal(_) => -1L }
 
   /** LWW ordering: (pos, event ts with null→epoch-0, op rank). */
   private def ordCol: Column = struct(
@@ -172,13 +111,10 @@ object MergeInto {
 
   /** Merge one micro-batch (decoded merge-input layout: `_op,_pos,_event_ts`
     * [,`_schema_id`] + row columns) into `table`, committing `(epoch,
-    * maxPos)` atomically with the snapshot. `rowsHint` (batch rows, -1 =
-    * estimate from the plan's leaves) sizes the MOR write; pass it when the
-    * batch plan also reads existing tables, whose sizes say nothing about
-    * the batch. Replayed epochs
-    * (epoch <= table.lastEpoch, same pipeline) are fenced to no-ops —
-    * exactly-once table state even when Structured Streaming re-runs a batch
-    * after a crash.
+    * maxPos)` atomically with the snapshot. Replayed epochs (epoch <=
+    * table.lastEpoch, same pipeline) are fenced to no-ops — exactly-once
+    * table state even when Structured Streaming re-runs a batch after a
+    * crash.
     *
     * `batchSchemaId`: the registry schema the batch rows are shaped as
     * (defaults to the table's current schema). If the batch carries
@@ -189,8 +125,7 @@ object MergeInto {
       registry: Map[Int, StructType] = Map.empty,
       batchSchemaId: Int = -1,
       pipelineId: String = "",
-      allowTakeover: Boolean = false,
-      rowsHint: Long = -1L): MergeResult = {
+      allowTakeover: Boolean = false): MergeResult = {
     val m0 = table.refresh()
     if (fenced(m0, epoch, pipelineId, allowTakeover))
       return MergeResult(epoch, skipped = true, 0, 0, 0, 0)
@@ -215,8 +150,6 @@ object MergeInto {
     // become tombstone rows — key + pos, payload nulled, `_graft_del` true;
     // null on upserts), shuffle by bucket, and write ONE delta file per
     // write task; the tasks count the commit's stats while writing.
-    val morWidth = writePartitions(table, m0.numBuckets,
-      if (rowsHint >= 0) rowsHint else estimateRows(batch))
     // a table that never applied an epoch has nothing to replay: its
     // lastOffset (-1) would count every bootstrap row (pos -1) as a replay
     val replayAtOrBelow = if (m0.lastEpoch == Long.MinValue) Long.MinValue else m0.lastOffset
@@ -235,13 +168,10 @@ object MergeInto {
             :+ when(isDel, lit(true)).as(table.DelCol)) ++
           (if (hasSid) Seq(col("_schema_id").cast("int").as(TableWriter.SchemaIdCol)) else Nil): _*)
         .withColumn(TableWriter.BucketCol, table.bucketExpr(m0.numBuckets, m0.bucketCols))
-      // explicit partition count (AQE would coalesce small shuffles into
-      // fewer, serial write tasks), fanned out with a salt so writer waves
-      // stay fine-grained relative to the core count (wave quantization
-      // otherwise idles the tail); a small batch shrinks the width
-      // (file-count hygiene)
-      TableWriter.write(table, stored.repartition(morWidth, col(TableWriter.BucketCol),
-        writeSalt(table, morWidth, m0.numBuckets)), commitRel, replayAtOrBelow)
+      // AQE sizes the exchange from its measured shuffle bytes: a small
+      // batch coalesces into one task (one file), a hot bucket is split
+      TableWriter.write(table, stored.hint("rebalance", col(TableWriter.BucketCol)),
+        commitRel, replayAtOrBelow)
     }
     val nDedup = parts.map(_.rows).sum
     if (nDedup == 0) { // empty batch: advance the fence only
@@ -335,16 +265,13 @@ object MergeInto {
     if (deltaBuckets.isEmpty) return
     val inputs = m.files.filter(f => deltaBuckets.contains(f.bucket)).toSet
     val bucket = table.bucketExpr(m.numBuckets, m.bucketCols)
-    val resolved = table.snapshotForBuckets(m, deltaBuckets)
+    val resolved = table.resolve(m, inputs.toSeq)
       .where(!col(table.DelCol) || col(table.PosCol) >= gcBelowPos)
       .withColumnRenamed(table.DelCol, TableWriter.SplitDelCol)
       .withColumn(TableWriter.BucketCol, bucket)
     val commitRel = s"data/${UUID.randomUUID().toString.take(12)}"
-    // rows being rewritten are known from the manifest — size the exchange
-    val totalRows = inputs.toSeq.map(_.rows).sum
-    val cWidth = writePartitions(table, m.numBuckets, totalRows)
     val parts = Timing.timed("  compact-write")(TableWriter.write(table, resolved
-      .repartition(cWidth, col(TableWriter.BucketCol), writeSalt(table, cWidth, m.numBuckets))
+      .hint("rebalance", col(TableWriter.BucketCol))
       .sortWithinPartitions(TableWriter.BucketCol, TableWriter.SplitDelCol), commitRel))
     val newFiles = entries(parts, m.schemaId, "base")
     // rebase: keep any delta files appended since `m` was resolved

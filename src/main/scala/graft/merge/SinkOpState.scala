@@ -241,25 +241,16 @@ object SinkOpState {
     val prepped = normalize(batchOps)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      // ONE driver-side job learns the touched-identity set AND the batch
-      // size: the identity set was always batch-bounded (it has to fit in
-      // memory — it is broadcast), so collecting it explicitly costs nothing
-      // new and replaces BOTH the broadcast-exchange's own scan of `prepped`
-      // and a separate count job (~0.5 s/epoch each at bench scale). The op
-      // count feeds `rowsHint`: an upper bound on |changes| rows of the diff
-      // merge below (changes ≤ folded + old ≤ 2×ops), sizing the write
-      // exchange — without it MergeInto falls back to the full bucket×fanout
-      // width and a small batch through a 128-partition exchange shatters
-      // into ~256 near-empty files per commit (the round-2 q01 lesson).
+      // ONE driver-side job learns the touched-identity set: it was always
+      // batch-bounded (it has to fit in memory — it is broadcast), so
+      // collecting it explicitly costs nothing new and replaces the
+      // broadcast-exchange's own scan of `prepped` (~0.5 s/epoch at bench
+      // scale).
       val ident = Seq("target", "structure", "key", "field", "elem")
-      val identStats = Timing.timed("  sinkop-touched")(
-        prepped.groupBy(ident.map(col): _*).agg(count(lit(1)).as("_n")).collect())
-      val nOps = identStats.iterator.map(_.getLong(5)).sum
+      val touchedRows = Timing.timed("  sinkop-touched")(
+        prepped.select(ident.map(col): _*).distinct().collect())
       import scala.jdk.CollectionConverters._
-      val touched = prepped.sparkSession.createDataFrame(
-        identStats.toSeq.map(r => org.apache.spark.sql.Row(
-          r.getString(0), r.getString(1), r.getString(2), r.getString(3),
-          r.getString(4))).asJava,
+      val touched = prepped.sparkSession.createDataFrame(touchedRows.toSeq.asJava,
         StructType(ident.map(n => StructField(n, StringType))))
       // batch-bounded set broadcast against the state scan: the table side
       // never shuffles, and parquet row groups outside the touched keyspace
@@ -283,8 +274,7 @@ object SinkOpState {
           .select(Seq(col("_op"), col("_pos"), col("_event_ts")) ++
             StateSchema.fieldNames.toSeq.map(col): _*)
         return Timing.timed("  sinkop-merge")(MergeInto.merge(table, changes, epoch,
-          pipelineId = pipelineId, allowTakeover = allowTakeover,
-          rowsHint = 2 * nOps))
+          pipelineId = pipelineId, allowTakeover = allowTakeover))
       }
       val old = table.snapshot()
         .join(broadcast(touched), ident, "left_semi")
@@ -317,8 +307,7 @@ object SinkOpState {
             KeyCols.map(col) ++ payload.map(p =>
               col(s"_n_$p").as(p)): _*)
         Timing.timed("  sinkop-merge")(MergeInto.merge(table, changes, epoch,
-          pipelineId = pipelineId, allowTakeover = allowTakeover,
-          rowsHint = 2 * nOps))
+          pipelineId = pipelineId, allowTakeover = allowTakeover))
       } finally { old.unpersist(); () }
     } finally { prepped.unpersist(); () }
   }

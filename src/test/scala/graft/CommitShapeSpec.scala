@@ -59,7 +59,8 @@ class CommitShapeSpec extends SparkSpec {
     "one manifest entry per touched bucket") {
     val (_, table, _) = run
     val m = table.refresh()
-    // 2,000-event triggers size the write at one task per bucket, capped by cores
+    // AQE sizes the rebalance exchange: a 2,000-event trigger coalesces into
+    // one write task; the shuffle's width (cores) bounds it in any case
     val width = math.min(numBuckets, spark.sparkContext.defaultParallelism)
     val merges = m.history.filter(_.operation.startsWith("merge-mor"))
     assert(merges.nonEmpty)

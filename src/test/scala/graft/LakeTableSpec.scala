@@ -269,36 +269,6 @@ class LakeTableSpec extends SparkSpec {
     assert(MergeInto.merge(t, batch((OpInsert, 9L, "x", "x1")), 0).skipped)
   }
 
-  /** `n` inserts, then updates of every third key and deletes of every
-    * seventh, over 8 buckets: MOR commits whose delta files hold several
-    * buckets each.
-    */
-  private def sharedDeltaTable(prefix: String, n: Int = 120): LakeTable = {
-    val t = LakeTable.create(spark, tmpDir(prefix).resolve("t").toString,
-      schema, Seq("k"), Seq("k"), 8)
-    val ks = (0 until n).map(i => s"k$i")
-    MergeInto.merge(t, batch(ks.zipWithIndex.map { case (k, i) =>
-      (OpInsert, i.toLong, k, s"v$i") }: _*), 0)
-    MergeInto.merge(t, batch(ks.zipWithIndex.collect {
-      case (k, i) if i % 3 == 0 => (OpUpdate, n + i.toLong, k, s"u$i")
-      case (k, i) if i % 7 == 0 => (OpDelete, n + i.toLong, k, null)
-    }: _*), 1)
-    assert(t.meta.files.size > t.meta.dataFiles, s"no shared delta file: ${t.meta.files}")
-    t
-  }
-
-  test("snapshotForBuckets over shared delta files == full snapshot filtered " +
-    "to those buckets") {
-    val t = sharedDeltaTable("lt-shared")
-    val m = t.meta
-    val full = t.snapshotWithMeta(m).withColumn("_b", t.bucketExpr(m.numBuckets, m.bucketCols))
-    def rowsOf(df: DataFrame) = df.collect().map(_.toSeq).toSet
-    for (s <- Seq(Set(0), Set(1, 5), Set(2, 3, 4, 6, 7), (0 until 8).toSet)) {
-      val want = rowsOf(full.where(col("_b").isin(s.toSeq: _*)).drop("_b"))
-      assert(rowsOf(t.snapshotForBuckets(m, s)) == want, s"buckets $s")
-    }
-  }
-
   test("refresh sees another instance's commits, and takes the cold fold " +
     "after a vacuum cut past its cached version") {
     val dir = tmpDir("lt-refresh").resolve("t").toString

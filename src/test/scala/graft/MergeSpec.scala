@@ -296,4 +296,46 @@ class MergeSpec extends SparkSpec {
     MergeInto.merge(t, batch((OpUpdate, 0L, "a", "live-a")), 0)
     assert(MergeInto.merge(t, batch((OpUpdate, 0L, "a", "live-a")), 1).replayed == 1)
   }
+
+  /** Paths of the data files commit `v` added, by bucket. */
+  private def filesByBucket(t: LakeTable, v: Int): Map[Int, Set[String]] =
+    t.addedFilesBetween(v - 1, v).groupBy(_.bucket).map { case (b, fs) =>
+      b -> fs.map(_.path).toSet }
+
+  test("a MOR merge of a batch under 1 MB writes one data file for all its buckets") {
+    val t = LakeTable.create(spark, tmpDir("graft-merge-one").resolve("t").toString,
+      schema, Seq("k"), Seq("k"), 8)
+    MergeInto.merge(t, batch((0 until 2000).map(i =>
+      (if (i % 5 == 0) OpUpdate else OpInsert, i.toLong, s"k${i % 700}", s"v$i")): _*), 0)
+    val byBucket = filesByBucket(t, t.refresh().version)
+    assert(byBucket.keySet == (0 until 8).toSet, s"$byBucket")
+    assert(byBucket.values.flatten.toSet.size == 1, s"$byBucket")
+  }
+
+  test("a hot bucket is split across write tasks; the snapshot equals the LWW oracle") {
+    import spark.implicits._
+    val t = LakeTable.create(spark, tmpDir("graft-merge-hot").resolve("t").toString,
+      schema, Seq("k"), Seq("k"), 8)
+    val candidates = (0 until 4000).map(i => s"k$i").toDF("k")
+      .withColumn("b", t.bucketExpr(8, Seq("k"))).as[(String, Int)].collect().toSeq
+    val (hot, cold) = candidates.partition(_._2 == 0)
+    val rnd = new scala.util.Random(29)
+    val oracle = scala.collection.mutable.Map.empty[String, String]
+    // 90% of the events on bucket 0
+    val events = (0 until 30000).map { i =>
+      val keys = if (i % 10 == 0) cold else hot
+      val k = keys(rnd.nextInt(keys.size))._1
+      val op = Seq(OpInsert, OpUpdate, OpUpdate, OpDelete)(rnd.nextInt(4))
+      if (op == OpDelete) { oracle -= k; (op, i.toLong, k, null: String) }
+      else { oracle(k) = s"v$i-${"x" * 40}"; (op, i.toLong, k, oracle(k)) }
+    }
+    val key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "64k")
+    try MergeInto.merge(t, batch(events: _*), 0)
+    finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    val hotFiles = filesByBucket(t, t.refresh().version)(0)
+    assert(hotFiles.size >= 2, s"hot bucket in one file: $hotFiles")
+    assert(state(t) == oracle.toMap)
+  }
 }

@@ -82,6 +82,38 @@ class PlanSpec extends SparkSpec {
     assert(!p.contains("Scan parquet"), s"merge write plan must not scan the table:\n$p")
   }
 
+  test("the real MOR write plan: one rebalance exchange, no table-side scan") {
+    import spark.implicits._
+    val t = LakeTable.create(spark, tmpDir("plan-mor-real").resolve("t").toString,
+      org.apache.spark.sql.types.StructType(Seq(
+        org.apache.spark.sql.types.StructField("k", org.apache.spark.sql.types.StringType, false),
+        org.apache.spark.sql.types.StructField("v", org.apache.spark.sql.types.StringType))),
+      Seq("k"), Seq("k"), 4)
+    def batch(rows: (String, Long, String, String)*) = rows.toDF("_op", "_pos", "k", "v")
+      .withColumn("_event_ts", lit(null).cast("timestamp"))
+    // seed the table so a table-side scan WOULD show up if the plan had one
+    MergeInto.merge(t, batch(("insert", 1L, "a", "v1")), 0)
+    val captured = new java.util.concurrent.LinkedBlockingQueue[String]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(name: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          durationNs: Long): Unit =
+        if (name == "graft-write") captured.put(qe.executedPlan.toString)
+      def onFailure(name: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val p = try {
+      MergeInto.merge(t, batch(("update", 2L, "a", "v2"), ("delete", 3L, "b", null)), 1)
+      Option(captured.poll(30, java.util.concurrent.TimeUnit.SECONDS))
+        .getOrElse(fail("no graft-write execution seen"))
+    } finally spark.listenerManager.unregister(listener)
+    val finalSection = p.split("== Initial Plan ==")(0)
+    assert("Exchange".r.findAllIn(finalSection).size == 1,
+      s"expected exactly 1 exchange:\n$p")
+    assert(finalSection.contains("REBALANCE_PARTITIONS_BY_COL"), s"the exchange is not a rebalance:\n$p")
+    assert(!p.contains("Scan parquet"), s"merge write plan must not scan the table:\n$p")
+  }
+
   test("LWW dedup uses partial aggregation (map-side combine before exchange)") {
     val dedup = MergeInto.lwwDedup(QueryCatalog.eventsAsChanges(spark, sf),
       Seq("user_id", "slot"))
