@@ -3,8 +3,8 @@ package graft.lake
 import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import org.json4s.{DefaultFormats, Formats}
-import org.json4s.jackson.Serialization
+import org.json4s.{DefaultFormats, Extraction, Formats, JArray, JField, JNothing, JValue}
+import org.json4s.jackson.{JsonMethods, Serialization}
 
 import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
@@ -35,6 +35,10 @@ import scala.jdk.CollectionConverters._
   * that wrote the file ([[TableWriter]]). The delta entries a commit adds
   * are also its lineage: [[LakeTable.lineage]] reads them, nothing else
   * stores it.
+  *
+  * This is the in-memory view. On disk a segment stores one record per
+  * data file (path, `schemaId`, `kind` and `del` once, with per-bucket
+  * arrays of `rows`, `maxPos` and `delRows`; see [[MetaSegment]]).
   */
 final case class FileEntry(bucket: Int, path: String, rows: Long, schemaId: Int,
     kind: String = "base", del: Boolean = false, maxPos: Long = -1L,
@@ -106,19 +110,24 @@ final case class TableMeta(
   def dataFiles: Int = files.iterator.map(_.path).distinct.size
 }
 
-/** One version file on disk. Every segment records its own commit once:
-  * the files it added (`addedFiles`), the paths it removed and its
-  * `historyAdd` row, plus the small scalar state. Every `SnapshotEvery`
-  * commits a snapshot segment also carries the full file list and history
-  * (`filesFull`, `historyFull`) and re-anchors the chain — the Iceberg
-  * manifest-list shape. Commit cost is therefore O(batch) between
-  * snapshots.
+/** One version file. Every segment records its own commit once: the files
+  * it added (`addedFiles`), the paths it removed, the schemas it registered
+  * (`schemas`) and its `historyAdd` row, plus the small scalar state. Every
+  * `SnapshotEvery` commits a snapshot segment also carries the full file
+  * list, schema map and history (`filesFull`, `schemas`, `historyFull`)
+  * and re-anchors the chain — the Iceberg manifest-list shape. Commit cost
+  * is therefore O(batch) between snapshots.
   *
-  * Snapshot segments written by earlier builds (v > 1, `historyAdd`
-  * empty) hold only the full lists: their own adds are unknown, so
-  * [[LakeTable.addedFilesBetween]] and [[LakeTable.lineage]] refuse them
-  * and `vacuum(1)` replaces them. Those builds also stored lineage lists,
-  * which parsing ignores.
+  * On disk `addedFiles` and `filesFull` hold one record per data file, not
+  * one [[FileEntry]] per bucket: a commit's one multi-bucket delta file
+  * stores its path once. Parsing expands the records back into entries.
+  *
+  * Segments written by earlier builds read the same: their file lists hold
+  * one entry per bucket, and a plain segment carries the full schema map.
+  * Their snapshot segments (v > 1, `historyAdd` empty) hold only the full
+  * lists: their own adds are unknown, so [[LakeTable.addedFilesBetween]]
+  * and [[LakeTable.lineage]] refuse them and `vacuum(1)` replaces them.
+  * Those builds also stored lineage lists, which parsing ignores.
   */
 final case class MetaSegment(
     version: Int,
@@ -500,7 +509,9 @@ final class LakeTable private (val root: Path, val spark: SparkSession) {
     val seg = MetaSegment(
       version = next.version,
       baseVersion = if (snapshot) next.version else prev.baseVersion,
-      schemaId = next.schemaId, schemas = next.schemas,
+      schemaId = next.schemaId,
+      schemas = if (snapshot) next.schemas
+        else next.schemas.filterNot { case (id, json) => prev.schemas.get(id).contains(json) },
       keyCols = next.keyCols, bucketCols = next.bucketCols,
       numBuckets = next.numBuckets,
       lastEpoch = next.lastEpoch, lastOffset = next.lastOffset,
@@ -534,20 +545,16 @@ object LakeTable {
   val HistoryCap = 10000
 
   /** Per-write Hadoop options of every engine parquet write.
-    *  - route the write's `file:` calls through [[NioLocalFileSystem]];
-    *    bypassing Hadoop's per-scheme FileSystem cache keeps that instance
-    *    private to the one write: every other reader and writer of the
-    *    session still gets the stock filesystem.
+    *  - route the write's `file:` calls through [[NioLocalFileSystem]],
+    *    private to the one write ([[NioLocalFileSystem.Options]]).
     *  - truncate footer min/max of string columns to 64 bytes, the length
     *    parquet already uses for its page index: a small micro-batch writes
     *    ~200-row files, whose full min/max of long text columns were ~18%
     *    of each footer. Truncated bounds stay valid for pruning; the engine
     *    reads no footer statistics itself (its writer counts them).
     */
-  private[lake] val WriteOptions = Map(
-    "fs.file.impl" -> classOf[NioLocalFileSystem].getName,
-    "fs.file.impl.disable.cache" -> "true",
-    "parquet.statistics.truncate.length" -> "64")
+  private[lake] val WriteOptions = NioLocalFileSystem.Options +
+    ("parquet.statistics.truncate.length" -> "64")
 
   /** A `DataFrameWriter` parquet write with the engine's write options:
     * same files, modes and `.crc` checksums as a plain `.parquet(dir)`, but
@@ -599,9 +606,63 @@ object LakeTable {
   private def segmentPath(root: Path, v: Int): Path =
     root.resolve("meta").resolve(f"v$v%08d.json")
 
+  /** On-disk form of one data file's [[FileEntry]]s: the shared fields
+    * once, then one array slot per bucket the file holds.
+    */
+  private final case class FileRecord(path: String, schemaId: Int, kind: String,
+      del: Boolean, buckets: List[Int], rows: List[Long], maxPos: List[Long],
+      delRows: List[Long])
+
+  private def toRecords(files: List[FileEntry]): List[FileRecord] = {
+    def key(f: FileEntry) = (f.path, f.schemaId, f.kind, f.del)
+    val byKey = files.groupBy(key)
+    files.map(key).distinct.map { case k @ (path, schemaId, kind, del) =>
+      val fs = byKey(k)
+      FileRecord(path, schemaId, kind, del, fs.map(_.bucket), fs.map(_.rows),
+        fs.map(_.maxPos), fs.map(_.delRows))
+    }
+  }
+
+  private def toEntries(r: FileRecord): Seq[FileEntry] = {
+    val (rows, maxPos, delRows) = (r.rows.toVector, r.maxPos.toVector, r.delRows.toVector)
+    require(Seq(rows, maxPos, delRows).forall(_.size == r.buckets.size),
+      s"file record ${r.path}: per-bucket arrays differ in length")
+    r.buckets.zipWithIndex.map { case (b, i) =>
+      FileEntry(b, r.path, rows(i), r.schemaId, r.kind, r.del, maxPos(i), delRows(i))
+    }
+  }
+
+  /** File list fields of a segment, in the on-disk per-file form. */
+  private val FileLists = Set("addedFiles", "filesFull")
+
+  private[lake] def segmentJson(seg: MetaSegment): String = {
+    val lists = Map("addedFiles" -> seg.addedFiles) ++ seg.filesFull.map("filesFull" -> _)
+    Serialization.write(Extraction.decompose(
+      seg.copy(addedFiles = Nil, filesFull = seg.filesFull.map(_ => Nil))).transformField {
+      case JField(k, _) if FileLists(k) => JField(k, Extraction.decompose(toRecords(lists(k))))
+    })
+  }
+
+  /** Parse a segment; a file list holds per-file records, or per-bucket
+    * entries in a segment written by an earlier build. Entries come back in
+    * (bucket, path) order, the order every commit's file list has.
+    */
+  private[lake] def parseSegment(json: String): MetaSegment = {
+    val jv = JsonMethods.parse(json)
+    def entries(v: JValue): List[FileEntry] = (v match {
+      case JArray(xs) => xs.flatMap(x =>
+        if (x \ "buckets" == JNothing) Seq(x.extract[FileEntry]) else toEntries(x.extract[FileRecord]))
+      case _ => Nil
+    }).sortBy(f => (f.bucket, f.path))
+    jv.transformField { case JField(k, _) if FileLists(k) => JField(k, JArray(Nil)) }
+      .extract[MetaSegment].copy(
+        addedFiles = entries(jv \ "addedFiles"),
+        filesFull = (jv \ "filesFull").toOption.map(entries))
+  }
+
   private[lake] def readSegment(root: Path, v: Int): MetaSegment = {
     val json = new String(Files.readAllBytes(segmentPath(root, v)), "UTF-8")
-    try Serialization.read[MetaSegment](json)
+    try parseSegment(json)
     catch { case e: org.json4s.MappingException =>
       throw new IllegalStateException(
         s"unreadable meta segment v$v at $root — not the manifest-segment " +
@@ -631,7 +692,7 @@ object LakeTable {
       else {
         val removed = seg.removedPaths.toSet
         m.copy(
-          version = seg.version, schemaId = seg.schemaId, schemas = seg.schemas,
+          version = seg.version, schemaId = seg.schemaId, schemas = m.schemas ++ seg.schemas,
           lastEpoch = seg.lastEpoch, lastOffset = seg.lastOffset,
           lastPipelineId = seg.lastPipelineId,
           lastCompactOffset = seg.lastCompactOffset,
@@ -670,7 +731,7 @@ object LakeTable {
     val tmp = metaDir.resolve(
       f".v${seg.version}%08d-${java.util.UUID.randomUUID().toString.take(8)}.tmp")
     val dest = metaDir.resolve(f"v${seg.version}%08d.json")
-    Files.write(tmp, Serialization.write(seg).getBytes("UTF-8"))
+    Files.write(tmp, segmentJson(seg).getBytes("UTF-8"))
     try Files.createLink(dest, tmp)
     catch { case _: java.nio.file.FileAlreadyExistsException =>
       throw new IllegalStateException(s"concurrent commit of v${seg.version}")

@@ -16,10 +16,22 @@ import java.nio.file.attribute.PosixFilePermissions
   * verified on read, umask handling, rename/commit protocol) is the stock
   * `LocalFileSystem`.
   *
-  * Selected per write only ([[TableWriter]], [[LakeTable.writeParquet]]), never
-  * session-wide.
+  * Selected per write ([[TableWriter]], [[LakeTable.writeParquet]]) and per
+  * streaming checkpoint manager ([[graft.streaming.NioCheckpointFileManager]])
+  * through [[NioLocalFileSystem.Options]], never session-wide.
   */
 final class NioLocalFileSystem extends LocalFileSystem(new NioRawLocalFileSystem)
+
+object NioLocalFileSystem {
+  /** Hadoop settings that route `file:` calls through this filesystem.
+    * Bypassing Hadoop's per-scheme FileSystem cache keeps the instance
+    * private to the configuration that carries them: every other reader and
+    * writer of the session still gets the stock filesystem.
+    */
+  val Options: Map[String, String] = Map(
+    "fs.file.impl" -> classOf[NioLocalFileSystem].getName,
+    "fs.file.impl.disable.cache" -> "true")
+}
 
 final class NioRawLocalFileSystem extends RawLocalFileSystem {
   override def setPermission(p: Path, permission: FsPermission): Unit =

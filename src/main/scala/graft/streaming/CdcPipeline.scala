@@ -149,10 +149,13 @@ object CdcPipeline {
 
   /** The engine's one batch loop: the changelog source for the plan's wire
     * format → foreachBatch → [[withBatchRetries]] → [[applyPlan]], on an
-    * AvailableNow (drain and stop) or processing-time trigger.
+    * AvailableNow (drain and stop) or processing-time trigger. Its
+    * checkpoint logs go through [[NioCheckpointFileManager]] unless the
+    * session names its own manager.
     */
   private[streaming] def run(spark: SparkSession, plan: Plan, cfg: Config,
       availableNow: Boolean): StreamingQuery = {
+    NioCheckpointFileManager.install(spark)
     val wire = plan.wireFormat match {
       case "debezium" =>
         // a Debezium topic dump: JSON-lines files, one envelope per line.

@@ -372,6 +372,111 @@ class LakeTableSpec extends SparkSpec {
     assert(state(old.snapshot()) == Map("a" -> "a2", "c" -> "c1"))
   }
 
+  private def segmentFile(t: LakeTable, v: Int) = t.root.resolve("meta").resolve(f"v$v%08d.json")
+
+  private def readJson(p: java.nio.file.Path) =
+    org.json4s.jackson.JsonMethods.parse(new String(Files.readAllBytes(p), "UTF-8"))
+
+  test("a segment stores each data file's path once, and only the schemas " +
+    "its commit registers") {
+    val t = LakeTable.create(spark, tmpDir("lt-rec").resolve("t").toString,
+      schema, Seq("k"), Seq("k"), 8)
+    MergeInto.merge(t, batch((1 to 40).map(i => (OpInsert, i.toLong, s"k$i", s"v$i")): _*), 0)
+    MergeInto.merge(t, batch((OpUpdate, 41L, "k1", "w"), (OpDelete, 42L, "k2", null)), 1)
+    (2 to 3).foreach { v =>
+      val json = new String(Files.readAllBytes(segmentFile(t, v)), "UTF-8")
+      val added = t.addedFilesBetween(v - 1, v)
+      assert(added.nonEmpty)
+      added.map(_.path).distinct.foreach(p =>
+        assert(json.split(java.util.regex.Pattern.quote(p), -1).length == 2,
+          s"v$v repeats $p"))
+    }
+    assert(t.addedFilesBetween(1, 2).groupBy(_.path).values.exists(_.size > 1),
+      "no multi-bucket file: the batch should span several buckets")
+    // the schema map: in full on v1, empty on a commit that registers none
+    import org.json4s._
+    assert((readJson(segmentFile(t, 1)) \ "schemas").children.size == 1)
+    assert(readJson(segmentFile(t, 3)) \ "schemas" == JObject())
+    assert(t.refresh().schemas.size == 1 && t.metaAt(3).schemas == t.metaAt(1).schemas)
+  }
+
+  test("a table whose segments hold the per-bucket entries of earlier builds " +
+    "loads, snapshots, tails and takes commits as before") {
+    import org.json4s._
+    import spark.implicits._
+    val dir = tmpDir("lt-perbucket")
+    val t = LakeTable.create(spark, dir.resolve("t").toString, schema, Seq("k"), Seq("k"), 4)
+    val rnd = new scala.util.Random(11)
+    var pos = 0L
+    def step(e: Int) = (0 until (if (e == 0) 20 else 1 + rnd.nextInt(8))).map { _ =>
+      pos += 1
+      val k = s"k${rnd.nextInt(20)}"
+      if (rnd.nextInt(5) == 0) (OpDelete, pos, k, null) else (OpUpdate, pos, k, s"v$pos")
+    }
+    (0 until LakeTable.SnapshotEvery + 4).foreach { e =>
+      if (e == 9) MergeInto.compact(t)
+      MergeInto.merge(t, batch(step(e): _*), e.toLong)
+    }
+    val tip = t.refresh().version
+    // rewrite every segment the way earlier builds wrote it: one FileEntry
+    // object per bucket, and the full schema map on every segment
+    val old = dir.resolve("old")
+    Files.createDirectories(old.resolve("meta"))
+    val data = Files.walk(t.dataDir)
+    try data.iterator().asScala.foreach(p =>
+      Files.copy(p, old.resolve(t.root.relativize(p).toString)))
+    finally data.close()
+    (1 to tip).foreach { v =>
+      val perBucket = readJson(segmentFile(t, v)).transformField {
+        case JField(k @ ("addedFiles" | "filesFull"), JArray(records)) =>
+          JField(k, JArray(records.flatMap { r =>
+            val JArray(b) = r \ "buckets"
+            b.indices.map(i => JObject(List(
+              "bucket" -> b(i), "path" -> r \ "path",
+              "rows" -> (r \ "rows")(i), "schemaId" -> r \ "schemaId",
+              "kind" -> r \ "kind", "del" -> r \ "del",
+              "maxPos" -> (r \ "maxPos")(i), "delRows" -> (r \ "delRows")(i))))
+          }))
+        case JField("schemas", _) => JField("schemas",
+          JObject(t.metaAt(v).schemas.map { case (id, s) => id -> JString(s) }.toList))
+      }
+      Files.write(old.resolve("meta").resolve(f"v$v%08d.json"),
+        org.json4s.jackson.JsonMethods.compact(perBucket).getBytes("UTF-8"))
+    }
+    val o = LakeTable.load(spark, old.toString)
+    val multi = t.addedFilesBetween(1, 2).groupBy(_.path).collectFirst {
+      case (p, es) if es.size > 1 => p }.get
+    assert(new String(Files.readAllBytes(segmentFile(o, 2)), "UTF-8")
+      .split(java.util.regex.Pattern.quote(multi), -1).length > 2, "not per-bucket")
+
+    def lineage(x: LakeTable) = x.lineage().as[LineageEntry].collect().toSeq
+    assert(o.meta == t.meta)
+    (1 to tip).foreach(v => assert(o.metaAt(v) == t.metaAt(v), s"v$v"))
+    assert(o.addedFilesBetween(1, tip) == t.addedFilesBetween(1, tip))
+    assert(lineage(o) == lineage(t))
+    assert(state(o.snapshot()) == state(t.snapshot()))
+    assert(state(o.snapshotAt(tip - 6)) == state(t.snapshotAt(tip - 6)))
+
+    // both take the same further commits (past the next snapshot segment)
+    // and a compaction, with the same results
+    (LakeTable.SnapshotEvery + 4 until 2 * LakeTable.SnapshotEvery + 2).foreach { e =>
+      val rows = step(e)
+      Seq(t, o).foreach(x => MergeInto.merge(x, batch(rows: _*), e.toLong))
+    }
+    Seq(t, o).foreach(MergeInto.compact(_))
+    val end = t.refresh().version
+    assert(o.refresh().version == end && o.meta.baseVersion == t.meta.baseVersion)
+    assert(state(o.snapshot()) == state(t.snapshot()))
+    assert(lineage(o) == lineage(t))
+    // (new paths are random: compare what each commit added without them)
+    (tip + 1 to end).foreach { v =>
+      def adds(x: LakeTable) = x.addedFilesBetween(v - 1, v)
+        .map(f => (f.bucket, f.rows, f.kind, f.del, f.maxPos, f.delRows)).sorted
+      assert(adds(o) == adds(t), s"v$v")
+    }
+    assert(o.meta.files.size == t.meta.files.size && o.meta.schemas == t.meta.schemas)
+  }
+
   test("wildcard table expansion (S6): regex match, lone-* rejected") {
     import graft.sources.Tables
     val names = Tables.expandDir("/root/testdata/sf0.001", "^(nation|region)$")
