@@ -635,7 +635,7 @@ object LakeTable {
   /** File list fields of a segment, in the on-disk per-file form. */
   private val FileLists = Set("addedFiles", "filesFull")
 
-  private[lake] def segmentJson(seg: MetaSegment): String = {
+  private def segmentJson(seg: MetaSegment): String = {
     val lists = Map("addedFiles" -> seg.addedFiles) ++ seg.filesFull.map("filesFull" -> _)
     Serialization.write(Extraction.decompose(
       seg.copy(addedFiles = Nil, filesFull = seg.filesFull.map(_ => Nil))).transformField {
@@ -647,7 +647,7 @@ object LakeTable {
     * entries in a segment written by an earlier build. Entries come back in
     * (bucket, path) order, the order every commit's file list has.
     */
-  private[lake] def parseSegment(json: String): MetaSegment = {
+  private def parseSegment(json: String): MetaSegment = {
     val jv = JsonMethods.parse(json)
     def entries(v: JValue): List[FileEntry] = (v match {
       case JArray(xs) => xs.flatMap(x =>
