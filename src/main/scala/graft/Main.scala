@@ -102,10 +102,7 @@ object Main {
     // action, use only to skip poison spans or rewind after a restore
     case "set-offset" :: tableDir :: epoch :: offset :: _ =>
       val table = LakeTable.load(spark, tableDir)
-      val next = table.commitAtomic(m => m.copy(version = m.version + 1,
-        lastEpoch = epoch.toLong, lastOffset = offset.toLong,
-        history = m.history :+ graft.lake.CommitInfo(m.version + 1, epoch.toLong,
-          offset.toLong, System.currentTimeMillis(), "set-offset")))
+      val next = table.commitAtomic(_.nextSegment("set-offset", epoch.toLong, offset.toLong))
       println(s"set: lastEpoch=${next.lastEpoch} lastOffset=${next.lastOffset} v=${next.version}")
 
     case "compact" :: tableDir :: rest =>

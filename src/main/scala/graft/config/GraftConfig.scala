@@ -84,7 +84,6 @@ final case class GraftConfig(
     checkpointDir: String,
     maxFilesPerTrigger: Int = 4,
     triggerMs: Long = 200L,
-    saltedDedup: Int = 0,
     autoCompactRatio: Double = 4.0,
     autoCompactMinRows: Long = 200000L,
     allowPipelineTakeover: Boolean = false,
@@ -151,7 +150,6 @@ object GraftConfig {
       checkpointDir = str(root, "checkpoint_dir", required = true),
       maxFilesPerTrigger = int(root, "max_files_per_trigger", 4),
       triggerMs = long(root, "trigger_ms", 200L),
-      saltedDedup = int(root, "salted_dedup", 0),
       autoCompactRatio = dbl(root, "auto_compact_ratio", 4.0),
       autoCompactMinRows = long(root, "auto_compact_min_rows", 200000L),
       allowPipelineTakeover = bool(root, "allow_pipeline_takeover", default = false),
@@ -260,7 +258,7 @@ object GraftConfig {
   // The keys each section's parse reads — exactly those, no more: a key
   // outside its set is a typo or a removed option, never silently ignored.
   private val RootKeys = Set("changelog_dir", "checkpoint_dir",
-    "max_files_per_trigger", "trigger_ms", "salted_dedup", "auto_compact_ratio",
+    "max_files_per_trigger", "trigger_ms", "auto_compact_ratio",
     "auto_compact_min_rows", "allow_pipeline_takeover", "feed_fold_every",
     "feed_retain_epochs", "wire_format", "table_start_version", "routes", "schemas")
   private val RouteKeys = Set("name", "filter", "target", "table_dir", "out_dir",

@@ -13,11 +13,11 @@ import scala.jdk.CollectionConverters._
   * table root. A MOR delta file holds several buckets (one file per write
   * task) and has one entry per bucket it holds, each with that bucket's
   * `rows`, `maxPos` and `delRows`; a base file holds one bucket. All entries
-  * of a path are added in one commit and removed in one commit
-  * ([[LakeTable.commitMeta]] enforces it). `schemaId` records the schema
-  * the file was WRITTEN with, so readers can align old (narrower) files to
-  * the current schema — the lake-side analog of the reference re-fetching
-  * the table schema on DDL and re-projecting (reference:
+  * of a path are added in one commit and removed in one commit: a segment
+  * removes by path, so no commit can drop part of a file. `schemaId`
+  * records the schema the file was WRITTEN with, so readers can align old
+  * (narrower) files to the current schema — the lake-side analog of the
+  * reference re-fetching the table schema on DDL and re-projecting (reference:
   * global/rule.go:295-343 AfterUpdateTableInfo).
   *
   * `kind`: "base" (fully resolved rows) or "delta" (merge-on-read row-version
@@ -108,6 +108,21 @@ final case class TableMeta(
     DataType.fromJson(schemas(id.toString)).asInstanceOf[StructType]
   /** Physical data files (`files` holds one entry per bucket of a file). */
   def dataFiles: Int = files.iterator.map(_.path).distinct.size
+
+  /** The segment of the commit after this version, recording `operation`:
+    * `version + 1` stamped on it and its [[CommitInfo]], the fence set to
+    * (`epoch`, `offset`), every other scalar carried over, and nothing
+    * added, removed or registered. A committer copies in what it changes.
+    */
+  def nextSegment(operation: String, epoch: Long = lastEpoch, offset: Long = lastOffset,
+      replayed: Long = 0L, upserted: Long = 0L, deleted: Long = 0L): MetaSegment =
+    MetaSegment(version = version + 1, baseVersion = baseVersion, schemaId = schemaId,
+      schemas = Map.empty, keyCols = keyCols, bucketCols = bucketCols,
+      numBuckets = numBuckets, lastEpoch = epoch, lastOffset = offset,
+      lastPipelineId = lastPipelineId, addedFiles = Nil, removedPaths = Nil,
+      historyAdd = List(CommitInfo(version + 1, epoch, offset, System.currentTimeMillis(),
+        operation, replayed, upserted, deleted)),
+      lastCompactOffset = lastCompactOffset)
 }
 
 /** One version file. Every segment records its own commit once: the files
@@ -392,11 +407,7 @@ final class LakeTable private (val root: Path, val spark: SparkSession) {
     // self-contained tip so the fold chain can be cut at the window edge
     val tip = readSegment(root, versions().last)
     if (!tip.isSnapshot || tip.lacksOwnCommit)
-      commitAtomic(m => m.copy(
-        version = m.version + 1,
-        history = m.history :+ CommitInfo(m.version + 1, m.lastEpoch, m.lastOffset,
-          System.currentTimeMillis(), "vacuum-snapshot")),
-        forceSnapshot = true)
+      commitAtomic(_.nextSegment("vacuum-snapshot"), forceSnapshot = true)
     val all = versions()
     // each segment is JSON-parsed at most once per vacuum (cut + both refOf
     // passes share the cache), and membership checks use a Set — on a long
@@ -474,58 +485,32 @@ final class LakeTable private (val root: Path, val spark: SparkSession) {
   /** Build-and-commit against the LATEST snapshot under the table monitor —
     * the in-process half of optimistic concurrency (the ingest thread and
     * the async compactor both commit through here; `build` must rebase its
-    * changes onto whatever `latest` holds). Cross-process atomicity comes
-    * from the hard-link create in [[LakeTable.writeSegment]].
+    * changes onto whatever `latest` holds). `build` returns the commit's own
+    * segment, usually `latest.nextSegment(…)` with the commit's adds,
+    * removed paths and registered schemas copied in; [[publish]] does the
+    * rest. Cross-process atomicity comes from the hard-link create in
+    * [[LakeTable.writeSegment]].
     */
-  def commitAtomic(build: TableMeta => TableMeta,
+  def commitAtomic(build: TableMeta => MetaSegment,
       forceSnapshot: Boolean = false): TableMeta = synchronized {
     val latest = refresh()
-    val next = build(latest)
-    commitMeta(latest, next, forceSnapshot)
+    publish(latest, build(latest), forceSnapshot)
   }
 
-  /** Atomically publish `next` as the successor of `prev` (one version
-    * bump). Caller stages data files first. Serializes the commit's own
-    * changes, plus the full lists when the snapshot cadence (or
-    * `forceSnapshot`) re-anchors. A `next` without a history row of its
-    * own gets a generic "commit" row, so every segment records its commit.
+  /** Publish `seg` as the successor of `prev` (caller stages data files
+    * first): fold it onto `prev` the way readers do, add the full lists when
+    * the snapshot cadence (or `forceSnapshot`) re-anchors, write it, and
+    * cache the folded view.
     */
-  def commitMeta(prev: TableMeta, next: TableMeta,
+  private[graft] def publish(prev: TableMeta, seg: MetaSegment,
       forceSnapshot: Boolean = false): TableMeta = synchronized {
-    require(next.version == prev.version + 1,
-      s"commit must bump one version: v${prev.version} → v${next.version}")
-    val snapshot = forceSnapshot || next.version - prev.baseVersion >= SnapshotEvery
-    val prevPaths = prev.files.iterator.map(_.path).toSet
-    val nextPaths = next.files.iterator.map(_.path).toSet
-    // path-atomic entries: the segment diff and vacuum go by path, so a data
-    // file keeps ALL its bucket entries or loses all of them
-    val keptEntries = next.files.iterator.filter(f => prevPaths.contains(f.path)).toSet
-    val partial = prev.files.filter(f => nextPaths.contains(f.path) && !keptEntries.contains(f))
-    require(partial.isEmpty, s"commit v${next.version} removes only some bucket " +
-      s"entries of ${partial.map(_.path).distinct.take(3).mkString(", ")}")
-    val history = if (next.history.size > prev.history.size) next.history
-      else next.history :+ CommitInfo(next.version, next.lastEpoch, next.lastOffset,
-        System.currentTimeMillis(), "commit")
-    val seg = MetaSegment(
-      version = next.version,
-      baseVersion = if (snapshot) next.version else prev.baseVersion,
-      schemaId = next.schemaId,
-      schemas = if (snapshot) next.schemas
-        else next.schemas.filterNot { case (id, json) => prev.schemas.get(id).contains(json) },
-      keyCols = next.keyCols, bucketCols = next.bucketCols,
-      numBuckets = next.numBuckets,
-      lastEpoch = next.lastEpoch, lastOffset = next.lastOffset,
-      lastPipelineId = next.lastPipelineId,
-      lastCompactOffset = next.lastCompactOffset,
-      addedFiles = next.files.filterNot(f => prevPaths.contains(f.path)),
-      removedPaths = prev.files.iterator.map(_.path).filterNot(nextPaths.contains)
-        .distinct.toList,
-      historyAdd = history.drop(prev.history.size),
-      filesFull = if (snapshot) Some(next.files) else None,
-      historyFull = if (snapshot) Some(history.takeRight(HistoryCap)) else None)
-    LakeTable.writeSegment(root, seg)
-    val folded = next.copy(baseVersion = seg.baseVersion,
-      history = history.takeRight(HistoryCap))
+    val snapshot = forceSnapshot || seg.version - prev.baseVersion >= SnapshotEvery
+    val own = seg.copy(baseVersion = if (snapshot) seg.version else prev.baseVersion)
+    val folded = foldSegments(prev, Seq(own))
+    LakeTable.writeSegment(root,
+      if (!snapshot) own
+      else own.copy(schemas = folded.schemas, filesFull = Some(folded.files),
+        historyFull = Some(folded.history)))
     metaCache = folded
     folded
   }

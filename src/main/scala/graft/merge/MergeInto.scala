@@ -1,7 +1,7 @@
 package graft.merge
 
 import graft.core.{Timing, Types}
-import graft.lake.{CommitInfo, FileEntry, LakeTable, TableMeta, TableWriter, WrittenPart}
+import graft.lake.{FileEntry, LakeTable, TableMeta, TableWriter, WrittenPart}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -45,8 +45,6 @@ final case class MergeResult(epoch: Long, skipped: Boolean,
   * write task (one file) and splits a hot bucket over several, from the
   * shuffle bytes it measured. The read path resolves per-key LWW over
   * base+delta; [[compact]] folds deltas into base, amortizing read cost.
-  * An optional salted two-phase dedup (`salt`) slims the deltas of
-  * pathological single-key floods (SURVEY.md §7.5).
   *
   * Exactly-once: the (epoch, offset) fence rides in the same atomic commit
   * as the data. When a `pipelineId` is supplied, the fence is additionally
@@ -121,7 +119,7 @@ object MergeInto {
     * `_schema_id`, the observed watermark evolves the table in the same
     * commit (OnTableChanged analog — reference: service/handler.go:56-62).
     */
-  def merge(table: LakeTable, batch: DataFrame, epoch: Long, salt: Int = 0,
+  def merge(table: LakeTable, batch: DataFrame, epoch: Long,
       registry: Map[Int, StructType] = Map.empty,
       batchSchemaId: Int = -1,
       pipelineId: String = "",
@@ -140,9 +138,7 @@ object MergeInto {
     // picks the same winner whether or not intra-batch losers are written.
     // Skipping the groupBy saves a full shuffle+aggregate of every batch —
     // the merge is scan → one bucket exchange → write. (Delta files carry
-    // the losers until compaction folds them; `salt` retains the salted
-    // two-phase dedup for callers that want slimmer deltas on hot keys.)
-    val dedup = if (salt > 1) lwwDedup(batch, keyCols, salt) else batch
+    // the losers until compaction folds them.)
     val isDel = col("_op") === OpDelete
     val batchCols = batch.columns.toSet
 
@@ -155,7 +151,7 @@ object MergeInto {
     val replayAtOrBelow = if (m0.lastEpoch == Long.MinValue) Long.MinValue else m0.lastOffset
     val commitRel = s"data/${UUID.randomUUID().toString.take(12)}"
     val parts = Timing.timed("  mor-write") {
-      val stored = dedup.select(
+      val stored = batch.select(
           (fileSchema.fields.map { f =>
             val base =
               if (!batchCols.contains(f.name)) lit(null)
@@ -175,11 +171,8 @@ object MergeInto {
     }
     val nDedup = parts.map(_.rows).sum
     if (nDedup == 0) { // empty batch: advance the fence only
-      table.commitAtomic(latest => latest.copy(
-        version = latest.version + 1, lastEpoch = epoch,
-        lastPipelineId = pidOr(latest, pipelineId),
-        history = latest.history :+ CommitInfo(latest.version + 1, epoch,
-          latest.lastOffset, System.currentTimeMillis(), "merge-empty")))
+      table.commitAtomic(latest => latest.nextSegment("merge-empty", epoch = epoch)
+        .copy(lastPipelineId = pidOr(latest, pipelineId)))
       return MergeResult(epoch, skipped = false, 0, 0, 0, 0)
     }
     val nDeletes = parts.map(_.tombstones).sum
@@ -194,28 +187,24 @@ object MergeInto {
     // have published meanwhile; schema registration + in-flight evolution
     // land in the SAME atomic commit as the data
     table.commitAtomic { latest =>
-      var schemas = latest.schemas
-      if (!schemas.contains(sid.toString))
-        schemas += sid.toString -> fileSchema.json
+      // the schemas this commit registers: the files' own if new, and the
+      // evolved one (the fold adds both to the table's map)
+      var registers = Map.empty[String, String]
+      if (!latest.schemas.contains(sid.toString))
+        registers += sid.toString -> fileSchema.json
       var schemaId = latest.schemaId
       if (maxSid > schemaId) {
         val target = registry.getOrElse(maxSid, throw new IllegalStateException(
           s"batch carries schema_id $maxSid but registry has no schema for it"))
         LakeTable.checkCompatible(latest.schema, target)
-        schemas += maxSid.toString -> target.json
+        registers += maxSid.toString -> target.json
         schemaId = maxSid
       }
-      latest.copy(
-        version = latest.version + 1,
-        schemaId = schemaId,
-        schemas = schemas,
-        lastEpoch = epoch,
+      latest.nextSegment(s"merge-mor:buckets=$touched:rows=$nDedup", epoch, maxPos,
+        replayed = nReplays, upserted = nDedup - nDeletes, deleted = nDeletes).copy(
         lastOffset = math.max(latest.lastOffset, maxPos),
         lastPipelineId = pidOr(latest, pipelineId),
-        files = (latest.files ++ newFiles).sortBy(f => (f.bucket, f.path)),
-        history = latest.history :+ CommitInfo(latest.version + 1, epoch, maxPos,
-          System.currentTimeMillis(), s"merge-mor:buckets=$touched:rows=$nDedup",
-          replayed = nReplays, upserted = nDedup - nDeletes, deleted = nDeletes))
+        schemaId = schemaId, schemas = registers, addedFiles = newFiles)
     }
 
     MergeResult(epoch, skipped = false, upserted = nDedup - nDeletes,
@@ -263,9 +252,9 @@ object MergeInto {
     // delta file carries a delta, so whole files leave the manifest.
     val deltaBuckets = m.files.filter(_.kind == "delta").map(_.bucket).toSet
     if (deltaBuckets.isEmpty) return
-    val inputs = m.files.filter(f => deltaBuckets.contains(f.bucket)).toSet
+    val inputs = m.files.filter(f => deltaBuckets.contains(f.bucket))
     val bucket = table.bucketExpr(m.numBuckets, m.bucketCols)
-    val resolved = table.resolve(m, inputs.toSeq)
+    val resolved = table.resolve(m, inputs)
       .where(!col(table.DelCol) || col(table.PosCol) >= gcBelowPos)
       .withColumnRenamed(table.DelCol, TableWriter.SplitDelCol)
       .withColumn(TableWriter.BucketCol, bucket)
@@ -276,20 +265,17 @@ object MergeInto {
     val newFiles = entries(parts, m.schemaId, "base")
     // rebase: keep any delta files appended since `m` was resolved
     table.commitAtomic { latest =>
-      require(inputs.subsetOf(latest.files.toSet),
+      require(inputs.toSet.subsetOf(latest.files.toSet),
         "compaction inputs vanished — concurrent non-append commit")
-      latest.copy(
-        version = latest.version + 1,
-        // watermark for the NEXT compaction's tombstone GC: the offset of
-        // the snapshot THIS compaction resolved (≤ latest.lastOffset —
-        // conservative under concurrent merges); monotone under manual +
-        // auto interleaving
-        lastCompactOffset = math.max(latest.lastCompactOffset, m.lastOffset),
-        files = (latest.files.filterNot(inputs.contains) ++ newFiles)
-          .sortBy(f => (f.bucket, f.path)),
-        history = latest.history :+ CommitInfo(latest.version + 1, latest.lastEpoch,
-          latest.lastOffset, System.currentTimeMillis(),
-          s"compact:files=${parts.map(_.path).distinct.size}:gcBelow=$gcBelowPos"))
+      latest.nextSegment(s"compact:files=${parts.map(_.path).distinct.size}:gcBelow=$gcBelowPos")
+        .copy(
+          // watermark for the NEXT compaction's tombstone GC: the offset of
+          // the snapshot THIS compaction resolved (≤ latest.lastOffset —
+          // conservative under concurrent merges); monotone under manual +
+          // auto interleaving
+          lastCompactOffset = math.max(latest.lastCompactOffset, m.lastOffset),
+          removedPaths = inputs.map(_.path).distinct,
+          addedFiles = newFiles)
     }
   }
 

@@ -34,7 +34,6 @@ object CdcPipeline {
       checkpointDir: String,
       maxFilesPerTrigger: Int = 4,
       triggerMs: Long = 200L, // reference default flush_bulk_interval=200ms
-      saltedDedup: Int = 0,
       // fold deltas into base when deltaRows ≥ ratio × baseRows (and ≥ minRows)
       autoCompactRatio: Double = 4.0,
       autoCompactMinRows: Long = 200000L,
@@ -51,11 +50,6 @@ object CdcPipeline {
       retryBackoffMs: Long = 100L,
       maxRestarts: Int = 3,
       restartBackoffMs: Long = 500L,
-      // a query that ran healthily this long earns its restart budget back —
-      // without this, sporadic terminal errors over weeks exhaust the budget
-      // and kill a healthy pipeline permanently (the reference reconnects
-      // indefinitely: transfer_service.go:328-354)
-      restartResetMs: Long = 60000L,
       // test hook: invoked with the batchId INSIDE the retried region, so
       // specs can inject transient sink failures deterministically
       failureInjector: Option[Long => Unit] = None)
@@ -260,7 +254,7 @@ object CdcPipeline {
   private def sink(plan: Plan, r: Route, rows: DataFrame, epoch: Long,
       newestSid: Int, cfg: Config, pipelineId: String): MergeResult = r.sink match {
     case Lake(table, registry) =>
-      def merge = MergeInto.merge(table, rows, epoch, cfg.saltedDedup, registry,
+      def merge = MergeInto.merge(table, rows, epoch, registry,
         batchSchemaId = newestSid, pipelineId = pipelineId,
         allowTakeover = cfg.allowPipelineTakeover)
       if (plan.timed) Timing.timed("merge", stamp = true)(merge) else merge
@@ -323,10 +317,14 @@ object CdcPipeline {
     * (service/transfer_service.go:328-354) as query supervision. Combined
     * with [[withBatchRetries]], transient failures recover in place and
     * poisoned-but-recoverable runs recover across restarts; a persistent
-    * failure still surfaces after the budget.
+    * failure still surfaces after the budget. A query that ran healthily
+    * for a minute earns its budget back: without that, sporadic terminal
+    * errors over weeks exhaust it and kill a healthy pipeline for good (the
+    * reference reconnects indefinitely).
     */
   def runSupervised(spark: SparkSession, table: LakeTable, cfg: Config,
       availableNow: Boolean = true): Unit = {
+    val restartResetMs = 60000L
     var restarts = 0
     while (true) {
       val startedAt = System.nanoTime()
@@ -337,10 +335,10 @@ object CdcPipeline {
       } catch {
         case scala.util.control.NonFatal(e)
             if restarts < cfg.maxRestarts ||
-              (System.nanoTime() - startedAt) / 1000000L >= cfg.restartResetMs =>
+              (System.nanoTime() - startedAt) / 1000000L >= restartResetMs =>
           // a healthy run longer than restartResetMs refunds the budget:
           // the counter guards against crash LOOPS, not lifetime crash COUNT
-          if ((System.nanoTime() - startedAt) / 1000000L >= cfg.restartResetMs)
+          if ((System.nanoTime() - startedAt) / 1000000L >= restartResetMs)
             restarts = 0
           restarts += 1
           System.err.println(s"[graft] streaming query died " +

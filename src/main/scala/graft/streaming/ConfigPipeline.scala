@@ -115,7 +115,6 @@ object ConfigPipeline {
   private def cdcConfig(c: GraftConfig): CdcPipeline.Config =
     CdcPipeline.Config(c.changelogDir, c.checkpointDir,
       maxFilesPerTrigger = c.maxFilesPerTrigger, triggerMs = c.triggerMs,
-      saltedDedup = c.saltedDedup,
       autoCompactRatio = c.autoCompactRatio,
       autoCompactMinRows = c.autoCompactMinRows,
       registry = registryOf(c),
@@ -124,19 +123,29 @@ object ConfigPipeline {
   /** Built routes as the batch loop's plan. A lake route merges its rule
     * output; a changefeed route writes (key, value) messages, or its `ops`
     * rows — with the total op order when they also fold into a state table.
+    * A changefeed out dir must hold `epoch=N` dirs only: one written by a
+    * flat-append layout would leave parquet mixed with partition dirs —
+    * unreadable by any partition-discovering reader — so the plan fails
+    * fast with a pointer instead of corrupting the feed.
     */
   private[streaming] def plan(routes: Seq[Built], c: GraftConfig): CdcPipeline.Plan =
     CdcPipeline.Plan(routes.map { b =>
       val r = b.conf
       if (r.target == "lake")
         CdcPipeline.Route(r.name, routeTransform(_, r), CdcPipeline.Lake(b.table, b.outRegistry))
-      else CdcPipeline.Route(r.name, { decoded =>
-        val routed = routeTransform(decoded, r)
-        if (r.ops.isEmpty)
-          ChangefeedOut.toMessages(routed.drop("_schema_id"), r.keyColumns, r.reserveRawData)
-        else if (b.stateTable != null) ExprTransform.runOrdered(routed, r.ops)
-        else ExprTransform.run(routed, r.ops)
-      }, CdcPipeline.Feed(r.outDir, b.stateTable, c.feedFoldEvery, c.feedRetainEpochs))
+      else {
+        require(!ChangelogGenerator.children(java.nio.file.Paths.get(r.outDir))
+          .exists(_.getFileName.toString.startsWith("part-")),
+          s"changefeed outDir ${r.outDir} holds flat pre-epoch " +
+            "output; move it aside or point the route at a fresh dir")
+        CdcPipeline.Route(r.name, { decoded =>
+          val routed = routeTransform(decoded, r)
+          if (r.ops.isEmpty)
+            ChangefeedOut.toMessages(routed.drop("_schema_id"), r.keyColumns, r.reserveRawData)
+          else if (b.stateTable != null) ExprTransform.runOrdered(routed, r.ops)
+          else ExprTransform.run(routed, r.ops)
+        }, CdcPipeline.Feed(r.outDir, b.stateTable, c.feedFoldEvery, c.feedRetainEpochs))
+      }
     }, wireFormat = c.wireFormat, tableStartVersion = c.tableStartVersion,
       withBefore = routes.exists(b => b.conf.target != "lake" && b.conf.reserveRawData))
 
@@ -155,21 +164,14 @@ object ConfigPipeline {
     // a RESET checkpoint against an existing folded feed restarts
     // batchIds at 0: epochs at/below the fold watermark would be
     // hidden by readFeed's pruning filter and then DELETED by the
-    // next fold's deferred cleanup — fail fast like the flat-layout
-    // guard below instead of silently losing new messages
+    // next fold's deferred cleanup — fail fast like the plan's flat-layout
+    // guard instead of silently losing new messages
     readFoldCommit(outDir).foreach(fc =>
       require(epoch > fc.watermark,
         s"route $route: epoch $epoch is at/below the feed's " +
           s"fold watermark ${fc.watermark} — the checkpoint was reset " +
           "against an existing feed; use a fresh out_dir, or clear " +
           "_fold.json + _folded after verifying the overlap"))
-    // A feed dir written by a flat-append layout would leave parquet mixed
-    // with partition dirs — unreadable by any partition-discovering reader —
-    // so fail fast with a pointer instead of corrupting the feed.
-    require(!ChangelogGenerator.children(java.nio.file.Paths.get(outDir))
-      .exists(_.getFileName.toString.startsWith("part-")),
-      s"changefeed outDir $outDir holds flat pre-epoch " +
-        "output; move it aside or point the route at a fresh dir")
     LakeTable.writeParquet(out.write.mode("overwrite"), s"$outDir/epoch=$epoch")
   }
 

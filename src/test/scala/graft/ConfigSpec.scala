@@ -9,6 +9,8 @@ import graft.rules.{ExprOp, ExprTransform}
 import graft.streaming.ConfigPipeline
 import org.apache.spark.sql.functions._
 
+import scala.jdk.CollectionConverters._
+
 /** Config-file-driven pipelines (the reference's app.yml UX) + runtime
   * expression transforms (the no-recompile Lua analog).
   */
@@ -118,6 +120,35 @@ class ConfigSpec extends SparkSpec {
     ConfigPipeline.applyBatch(routes2, wire, 0L, c2, "test-pipe") // replay
     assert(ConfigPipeline.readFeed(spark, s"$work/feed2").count() == n0,
       "replayed epoch appended duplicates")
+  }
+
+  test("a changefeed route whose out dir holds flat part files fails at start") {
+    val work = tmpDir("cfg-flat")
+    val log = s"$work/log"
+    ChangelogGenerator.write(spark,
+      ChangelogSpec(nEvents = 500, nConversations = 20, chunkSize = 250), log)
+    val feed = work.resolve("feed")
+    spark.range(1).selectExpr("'k' AS key", "'v' AS value").coalesce(1)
+      .write.parquet(feed.resolve("flat").toString)
+    val flat = java.nio.file.Files.list(feed.resolve("flat"))
+    try flat.iterator().asScala.filter(_.getFileName.toString.startsWith("part-"))
+      .foreach(p => java.nio.file.Files.move(p, feed.resolve(p.getFileName)))
+    finally flat.close()
+    val c = GraftConfig.parse(
+      s"""changelog_dir: $log
+         |checkpoint_dir: $work/cp
+         |routes:
+         |  - name: feed
+         |    target: changefeed
+         |    out_dir: $feed
+         |    key_columns: [conv_id, turn_idx]
+         |""".stripMargin)
+    val e = intercept[IllegalArgumentException](ConfigPipeline.runToCompletion(spark, c))
+    assert(e.getMessage.contains("flat pre-epoch output"), e.getMessage)
+    val children = java.nio.file.Files.list(feed)
+    try assert(!children.iterator().asScala.exists(_.getFileName.toString.startsWith("epoch=")),
+      "a batch was written before the layout check")
+    finally children.close()
   }
 
   test("changefeed feed retention: foldFeed is lossless and bounds the dir count") {
@@ -628,10 +659,12 @@ class ConfigSpec extends SparkSpec {
       "changelog_dir: /x\ncheckpoint_dir: /y\nroutes:\n  - name: r\n    target: lake\n"))
     // unknown keys fail the parse: a removed option, a misspelled route key
     val lake = "routes:\n  - name: r\n    table_dir: /x/t\n    key_columns: [k]\n"
-    val removed = intercept[IllegalArgumentException](GraftConfig.parse(
-      "changelog_dir: /x\ncheckpoint_dir: /y\nmerge_mode: cow\n" + lake))
-    assert(removed.getMessage.contains("merge_mode") &&
-      removed.getMessage.contains("max_files_per_trigger"), removed.getMessage)
+    Seq("merge_mode: cow", "salted_dedup: 4").foreach { line =>
+      val removed = intercept[IllegalArgumentException](GraftConfig.parse(
+        s"changelog_dir: /x\ncheckpoint_dir: /y\n$line\n" + lake))
+      assert(removed.getMessage.contains(line.takeWhile(_ != ':')) &&
+        removed.getMessage.contains("max_files_per_trigger"), removed.getMessage)
+    }
     val typo = intercept[IllegalArgumentException](GraftConfig.parse(
       "changelog_dir: /x\ncheckpoint_dir: /y\n" + lake + "    num_bucket: 8\n"))
     assert(typo.getMessage.contains("num_bucket") &&

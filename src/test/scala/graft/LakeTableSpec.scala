@@ -99,7 +99,7 @@ class LakeTableSpec extends SparkSpec {
       schema, Seq("k"), Seq("k"), 4)
     MergeInto.merge(t, batch((OpInsert, 5L, "a", "v5")), 3)
     // rewind the fence (the -position analog): epoch 2 becomes admissible
-    t.commitAtomic(m => m.copy(version = m.version + 1, lastEpoch = 1L, lastOffset = -1L))
+    t.commitAtomic(_.nextSegment("set-offset", epoch = 1L, offset = -1L))
     val r = MergeInto.merge(t, batch((OpInsert, 6L, "b", "v6")), 2)
     assert(!r.skipped)
     assert(state(t.snapshot()) == Map("a" -> "v5", "b" -> "v6"))
@@ -110,11 +110,11 @@ class LakeTableSpec extends SparkSpec {
     val t1 = LakeTable.create(spark, dir, schema, Seq("k"), Seq("k"), 4)
     val t2 = LakeTable.load(spark, dir) // a second "process": separate lock + cache
     val stale = t2.meta // both believe v1 is latest
-    t1.commitAtomic(m => m.copy(version = m.version + 1, lastEpoch = 0L))
+    t1.commitAtomic(_.nextSegment("set-offset", epoch = 0L))
     // t2 races the same version number; the hard-link create must fail it
     // (POSIX rename would have silently clobbered t1's commit — round-1 bug)
     intercept[IllegalStateException] {
-      t2.commitMeta(stale, stale.copy(version = stale.version + 1, lastEpoch = 99L))
+      t2.publish(stale, stale.nextSegment("set-offset", epoch = 99L))
     }
     assert(t2.refresh().lastEpoch == 0L, "winner's commit must survive")
   }
@@ -285,6 +285,52 @@ class LakeTableSpec extends SparkSpec {
     assert(!Files.exists(Paths.get(dir, "meta", f"v$cached%08d.json")))
     assert(reader.refresh() == writer.refresh())
     assert(state(reader.snapshot()) == Map("a" -> "a2"))
+  }
+
+  test("after every kind of commit the committing instance's view equals a " +
+    "cold load, and each version's view equals its time-travel read") {
+    import spark.implicits._
+    val dir = tmpDir("lt-fold").resolve("t").toString
+    val t = LakeTable.create(spark, dir, schema, Seq("k"), Seq("k"), 4)
+    val wide = StructType(schema.fields :+ StructField("w", StringType))
+    val seen = scala.collection.mutable.Map(1 -> t.meta)
+    def check(what: String): Unit = {
+      val cold = LakeTable.load(spark, dir).meta
+      assert(t.meta == cold, s"$what: committing view != cold load")
+      seen(t.meta.version) = t.meta
+      t.versions().foreach(v => assert(t.metaAt(v) == seen(v), s"$what: v$v"))
+    }
+    MergeInto.merge(t, batch((OpInsert, 1L, "a", "a1"), (OpInsert, 2L, "b", "b1")), 0)
+    check("merge")
+    // a batch announcing schema 1 part-way through evolves the table in flight
+    val evolving = Seq((OpUpdate, 3L, "a", "a2", null.asInstanceOf[String], 0), (OpInsert, 4L, "c", "c1", "w4", 1))
+      .toDF("_op", "_pos", "k", "v", "w", "_schema_id")
+      .withColumn("_event_ts", lit(null).cast("timestamp"))
+    MergeInto.merge(t, evolving, 1, registry = Map(0 -> schema, 1 -> wide), batchSchemaId = 1)
+    assert(t.meta.schemaId == 1 && t.meta.schemas.size == 2)
+    check("evolving merge")
+    MergeInto.merge(t, batch(), 2)
+    assert(t.meta.history.last.operation == "merge-empty")
+    check("empty merge")
+    MergeInto.compact(t)
+    assert(t.meta.history.last.operation.startsWith("compact:") &&
+      t.meta.files.forall(_.kind == "base"))
+    check("compact")
+    t.commitAtomic(_.nextSegment("set-offset", epoch = 1L, offset = 2L))
+    assert((t.meta.lastEpoch, t.meta.lastOffset) == (1L, 2L))
+    check("set-offset rewind")
+    // past the snapshot cadence, then a vacuum that re-anchors a plain tip
+    (2 until LakeTable.SnapshotEvery + 2).foreach { e =>
+      MergeInto.merge(t, batch((OpUpdate, 10L + e, "b", s"b$e")), e)
+      check(s"merge $e")
+    }
+    assert(t.meta.baseVersion > 1, "no snapshot segment was written")
+    t.vacuum(keepVersions = 1)
+    assert(t.meta.history.last.operation == "vacuum-snapshot" &&
+      t.meta.baseVersion == t.meta.version)
+    check("vacuum")
+    assert(state(t.snapshot()) == Map("a" -> "a2", "b" -> s"b${LakeTable.SnapshotEvery + 1}",
+      "c" -> "c1"))
   }
 
   private def segmentJson(t: LakeTable): Seq[String] = {

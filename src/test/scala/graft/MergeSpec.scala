@@ -198,13 +198,9 @@ class MergeSpec extends SparkSpec {
     }
     assert(!afterByPath.contains(shared.head._1), "the shared file of the bucket stayed")
 
-    // MOR on top of the rewrite, and a commit that drops one entry of a
-    // shared file fails loudly
+    // MOR on top of the rewrite
     MergeInto.merge(t, randomBatch(80), 4)
     assert(state(t) == oracle.toMap)
-    val partOfShared = t.refresh().files.groupBy(_.path).values.find(_.size > 1).get.head
-    intercept[IllegalArgumentException](t.commitAtomic(l => l.copy(
-      version = l.version + 1, files = l.files.filterNot(_ == partOfShared))))
   }
 
   test("a merge whose write job throws commits nothing; one that fails after " +
