@@ -187,8 +187,9 @@ object MergeInto {
     // have published meanwhile; schema registration + in-flight evolution
     // land in the SAME atomic commit as the data
     table.commitAtomic { latest =>
-      // the schemas this commit registers: the files' own if new, and the
-      // evolved one (the fold adds both to the table's map)
+      // the schemas this commit registers: the files' own and the evolved
+      // one, each unless the table already holds it (the fold adds them to
+      // the table's map)
       var registers = Map.empty[String, String]
       if (!latest.schemas.contains(sid.toString))
         registers += sid.toString -> fileSchema.json
@@ -197,7 +198,8 @@ object MergeInto {
         val target = registry.getOrElse(maxSid, throw new IllegalStateException(
           s"batch carries schema_id $maxSid but registry has no schema for it"))
         LakeTable.checkCompatible(latest.schema, target)
-        registers += maxSid.toString -> target.json
+        if (!latest.schemas.get(maxSid.toString).contains(target.json))
+          registers += maxSid.toString -> target.json
         schemaId = maxSid
       }
       latest.nextSegment(s"merge-mor:buckets=$touched:rows=$nDedup", epoch, maxPos,

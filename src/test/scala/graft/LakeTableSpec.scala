@@ -446,6 +446,28 @@ class LakeTableSpec extends SparkSpec {
     assert(t.refresh().schemas.size == 1 && t.metaAt(3).schemas == t.metaAt(1).schemas)
   }
 
+  test("a merge that evolves the table to a schema its files already " +
+    "registered stores no schema again") {
+    import org.json4s._
+    import spark.implicits._
+    val dir = tmpDir("lt-reg").resolve("t").toString
+    val t = LakeTable.create(spark, dir, schema, Seq("k"), Seq("k"), 4)
+    val wide = StructType(schema.fields :+ StructField("w", StringType))
+    def rows(sid: Int, pos: Long) = Seq((OpInsert, pos, s"k$pos", "v", "w", sid))
+      .toDF("_op", "_pos", "k", "v", "w", "_schema_id")
+      .withColumn("_event_ts", lit(null).cast("timestamp"))
+    val registry = Map(0 -> schema, 1 -> wide)
+    // files shaped as schema 1 while the rows still observe schema 0 ...
+    MergeInto.merge(t, rows(0, 1L), 0, registry = registry, batchSchemaId = 1)
+    assert(t.meta.schemaId == 0 && t.meta.schemas.size == 2)
+    assert((readJson(segmentFile(t, 2)) \ "schemas").children.size == 1)
+    // ... then the first schema-1 row evolves the table to it
+    MergeInto.merge(t, rows(1, 2L), 1, registry = registry, batchSchemaId = 1)
+    assert(t.meta.schemaId == 1 && t.meta.schema == wide)
+    assert(readJson(segmentFile(t, 3)) \ "schemas" == JObject())
+    assert(t.meta == LakeTable.load(spark, dir).meta)
+  }
+
   test("a table whose segments hold the per-bucket entries of earlier builds " +
     "loads, snapshots, tails and takes commits as before") {
     import org.json4s._
